@@ -66,26 +66,28 @@ def asof_join(
     on_sql = q(on)
     on_type = right.schema[on].dataType.simpleString()
     struct_sql = "struct({})".format(", ".join(q(c) for c in lcols))
-    l_tagged = left.selectExpr(
-        *[q(c) for c in by],
-        on_sql,
-        f"{l_side} AS __side",
-        f"CAST(NULL AS {on_type}) AS __r_on",
+    # typed NULLs of the other side's columns are cast from the
+    # DataType, not from a simpleString() type literal: a struct type
+    # string does not parse back when a field name holds a space or a
+    # colon (`my val` renders as struct<my val:...>)
+    l_tagged = left.select(
+        *[F.expr(q(c)) for c in by],
+        F.expr(on_sql),
+        F.expr(f"{l_side} AS __side"),
+        F.expr(f"CAST(NULL AS {on_type}) AS __r_on"),
         *[
-            f"CAST(NULL AS {right.schema[c].dataType.simpleString()}) AS `__r_{c}`"
+            F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}")
             for c in value_cols
         ],
-        f"{struct_sql} AS __l",
+        F.expr(f"{struct_sql} AS __l"),
     )
-    l_struct_type = l_tagged.schema["__l"].dataType.simpleString()
     r_tagged = right.selectExpr(
         *[q(c) for c in by],
         on_sql,
         f"{r_side} AS __side",
         f"{on_sql} AS __r_on",
         *[f"{q(c)} AS `__r_{c}`" for c in value_cols],
-        f"CAST(NULL AS {l_struct_type}) AS __l",
-    )
+    ).withColumn("__l", F.lit(None).cast(l_tagged.schema["__l"].dataType))
     unioned = l_tagged.unionByName(r_tagged)
     over = (
         "OVER (PARTITION BY {p} ORDER BY {o} ASC, __side ASC "

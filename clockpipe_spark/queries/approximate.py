@@ -77,7 +77,8 @@ def dedup_cluster_assign_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash-compares canonically row-sorted frames, and the global
     # sort's range-partitioner sampling re-executed the final
     # corpus-labels join a second time (phase-traced: sorted write
-    # 0.47-0.49 s vs 0.13-0.15 s unsorted, tools/trace_cluster_lsh.py)
+    # 0.47-0.49 s vs 0.13-0.15 s unsorted; PLANS.md, r15 cluster-LSH
+    # attribution)
     return labels.select(
         F.col("id").alias("doc_id"),
         F.col("lbl").alias("cluster_id"),

@@ -7,8 +7,7 @@ merge-on-read economics the reference's sink relies on
 (adapter/mod.rs:90-105): ClickHouse *inserts* are cheap appended parts,
 background merges compact them, and FINAL dedups at read. Mapped here:
 
-- ``merge_changes`` (default ``mode="auto"``) APPENDS a keep-last-
-  compacted delta file — cost O(batch), independent of state size. This
+- ``merge_changes`` APPENDS a keep-last-compacted delta file — cost O(batch), independent of state size. This
   is the hot path a 100 TB streaming ingest lives on.
 - every ``compact_every`` appended deltas (or on explicit ``compact()``)
   the store folds the delta log into the base, rewriting ONLY the
@@ -214,20 +213,13 @@ class BucketedReplicaStore:
         keys: Sequence[str],
         order_col: str = "seq",
         op_col: str = "op",
-        mode: str = "auto",
     ) -> int:
-        """Apply a change batch. Same merge semantics as
-        ReplicaStore.merge_changes (keep-last per PK, delete keeps a
-        version-competing tombstone); the bucket id is always recomputed
-        from the keys (never trusted from data), so bucket membership
-        survives schema evolution and re-reads.
-
-        mode="auto" (default): append a keep-last delta, then compact
-        when the delta log reaches ``compact_every``.
-        mode="append": append only, never compact.
-        mode="rewrite": fold this batch + any pending deltas straight
-        into the base (the pre-round-4 behavior).
-        """
+        """Apply a change batch: append a keep-last delta, then compact
+        when the delta log reaches ``compact_every``. Same merge
+        semantics as ReplicaStore.merge_changes (keep-last per PK, delete
+        keeps a version-competing tombstone); the bucket id is always
+        recomputed from the keys (never trusted from data), so bucket
+        membership survives schema evolution and re-reads."""
         changes = changes.withColumn("last_seq", F.col(order_col))
         data_cols = [c for c in changes.columns if c not in (order_col, op_col)]
         delta = (
@@ -236,10 +228,6 @@ class BucketedReplicaStore:
             .select(*data_cols, "__deleted")
             .withColumn("__bucket", self._bucket_expr(keys).cast("int"))
         )
-
-        if mode == "rewrite":
-            return self._compact(spark, keys, extra=delta)
-
         bucket_map, deltas, _ = self._parts()
         version = self.current_version() + 1
         delta_dir = os.path.join(self.root, f"d_{version:06d}")
@@ -252,15 +240,23 @@ class BucketedReplicaStore:
         )
         if not touched:
             # empty batch: appending a bucketless delta entry would make
-            # every subsequent auto merge re-enter compaction (which
+            # every subsequent merge re-enter compaction (which
             # skips empty-touched logs) and grow the log unboundedly
             shutil.rmtree(delta_dir, ignore_errors=True)
             return self.current_version()
         deltas = deltas + [{"path": delta_dir, "buckets": touched}]
         v = self._commit(bucket_map, deltas, keys)
-        if mode == "auto" and len(deltas) >= self.compact_every:
+        if len(deltas) >= self.compact_every:
             return self._compact(spark, keys)
         return v
+
+    def truncate(self, spark: SparkSession) -> int | None:
+        """K3 — TRUNCATE propagation: commit an empty manifest (no
+        buckets, no deltas), keeping the merge keys; the superseded
+        files stay readable through older manifests."""
+        if self.current_version() < 0:
+            return None
+        return self._commit({}, [], self._parts()[2])
 
     def compact(self, spark: SparkSession, keys: Sequence[str] | None = None) -> int:
         """Fold the pending delta log into the base, rewriting only the
@@ -270,32 +266,17 @@ class BucketedReplicaStore:
             return self.current_version()
         return self._compact(spark, keys or mkeys)
 
-    def _compact(
-        self,
-        spark: SparkSession,
-        keys: Sequence[str],
-        extra: DataFrame | None = None,
-    ) -> int:
+    def _compact(self, spark: SparkSession, keys: Sequence[str]) -> int:
         bucket_map, deltas, _ = self._parts()
         touched = sorted({int(b) for d in deltas for b in d["buckets"]})
-        if extra is not None:
-            extra_buckets = sorted(
-                r["__bucket"]
-                for r in extra.select("__bucket").distinct().collect()
-            )
-            touched = sorted(set(touched) | set(extra_buckets))
         if not touched:
             # nothing to rewrite, but an all-empty delta log must still be
-            # cleared or auto-mode merges re-enter compaction forever
+            # cleared or later merges re-enter compaction forever
             if deltas:
                 return self._commit(bucket_map, [], keys)
             return self.current_version()
 
         log = self._read_deltas(spark, deltas, None)
-        if extra is not None:
-            log = extra if log is None else log.unionByName(
-                extra, allowMissingColumns=True
-            )
         base = self._read_base(spark, bucket_map, touched)
         if base is not None:
             if "__bucket" not in base.columns:

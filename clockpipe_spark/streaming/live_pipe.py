@@ -7,7 +7,7 @@ the replication slot itself, advanced only AFTER every merge commits
 (T2's peek-then-advance at-least-once protocol, pipes/postgres.rs:
 487-499).  A crash between merge and advance replays the batch; the
 versioned keyed merge absorbs the duplicates, exactly like the
-parquet-changelog twin (``ParquetCdcPipe``).
+parquet-changelog twin (``SyncJob``).
 
 ``LivePostgresRoutedPipe`` is the real unit — N tables through ONE
 publication and ONE slot, frames decoded once and routed by relation
@@ -53,7 +53,6 @@ Documented parity limitation:
 from __future__ import annotations
 
 import os
-import time
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -63,6 +62,7 @@ from clockpipe_spark.cdc.pgoutput import decode_pgoutput
 from clockpipe_spark.config import PipeConfig
 from clockpipe_spark.sources.jdbc_adapter import JdbcPostgresSource, PgColumn
 from clockpipe_spark.streaming.replica import ReplicaStore
+from clockpipe_spark.sync_job import WriteFailedError, run_sync_loop
 
 # pseudo-route key for a peeked batch that decodes to zero writes
 # (B/C/O/R/Y only — e.g. empty transactions from other tables' churn on
@@ -253,100 +253,82 @@ class LivePostgresRoutedPipe:
                     "than this pipe) — refusing to advance past them"
                 )
 
-            by_table: dict[str, dict[str, int]] = {}
-            for t in self.tables:
-                oid = self.oids[t]
-                t_stats = [r for r in stats if r["relation_id"] == oid]
-                if not t_stats:
-                    continue
-                counters = {r["msg_type"]: r["n"] for r in t_stats}
-                by_table[t] = counters
-                # K5 live: wider frames => the table grew a column
-                widest = max(r["w"] for r in t_stats)
-                if widest and widest > len(self.columns[t]):
-                    self.columns[t] = self.source.list_columns(t)
-                mine = decoded.filter(F.col("relation_id") == oid)
-                w_maxes = [
-                    r["mx"] for r in t_stats if r["msg_type"] in "IUD"
-                ]
-                t_max = None
-                if counters.get("T"):  # K3: truncate wipes state inline
-                    t_max = max(
-                        r["mx"] for r in t_stats if r["msg_type"] == "T"
-                    )
-                    self.stores[t].truncate(self.spark)
-                    mine = mine.filter(
-                        (F.col("lsn") > t_max) & (F.col("msg_type") != "T")
-                    )
-                # merge only when a write frame SURVIVES the truncate
-                # cut — an all-pre-truncate batch would otherwise
-                # rewrite a full state version with zero changes
-                if w_maxes and (t_max is None or max(w_maxes) > t_max):
-                    writes = mine.filter(
-                        F.col("msg_type").isin("I", "U", "D")
-                    )
-                    typed = writes.select(
-                        F.col("lsn").alias("seq"),
-                        F.col("msg_type").alias("op"),
-                        *[
-                            _typed_cell(i, c)
-                            for i, c in enumerate(self.columns[t])
-                        ],
-                    )
-                    # split-tombstone for PK-changing UPDATEs (see the
-                    # module docstring's divergence note): the wire's
-                    # old tuple ('K' under REPLICA IDENTITY DEFAULT —
-                    # sent exactly when the identity key changed — or
-                    # 'O' under FULL, where the key must be compared)
-                    # becomes a DELETE of the OLD key at the same LSN.
-                    # Same-batch churn stays correct under keep-last:
-                    # the tombstone's key differs from its upsert's, and
-                    # any later re-insert of the old key carries a
-                    # higher LSN and wins.  Gated on the stats agg's
-                    # old-tuple width so batches without old tuples
-                    # (the common case) keep the single-projection plan.
-                    has_old = any(
-                        r["msg_type"] == "U" and r["ow"] for r in t_stats
-                    )
-                    if has_old:
-                        idx = {
-                            c.column_name: i
-                            for i, c in enumerate(self.columns[t])
-                        }
-                        key_moved = None
-                        for k in self.keys[t]:
-                            ne = ~F.get(
-                                "old_texts", F.lit(idx[k])
-                            ).eqNullSafe(
-                                F.get("cell_texts", F.lit(idx[k]))
-                            )
-                            key_moved = (
-                                ne if key_moved is None else key_moved | ne
-                            )
-                        tombstones = writes.filter(
-                            (F.col("msg_type") == "U")
-                            & (F.size("old_kinds") > 0)
-                            & key_moved
-                        ).select(
-                            F.col("lsn").alias("seq"),
-                            F.lit("D").alias("op"),
-                            *[
-                                _typed_cell(i, c, source="old_texts")
-                                for i, c in enumerate(self.columns[t])
-                            ],
-                        )
-                        typed = typed.unionByName(tombstones)
-                    self.stores[t].merge_changes(
-                        self.spark, typed, self.keys[t]
-                    )
+            routed = {
+                t: [r for r in stats if r["relation_id"] == self.oids[t]]
+                for t in self.tables
+            }
+            routed = {t: rs for t, rs in routed.items() if rs}
+            try:
+                for t, t_stats in routed.items():
+                    self._merge_routed(t, t_stats, decoded)
+            except Exception as ex:
+                raise WriteFailedError(str(ex)) from ex
             # one advance, after every route committed (T2); the target
             # is the max LSN over ALL frames — the batch's trailing
             # COMMIT — because advancing to any LSN before a commit
             # record replays that whole transaction
             self.source.advance_slot(self.slot, advance_to)
-            return by_table
+            return {
+                t: {r["msg_type"]: r["n"] for r in rs}
+                for t, rs in routed.items()
+            }
         finally:
             decoded.unpersist()
+
+    def _merge_routed(self, t: str, t_stats: list, decoded: DataFrame) -> None:
+        """Apply one table's share of a decoded batch: truncate, then the
+        typed keep-last merge (the write phase of ``sync_iteration``)."""
+        # K5 live: wider frames => the table grew a column
+        widest = max(r["w"] for r in t_stats)
+        if widest and widest > len(self.columns[t]):
+            self.columns[t] = self.source.list_columns(t)
+        mine = decoded.filter(F.col("relation_id") == self.oids[t])
+        w_maxes = [r["mx"] for r in t_stats if r["msg_type"] in "IUD"]
+        t_max = max((r["mx"] for r in t_stats if r["msg_type"] == "T"), default=None)
+        if t_max is not None:  # K3: truncate wipes state inline
+            self.stores[t].truncate(self.spark)
+            mine = mine.filter((F.col("lsn") > t_max) & (F.col("msg_type") != "T"))
+        # merge only when a write frame SURVIVES the truncate cut — an
+        # all-pre-truncate batch would otherwise rewrite a full state
+        # version with zero changes
+        if not w_maxes or (t_max is not None and max(w_maxes) <= t_max):
+            return
+        writes = mine.filter(F.col("msg_type").isin("I", "U", "D"))
+        typed = writes.select(
+            F.col("lsn").alias("seq"),
+            F.col("msg_type").alias("op"),
+            *[_typed_cell(i, c) for i, c in enumerate(self.columns[t])],
+        )
+        # split-tombstone for PK-changing UPDATEs (see the module
+        # docstring's divergence note): the wire's old tuple ('K' under
+        # REPLICA IDENTITY DEFAULT — sent exactly when the identity key
+        # changed — or 'O' under FULL, where the key must be compared)
+        # becomes a DELETE of the OLD key at the same LSN.  Same-batch
+        # churn stays correct under keep-last: the tombstone's key
+        # differs from its upsert's, and any later re-insert of the old
+        # key carries a higher LSN and wins.  Gated on the stats agg's
+        # old-tuple width so batches without old tuples (the common
+        # case) keep the single-projection plan.
+        if any(r["msg_type"] == "U" and r["ow"] for r in t_stats):
+            idx = {c.column_name: i for i, c in enumerate(self.columns[t])}
+            key_moved = None
+            for k in self.keys[t]:
+                ne = ~F.get("old_texts", F.lit(idx[k])).eqNullSafe(
+                    F.get("cell_texts", F.lit(idx[k]))
+                )
+                key_moved = ne if key_moved is None else key_moved | ne
+            tombstones = writes.filter(
+                (F.col("msg_type") == "U") & (F.size("old_kinds") > 0) & key_moved
+            ).select(
+                F.col("lsn").alias("seq"),
+                F.lit("D").alias("op"),
+                *[
+                    _typed_cell(i, c, source="old_texts")
+                    for i, c in enumerate(self.columns[t])
+                ],
+            )
+            typed = typed.unionByName(tombstones)
+        self.stores[t].merge_changes(self.spark, typed, self.keys[t])
 
     def sync_loop(
         self,
@@ -354,32 +336,12 @@ class LivePostgresRoutedPipe:
         sleep: bool = False,
         daemon: bool = False,
     ) -> int:
-        """Drain (default) or poll forever (``daemon=True``, the
-        reference's run shape): an empty peek sleeps
-        ``sleep_millis_when_peek_is_empty`` and keeps polling
-        (pipes/postgres.rs:284-291); each productive iteration paces by
-        ``sleep_millis_after_sync_iteration`` (:513).  In daemon mode
-        ``max_iterations`` bounds POLLS (empty ones included)."""
-        it = 0
-        polls = 0
-        while max_iterations is None or (
-            polls if daemon else it
-        ) < max_iterations:
-            polls += 1
-            if not self.sync_iteration():
-                if not daemon:
-                    break
-                if sleep:
-                    time.sleep(
-                        self.config.sleep_millis_when_peek_is_empty / 1000
-                    )
-                continue
-            it += 1
-            if sleep:
-                time.sleep(
-                    self.config.sleep_millis_after_sync_iteration / 1000
-                )
-        return it
+        """Drain (default) or poll forever (``daemon=True``) through
+        ``run_sync_loop``: a failed iteration is retried without
+        advancing the slot, with the reference's backoff classes."""
+        return run_sync_loop(
+            self.sync_iteration, self.config, max_iterations, sleep, daemon=daemon
+        )
 
     def replica(self, table: str) -> DataFrame | None:
         return self.stores[table].read(self.spark)

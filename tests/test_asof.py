@@ -36,6 +36,27 @@ def test_asof_join_semantics(spark):
     assert out == {1: None, 2: 50.0, 3: 50.0, 4: 99.0, 5: None}
 
 
+def test_asof_join_awkward_column_names(spark):
+    """A space in a left column name and a colon in a right value
+    column name: both sides' typed NULL columns must still build."""
+    left = spark.createDataFrame(
+        [(1, 1, _ts(0)), (2, 1, _ts(7))],
+        "`my val` long, user_id long, ts timestamp",
+    )
+    right = spark.createDataFrame(
+        [(1, _ts(5), 50.0)], "user_id long, ts timestamp, `px:usd` double"
+    )
+    for direction, want in (
+        ("backward", {1: None, 2: 50.0}),
+        ("forward", {1: 50.0, 2: None}),
+    ):
+        out = asof_join(
+            left, right, by=["user_id"], on="ts", value_cols=["px:usd"], direction=direction
+        )
+        assert out.columns == ["my val", "user_id", "ts", "px:usd_asof"]
+        assert {r["my val"]: r["px:usd_asof"] for r in out.collect()} == want, direction
+
+
 def test_asof_join_forward(spark):
     left = spark.createDataFrame(
         [

@@ -1,6 +1,6 @@
 """Bucketed replica store: merge correctness == flat store through both
-the merge-on-read (append + compaction) and rewrite paths, and
-compaction rewrites only touched buckets."""
+the merge-on-read append path and compaction, and compaction rewrites
+only touched buckets."""
 
 from __future__ import annotations
 
@@ -36,28 +36,30 @@ def test_bucketed_matches_final_view(spark, sf_dir, tmp_path):
         for r in replica_state(clog, ["user_id"]).collect()
     }
     batches = [(0, 300), (300, 700), (700, 10_000_000)]
-    for mode, compact_every in (("rewrite", 8), ("auto", 2), ("append", 8)):
+    # compact_every=2 compacts after the second batch; 8 reads all three
+    # batches merge-on-read from the delta log
+    for compact_every in (2, 8):
         store = BucketedReplicaStore(
-            str(tmp_path / f"b_{mode}"), n_buckets=8, compact_every=compact_every
+            str(tmp_path / f"b_{compact_every}"), n_buckets=8, compact_every=compact_every
         )
         for lo, hi in batches:
             store.merge_changes(
                 spark,
                 clog.filter((F.col("seq") >= lo) & (F.col("seq") < hi)),
                 ["user_id"],
-                mode=mode,
             )
-        assert _final_view(store, spark) == expected, mode
+        assert _final_view(store, spark) == expected, compact_every
         # explicit compaction folds deltas without changing the view
         store.compact(spark)
         assert store.read_manifest().get(_DELTAS, []) == []
-        assert _final_view(store, spark) == expected, f"{mode} post-compact"
+        assert _final_view(store, spark) == expected, f"{compact_every} post-compact"
 
 
 def test_append_leaves_base_untouched(spark, tmp_path):
     store = BucketedReplicaStore(str(tmp_path / "b1"), n_buckets=8, compact_every=100)
     seed = _clog(spark, [(i, "I", i, float(i)) for i in range(64)])
-    store.merge_changes(spark, seed, ["user_id"], mode="rewrite")
+    store.merge_changes(spark, seed, ["user_id"])
+    store.compact(spark)
     m1 = store.read_manifest()
     # MOR append: base bucket paths unchanged, one delta recorded
     store.merge_changes(spark, _clog(spark, [(100, "U", 7, 700.0)]), ["user_id"])
@@ -72,7 +74,8 @@ def test_append_leaves_base_untouched(spark, tmp_path):
 def test_compaction_rewrites_only_touched_buckets(spark, tmp_path):
     store = BucketedReplicaStore(str(tmp_path / "b2"), n_buckets=8, compact_every=100)
     seed = _clog(spark, [(i, "I", i, float(i)) for i in range(64)])
-    store.merge_changes(spark, seed, ["user_id"], mode="rewrite")
+    store.merge_changes(spark, seed, ["user_id"])
+    store.compact(spark)
     m1 = store.read_manifest()
     # update ONE key -> compaction must change exactly one bucket path
     store.merge_changes(spark, _clog(spark, [(100, "U", 7, 700.0)]), ["user_id"])
@@ -101,7 +104,8 @@ def test_rewrite_fraction_scales_with_bucket_count(spark, tmp_path):
             str(tmp_path / f"sw_{n}"), n_buckets=n, compact_every=100
         )
         seed = _clog(spark, [(i, "I", i * 7, float(i)) for i in range(32)])
-        store.merge_changes(spark, seed, ["user_id"], mode="rewrite")
+        store.merge_changes(spark, seed, ["user_id"])
+        store.compact(spark)
         m1 = store.read_manifest()
         store.merge_changes(spark, _clog(spark, churn), ["user_id"])
         store.compact(spark)
@@ -133,26 +137,26 @@ def test_auto_compaction_threshold(spark, tmp_path):
 
 
 def test_bucketed_delete_and_replay(spark, tmp_path):
-    for mode in ("rewrite", "append"):
+    # fold each batch into the base, or keep every batch in the delta log
+    for fold in (True, False):
         store = BucketedReplicaStore(
-            str(tmp_path / f"b4_{mode}"), n_buckets=4, compact_every=100
+            str(tmp_path / f"b4_{fold}"), n_buckets=4, compact_every=100
         )
-        store.merge_changes(
-            spark, _clog(spark, [(1, "I", 1, 1.0), (2, "I", 2, 2.0)]),
-            ["user_id"], mode=mode,
-        )
-        store.merge_changes(
-            spark, _clog(spark, [(3, "D", 1, 0.0)]), ["user_id"], mode=mode
-        )
-        assert {r["user_id"] for r in store.read(spark).collect()} == {2}, mode
+
+        def merge(rows):
+            store.merge_changes(spark, _clog(spark, rows), ["user_id"])
+            if fold:
+                store.compact(spark)
+
+        merge([(1, "I", 1, 1.0), (2, "I", 2, 2.0)])
+        merge([(3, "D", 1, 0.0)])
+        assert {r["user_id"] for r in store.read(spark).collect()} == {2}, fold
         # replay an OLD pre-delete insert: tombstone must win
-        store.merge_changes(
-            spark, _clog(spark, [(1, "I", 1, 1.0)]), ["user_id"], mode=mode
-        )
-        assert {r["user_id"] for r in store.read(spark).collect()} == {2}, mode
+        merge([(1, "I", 1, 1.0)])
+        assert {r["user_id"] for r in store.read(spark).collect()} == {2}, fold
         # and still after folding everything into the base
         store.compact(spark)
-        assert {r["user_id"] for r in store.read(spark).collect()} == {2}, mode
+        assert {r["user_id"] for r in store.read(spark).collect()} == {2}, fold
 
 
 def test_snapshot_then_mor_appends(spark, tmp_path):
@@ -179,9 +183,9 @@ def test_schema_evolution_through_deltas(spark, tmp_path):
     into the rewritten buckets."""
     store = BucketedReplicaStore(str(tmp_path / "b6"), n_buckets=4, compact_every=100)
     store.merge_changes(
-        spark, _clog(spark, [(1, "I", 1, 1.0), (2, "I", 2, 2.0)]),
-        ["user_id"], mode="rewrite",
+        spark, _clog(spark, [(1, "I", 1, 1.0), (2, "I", 2, 2.0)]), ["user_id"]
     )
+    store.compact(spark)
     widened = spark.createDataFrame(
         [(3, "U", 1, 10.0, "eu")],
         "seq long, op string, user_id long, value double, region string",
@@ -201,11 +205,12 @@ def test_empty_batches_do_not_grow_delta_log(spark, tmp_path):
     trap auto mode in a compact-every-merge loop."""
     store = BucketedReplicaStore(str(tmp_path / "b_empty"), n_buckets=8, compact_every=2)
     seed = _clog(spark, [(i, "I", i, float(i)) for i in range(16)])
-    store.merge_changes(spark, seed, ["user_id"], mode="rewrite")
+    store.merge_changes(spark, seed, ["user_id"])
+    store.compact(spark)
     expected = _final_view(store, spark)
     empty = _clog(spark, []).limit(0)
     for _ in range(5):  # well past compact_every
-        store.merge_changes(spark, empty, ["user_id"], mode="auto")
+        store.merge_changes(spark, empty, ["user_id"])
     assert store.read_manifest().get(_DELTAS, []) == []
     assert _final_view(store, spark) == expected
     # a real batch afterwards still lands

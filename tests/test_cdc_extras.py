@@ -12,7 +12,6 @@ from clockpipe_spark.cdc.mongo_schema import (
 )
 from clockpipe_spark.cdc.ops import fill_unchanged_toast
 from clockpipe_spark.config import PipeConfig
-from clockpipe_spark.streaming.pipeline import ParquetCdcPipe
 
 
 def test_toast_backfill(spark):
@@ -89,18 +88,16 @@ def truncate_events(spark, tmp_path):
     return d
 
 
-def test_truncate_propagation(spark, truncate_events, tmp_path, monkeypatch):
-    # map 'truncate' -> 'T' by monkeypatching the changelog op mapping at
-    # the pipe level: easiest is to pre-shape our own changelog
-    import clockpipe_spark.streaming.pipeline as pl
-    from pyspark.sql import functions as F
+def test_truncate_propagation(spark, truncate_events, tmp_path):
+    """K3 through SyncJob on a flat and on a bucketed store: a TRUNCATE
+    wipes the table and only rows after it survive, whether it lands
+    after committed state (peek cap 2: batches 1 | 2-3 | 4-5) or
+    mid-batch behind same-batch rows (peek cap 10: one batch)."""
+    from clockpipe_spark.config import SourceTable, TableOptions
+    from clockpipe_spark.sync_job import SyncJob
 
-    pipe = ParquetCdcPipe(
-        spark, truncate_events, str(tmp_path / "t"), PipeConfig(peek_changes_limit=10)
-    )
-
-    def changelog(self=pipe):
-        ev = spark.read.parquet(truncate_events)
+    def changelog(s):
+        ev = s.read.parquet(truncate_events)
         return ev.select(
             F.col("event_id").alias("seq"),
             F.when(F.col("event_type") == "truncate", "T")
@@ -114,11 +111,21 @@ def test_truncate_propagation(spark, truncate_events, tmp_path, monkeypatch):
             "props",
         )
 
-    pipe.changelog = changelog
-    pipe.run_pipe()
-    got = {r["user_id"]: r["value"] for r in pipe.store.read(spark).collect()}
-    # rows 1 and 2 wiped by the truncate at seq 3; only user 3 survives
-    assert got == {3: 35.0}
+    for buckets in (None, 4):
+        for cap in (2, 10):
+            table = SourceTable("t0", table_options=TableOptions(sink_buckets=buckets))
+            job = SyncJob(
+                spark,
+                PipeConfig(tables=[table], peek_changes_limit=cap),
+                str(tmp_path),
+                str(tmp_path / f"t_{buckets}_{cap}"),
+                changelog_fn=changelog,
+            )
+            job.sync_loop()
+            rows = job.store_for("t0").read(spark).collect()
+            got = {r["user_id"]: r["value"] for r in rows}
+            # rows 1 and 2 wiped by the truncate at seq 3; only user 3 survives
+            assert got == {3: 35.0}, (buckets, cap)
 
 
 def test_schema_evolution_new_column(spark, tmp_path):

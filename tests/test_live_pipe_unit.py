@@ -222,8 +222,8 @@ def test_daemon_mode_polls_through_empty_peeks(spark, tmp_path, monkeypatch):
     [empty, after-iteration, empty, empty]."""
     import types
 
+    from clockpipe_spark import sync_job
     from clockpipe_spark.config import PipeConfig
-    from clockpipe_spark.streaming import live_pipe as lp
 
     write_batch = [
         ("0/10", "7", _hex(encode_begin())),
@@ -237,15 +237,49 @@ def test_daemon_mode_polls_through_empty_peeks(spark, tmp_path, monkeypatch):
         sleep_millis_after_sync_iteration=1_000,
     )
     slept: list[float] = []
-    # patch live_pipe's `time` reference only — a global time.sleep
+    # patch the run loop's `time` reference only — a global time.sleep
     # patch also catches Spark/py4j internal polling (test_sync_job
     # lesson)
     monkeypatch.setattr(
-        lp, "time", types.SimpleNamespace(sleep=slept.append)
+        sync_job, "time", types.SimpleNamespace(sleep=slept.append)
     )
     done = pipe.sync_loop(max_iterations=4, sleep=True, daemon=True)
     assert done == 1
     assert slept == [17.0, 1.0, 17.0, 17.0]
+
+
+def test_failed_iteration_is_retried_without_advancing(spark, tmp_path):
+    """T3 (pipes/postgres.rs:433-452): a merge that fails once is
+    retried by sync_loop; the failed attempt never advances the slot,
+    so the retry re-peeks the same frames (the seam serves them twice,
+    as a slot that was not advanced does) and the slot advances once."""
+    write_batch = [
+        ("0/10", "7", _hex(encode_begin())),
+        ("0/20", "7", _hex(encode_insert(500, [("t", "2", None), ("t", "b", None)]))),
+        ("0/30", "7", _hex(encode_commit())),
+    ]
+    pipe, db = _pipe(spark, tmp_path, [write_batch, write_batch, []])
+    pipe.first_sync()
+
+    def advances():
+        return [d for d in db.ddl if "pg_replication_slot_advance" in d]
+
+    store = pipe.stores["t1"]
+    real_merge = store.merge_changes
+    advanced_at_merge: list[int] = []
+
+    def flaky_merge(*args, **kwargs):
+        advanced_at_merge.append(len(advances()))
+        if len(advanced_at_merge) == 1:
+            raise RuntimeError("injected merge failure")
+        return real_merge(*args, **kwargs)
+
+    store.merge_changes = flaky_merge
+    assert pipe.sync_loop() == 1
+    assert advanced_at_merge == [0, 0]  # no advance between the attempts
+    assert advances() == ["SELECT pg_replication_slot_advance('slot', '0/30')"]
+    rows = sorted((r["id"], r["v"]) for r in pipe.replica("t1").collect())
+    assert rows == [(1, "a"), (2, "b")]
 
 
 def _apply_model(snapshot, ops):

@@ -205,7 +205,7 @@ def test_live_peek_cap_and_advance_offset_discipline(pg):
     65,536 cap has the same property on txn boundaries), and advancing
     the slot to a commit LSN consumes exactly the transactions at or
     before it — the peek-then-advance cursor discipline the pipe
-    replays (streaming/pipeline.py:55-70)."""
+    replays (SyncJob.sync_iteration)."""
     pg.sql("CREATE TABLE live_adv (id int PRIMARY KEY)")
     pg.sql("CREATE PUBLICATION live_pub6 FOR TABLE live_adv")
     pg.rows(

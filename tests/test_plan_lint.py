@@ -1,25 +1,28 @@
-"""Lint the committed physical-plan dumps for scale red flags.
+"""Lint the registry's physical plans for scale red flags.
 
-plans/*.txt regenerates via tools/dump_plans.py; this test mechanically
-screens whatever is committed (CartesianProduct anywhere; unexplained
-BroadcastNestedLoopJoin outside the 1-row-aggregate and allowlisted
-bounded-broadcast shapes).  A plan regression that would not survive a
-100x scale-up fails here instead of waiting for a human audit.
+The test dumps every registry query's plan with tools/dump_plans.py's
+loop and mechanically screens the dump (CartesianProduct anywhere;
+unexplained BroadcastNestedLoopJoin outside the 1-row-aggregate and
+allowlisted bounded-broadcast shapes).  A plan regression that would
+not survive a 100x scale-up fails here instead of waiting for a human
+audit.
 """
 
 from __future__ import annotations
 
-import os
 import sys
 
 sys.path.insert(0, "/root/repo")
 sys.path.insert(0, "/root/repo/tools")
 
+from dump_plans import DEFAULT_SF_DIR, dump_plans
 from lint_plans import lint
 
 
-def test_committed_plans_pass_lint(capsys):
-    rc = lint(os.path.join("/root/repo", "plans"))
+def test_committed_plans_pass_lint(spark, tmp_path, capsys):
+    dump_plans(spark, DEFAULT_SF_DIR, str(tmp_path))
+    capsys.readouterr()
+    rc = lint(str(tmp_path))
     out = capsys.readouterr().out
     assert rc == 0, f"plan lint failures:\n{out}"
 

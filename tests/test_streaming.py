@@ -1,4 +1,4 @@
-"""Streaming pipeline semantics: batch/stream equivalence, cursor
+"""SyncJob change-loop semantics: batch/stream equivalence, cursor
 protocol (peek-then-advance), replay idempotence."""
 
 from __future__ import annotations
@@ -11,10 +11,10 @@ from pyspark.sql import functions as F
 
 from clockpipe_spark.cdc.changelog import changelog_from_events
 from clockpipe_spark.cdc.ops import replica_state
-from clockpipe_spark.config import PipeConfig
+from clockpipe_spark.config import PipeConfig, SourceTable, TableOptions
 from clockpipe_spark.queries.streamlike import stream_tumbling_hourly
-from clockpipe_spark.streaming.pipeline import ParquetCdcPipe, run_cdc_stream
 from clockpipe_spark.streaming.windows import tumbling_counts
+from clockpipe_spark.sync_job import SyncJob
 
 
 @pytest.fixture
@@ -28,6 +28,9 @@ def events_dir(spark, sf_dir, tmp_path):
     return d
 
 
+TABLES = ("t0", "t1", "t2", "t3")
+
+
 def _expected_replica(spark, events_dir):
     clog = changelog_from_events(spark.read.parquet(events_dir))
     return {
@@ -36,93 +39,100 @@ def _expected_replica(spark, events_dir):
     }
 
 
+def _job(spark, events_dir, root, config=None):
+    return SyncJob(
+        spark, config or PipeConfig(), events_dir, root,
+        changelog_fn=lambda s: changelog_from_events(s.read.parquet(events_dir)),
+    )
+
+
+def _replica(spark, job):
+    """user_id -> (last_seq, value) over every routed table (a user_id
+    routes to exactly one table)."""
+    got = {}
+    for tbl in TABLES:
+        got.update(
+            (r["user_id"], (r["last_seq"], round(r["value"], 6)))
+            for r in job.store_for(tbl).read(spark).collect()
+        )
+    return got
+
+
 def test_batch_pipe_matches_replica_state(spark, events_dir, tmp_path):
     """Draining the pipe in capped iterations must land on the same final
     state as the one-shot batch dedup-on-read view."""
-    pipe = ParquetCdcPipe(
-        spark,
-        events_dir,
-        str(tmp_path / "target"),
-        PipeConfig(peek_changes_limit=300),  # force multiple iterations
+    # peek cap 300 forces multiple iterations
+    job = _job(
+        spark, events_dir, str(tmp_path / "target"), PipeConfig(peek_changes_limit=300)
     )
-    iterations = pipe.run_pipe()
-    assert iterations >= 4  # 1000 events / 300
-    got = {
-        r["user_id"]: (r["last_seq"], round(r["value"], 6))
-        for r in pipe.store.read(spark).collect()
-    }
-    assert got == _expected_replica(spark, events_dir)
+    assert job.sync_loop() >= 4  # 1000 events / 300
+    assert _replica(spark, job) == _expected_replica(spark, events_dir)
 
 
-def test_pipe_cursor_advances_after_write(spark, events_dir, tmp_path):
-    pipe = ParquetCdcPipe(
-        spark, events_dir, str(tmp_path / "t2"), PipeConfig(peek_changes_limit=100)
-    )
-    pipe.initialize()
-    assert pipe.read_cursor() == -1
-    pipe.sync_iteration()
-    c1 = pipe.read_cursor()
-    assert c1 >= 0
-    pipe.sync_iteration()
-    assert pipe.read_cursor() > c1
+def test_pipe_cursor_advances_after_write(spark, events_dir, tmp_path, monkeypatch):
+    """T2: every merge of an iteration sees the PREVIOUS cursor; the
+    cursor moves to the batch's last seq only after all merges."""
+    from clockpipe_spark.streaming.replica import ReplicaStore
+
+    job = _job(spark, events_dir, str(tmp_path / "t2"), PipeConfig(peek_changes_limit=100))
+    seen: list[int] = []
+    real_merge = ReplicaStore.merge_changes
+
+    def merge(store, *args, **kwargs):
+        seen.append(job.read_cursor())
+        return real_merge(store, *args, **kwargs)
+
+    monkeypatch.setattr(ReplicaStore, "merge_changes", merge)
+    assert job.read_cursor() == -1
+    job.sync_iteration()
+    c1 = job.read_cursor()
+    assert c1 >= 0 and seen and set(seen) == {-1}
+    seen.clear()
+    job.sync_iteration()
+    assert job.read_cursor() > c1 and seen and set(seen) == {c1}
 
 
 def test_pipe_replay_is_idempotent(spark, events_dir, tmp_path):
     """Crash-between-write-and-advance (T2): re-applying the same batch
     must not change the state (keyed merge absorbs duplicates)."""
-    pipe = ParquetCdcPipe(
-        spark, events_dir, str(tmp_path / "t3"), PipeConfig(peek_changes_limit=500)
-    )
-    pipe.run_pipe()
-    before = sorted(
-        (r["user_id"], r["last_seq"]) for r in pipe.store.read(spark).collect()
-    )
+    job = _job(spark, events_dir, str(tmp_path / "t3"), PipeConfig(peek_changes_limit=500))
+    job.sync_loop()
+    before = _replica(spark, job)
     # simulate the crash: rewind the cursor and replay the last batch
-    pipe.advance_cursor(400)
-    pipe.sync_iteration()
-    after = sorted(
-        (r["user_id"], r["last_seq"]) for r in pipe.store.read(spark).collect()
-    )
-    assert before == after
+    job.advance_cursor(400)
+    assert job.sync_iteration()
+    assert _replica(spark, job) == before
 
 
 def test_streaming_pipe_matches_batch(spark, events_dir, tmp_path):
-    """foreachBatch embodiment lands on the identical replica."""
-    q = run_cdc_stream(
-        spark, events_dir, str(tmp_path / "t4"), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    from clockpipe_spark.streaming.replica import ReplicaStore
-
-    store = ReplicaStore(str(tmp_path / "t4" / "replica"))
-    got = {
-        r["user_id"]: (r["last_seq"], round(r["value"], 6))
-        for r in store.read(spark).collect()
-    }
-    assert got == _expected_replica(spark, events_dir)
+    """The foreachBatch form lands on the replica the cursor loop does."""
+    streamed = _job(spark, events_dir, str(tmp_path / "t4"))
+    streamed.run_stream(events_dir, str(tmp_path / "ckpt")).awaitTermination(120)
+    batch = _job(spark, events_dir, str(tmp_path / "t4b"))
+    batch.sync_loop()
+    assert _replica(spark, streamed) == _replica(spark, batch)
 
 
 def test_routed_streaming_matches_per_table_views(spark, events_dir, tmp_path):
-    """The routed foreachBatch embodiment lands each table's replica on
-    its per-table FINAL view — streaming twin of the SyncJob test."""
-    from clockpipe_spark.streaming.pipeline import run_routed_cdc_stream
-    from clockpipe_spark.streaming.replica import ReplicaStore
+    """run_stream lands each table's replica on its per-table FINAL
+    view, with one table in a bucketed store."""
+    from clockpipe_spark.streaming.bucketed_replica import BucketedReplicaStore
 
-    q = run_routed_cdc_stream(
-        spark, events_dir, str(tmp_path / "routed"), str(tmp_path / "rckpt")
-    )
-    q.awaitTermination(180)
+    bucketed = SourceTable("t2", table_options=TableOptions(sink_buckets=4))
+    job = _job(spark, events_dir, str(tmp_path / "routed"), PipeConfig(tables=[bucketed]))
+    job.run_stream(events_dir, str(tmp_path / "rckpt")).awaitTermination(180)
+    assert isinstance(job.store_for("t2"), BucketedReplicaStore)
     clog = changelog_from_events(spark.read.parquet(events_dir))
-    for tbl in ("t0", "t1", "t2", "t3"):
+    for tbl in TABLES:
         expected = {
             r["user_id"]: r["seq"]
             for r in replica_state(
                 clog.filter(clog["tbl"] == tbl), ["user_id"]
             ).collect()
         }
-        store = ReplicaStore(str(tmp_path / "routed" / tbl))
         got = {
-            r["user_id"]: r["last_seq"] for r in store.read(spark).collect()
+            r["user_id"]: r["last_seq"]
+            for r in job.store_for(tbl).read(spark).collect()
         }
         assert got == expected, tbl
 

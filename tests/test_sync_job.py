@@ -31,9 +31,32 @@ CONFIG_JSON = json.dumps(
 def test_config_from_json_reference_fields():
     cfg = PipeConfig.from_json(CONFIG_JSON)
     assert cfg.peek_changes_limit == 400
-    assert cfg.copy_batch_size == 100_000  # reference default kept
     assert cfg.tables[0].mask_columns == ["c_acctbal"]
     assert cfg.tables[2].skip_copy is True
+
+
+def test_config_from_json_parses_every_backoff_class():
+    """All four cadence knobs of the reference's source config load —
+    the when_peek_is_empty and when_write_failed backoffs included."""
+    cfg = PipeConfig.from_json(
+        json.dumps(
+            {
+                "source": {
+                    "sleep_millis_after_sync_iteration": 7,
+                    "sleep_millis_when_peek_failed": 11,
+                    "sleep_millis_when_peek_is_empty": 17,
+                    "sleep_millis_when_write_failed": 13,
+                    "copy_batch_size": 5,  # reference-only key: ignored
+                }
+            }
+        )
+    )
+    assert (
+        cfg.sleep_millis_after_sync_iteration,
+        cfg.sleep_millis_when_peek_failed,
+        cfg.sleep_millis_when_peek_is_empty,
+        cfg.sleep_millis_when_write_failed,
+    ) == (7, 11, 17, 13)
 
 
 def test_sync_job_end_to_end(spark, sf_dir, tmp_path):
@@ -98,7 +121,7 @@ def test_table_options_inheritance():
     assert cfg.options_for(cfg.tables[0]).sink_buckets == 8
     # table-specific options win (docs/clickhouse/README.md)
     opts_b = cfg.options_for(cfg.tables[1])
-    assert opts_b.sink_buckets == 32 and opts_b.granularity == 4096
+    assert opts_b.sink_buckets == 32
     # always a copy — caller mutation must not alias per-table state
     opts_b.sink_buckets = 99
     assert cfg.options_for(cfg.tables[1]).sink_buckets == 32
@@ -252,3 +275,23 @@ def test_cli_run(spark, sf_dir, tmp_path, capsys):
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["iterations"] == 1 and out["copied"]["customer"] > 0
+
+
+def test_bucketed_snapshot_without_merge_keys_raises(spark, tmp_path):
+    """A bucketed snapshot hashes by the merge keys, so one that lacks
+    them must raise before anything is written — never bucket by some
+    other column and merge later changes by the wrong key."""
+    import pytest
+
+    from clockpipe_spark.config import TableOptions
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "x")], "a long, b string").write.parquet(
+        os.path.join(src, "keyless.parquet")
+    )
+    table = SourceTable("keyless", table_options=TableOptions(sink_buckets=4))
+    job = SyncJob(spark, PipeConfig(tables=[table]), src, str(tmp_path / "target"))
+    with pytest.raises(ValueError, match=r"lacks merge-key columns \['user_id'\]"):
+        job.first_sync()
+    store = job.store_for("keyless")
+    assert store.current_version() == -1 and os.listdir(store.root) == []
