@@ -9,6 +9,13 @@ writes a complete new state under ``v_NNNN/`` and atomically repoints a
 mid-write leaves the previous version current (same guarantee Delta's
 transaction log provides, minimal edition).
 
+Each version records the schema it was written with in a ``_schema.json``
+sidecar (Spark's file index skips ``_`` names), written before the
+``_CURRENT`` swap, so reads pass it to ``spark.read.schema`` instead of
+running a footer-inference Spark job per read — the way a ClickHouse
+INSERT appends to a table whose schema lives in the catalog. Only a
+version written before stores recorded schemas is read by inference.
+
 At scale the state would additionally be hash-partitioned on the merge
 key (``.repartition(pk)`` before write) so each micro-batch only rewrites
 buckets containing changed keys — noted where it applies.
@@ -16,12 +23,14 @@ buckets containing changed keys — noted where it applies.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-from clockpipe_spark.cdc.ops import apply_changelog_to_snapshot
+_SCHEMA = "_schema.json"
 
 
 class ReplicaStore:
@@ -54,13 +63,25 @@ class ReplicaStore:
     def read_raw(self, spark: SparkSession) -> DataFrame | None:
         """Full state including delete tombstones."""
         path = self.current_path()
-        return spark.read.parquet(path) if path else None
+        if path is None:
+            return None
+        try:
+            with open(os.path.join(path, _SCHEMA)) as f:
+                schema = T.StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            # a version written before the store recorded schemas: the
+            # one read that infers (one footer-scan Spark job)
+            return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
 
     def write(self, df: DataFrame) -> int:
-        """Write a full new state version and atomically repoint."""
+        """Write a full new state version, record its schema, and
+        atomically repoint."""
         v = self.current_version() + 1
         path = os.path.join(self.root, f"v_{v:04d}")
         df.write.mode("overwrite").parquet(path)
+        with open(os.path.join(path, _SCHEMA), "w") as f:
+            json.dump(df.schema.jsonValue(), f)
         tmp = self._current_file + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(v))
@@ -88,6 +109,10 @@ class ReplicaStore:
         - deletes persist as tombstone rows (``__deleted``) instead of
           physically vanishing — a replayed pre-delete insert loses to
           the tombstone's higher version instead of resurrecting the key.
+
+        One keep-last over changes ∪ state settles within-batch churn
+        too (several updates of a key, delete-then-reinsert, a
+        redelivered seq), so callers pass the batch un-deduplicated.
         """
         import pyspark.sql.functions as F
 

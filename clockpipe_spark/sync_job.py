@@ -25,7 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from clockpipe_spark.cdc.changelog import changelog_from_events
-from clockpipe_spark.cdc.ops import apply_masks, keep_last_by_key
+# keep_last_by_key stays a module attribute: perfbench's tracer wraps it
+from clockpipe_spark.cdc.ops import apply_masks, keep_last_by_key  # noqa: F401
 from clockpipe_spark.config import PipeConfig
 from clockpipe_spark.streaming.replica import ReplicaStore
 
@@ -268,11 +269,11 @@ class SyncJob:
                 # rows after the last truncate cannot themselves be truncates
                 part = part.filter(F.col("seq") > truncated[tbl])
             keys = self.merge_keys_for(tbl, part.columns)
-            deduped = keep_last_by_key(part, keys, "seq")
+            # no keep-last here: both stores keep the max seq per key
+            # (the flat one over changes ∪ state, the bucketed one over
+            # the changes), so a second dedup would only add a shuffle
             self.store_for(tbl).merge_changes(
-                self.spark,
-                deduped.select("seq", "op", *keys, "value", "ts"),
-                keys,
+                self.spark, part.select("seq", "op", *keys, "value", "ts"), keys
             )
 
         # per-table merges are independent Spark jobs on disjoint target

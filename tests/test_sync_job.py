@@ -295,3 +295,51 @@ def test_bucketed_snapshot_without_merge_keys_raises(spark, tmp_path):
         job.first_sync()
     store = job.store_for("keyless")
     assert store.current_version() == -1 and os.listdir(store.root) == []
+
+
+def test_within_batch_churn_without_pre_dedup(spark, tmp_path):
+    """One iteration whose peek covers the whole log: several updates per
+    key, a delete-then-reinsert, a delete at the end and redelivered
+    seqs. The stores' own keep-last settles the batch on both sinks."""
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from clockpipe_spark.config import TableOptions
+
+    churn = [
+        ("I", 1, 1.0), ("U", 1, 2.0), ("U", 1, 3.0),  # updates of one key
+        ("I", 2, 10.0), ("D", 2, None), ("I", 2, 20.0),  # delete, reinsert
+        ("I", 3, 30.0), ("D", 3, None),  # deleted by the batch's end
+        ("I", 4, 40.0),
+    ]
+    rows = []
+    for base, tbl in ((0, "flat"), (100, "bkt")):
+        for i, (op, uid, value) in enumerate(churn, start=1):
+            rows.append((tbl, base + i, op, uid, value))
+        rows += [(tbl, base + 7, "I", 3, 30.0), (tbl, base + 9, "I", 4, 40.0)]  # redelivered
+    clog = spark.createDataFrame(
+        rows, "tbl string, seq long, op string, user_id long, value double"
+    ).withColumn("ts", F.lit(datetime(2024, 1, 1)))
+    cfg = PipeConfig(
+        tables=[
+            SourceTable("flat"),
+            SourceTable("bkt", table_options=TableOptions(sink_buckets=4)),
+        ],
+        peek_changes_limit=1000,
+    )
+    job = SyncJob(spark, cfg, str(tmp_path), str(tmp_path / "churn"), changelog_fn=lambda s: clog)
+    counters = job.sync_iteration()
+    assert sum(counters.values()) == len(rows)
+    assert job.read_cursor() == 109
+    for tbl in ("flat", "bkt"):
+        expected = {
+            r["user_id"]: (r["seq"], r["value"])
+            for r in replica_state(clog.filter(clog["tbl"] == tbl), ["user_id"]).collect()
+        }
+        got = {
+            r["user_id"]: (r["last_seq"], r["value"])
+            for r in job.store_for(tbl).read(spark).collect()
+        }
+        assert got == expected, tbl
+        assert set(got) == {1, 2, 4}, tbl
