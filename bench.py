@@ -555,16 +555,16 @@ def bench_state_scale(
     sweep: tuple[int, ...] = (256, 1024, 4096),
     default_buckets: int = 1024,
 ) -> dict:
-    """Flat vs bucketed (merge-on-read) replica store, 10x past the
-    1M-key point where PLANS.md's round-1 table stopped: seed n_keys of
-    state across the 4 routed tables, then drain the sf change log in 8
-    micro-batches (cap 12,500) through both layouts.
+    """One-bucket ("flat") vs bucketed (merge-on-read) replica store,
+    10x past the 1M-key point where PLANS.md's round-1 table stopped:
+    seed n_keys of state across the 4 routed tables, then drain the sf
+    change log in 8 micro-batches (cap 12,500) through both layouts.
 
-    The flat store rewrites the full state every merge (the known scale
-    killer -- its drain cost scales with merge count x state size). The
-    bucketed store appends a keep-last delta per merge (cost O(batch),
-    independent of state size) and auto-compacts the delta log into only
-    the touched buckets every compact_every=8 batches -- so the measured
+    Both append a keep-last delta per merge (cost O(batch), independent
+    of state size) and auto-compact the delta log into the touched
+    buckets every compact_every=8 batches. With one bucket every
+    compaction rewrites the table's whole state; with N buckets only
+    the buckets the deltas touch -- so the measured
     drain INCLUDES one full compaction cycle per table: steady-state
     cost, not an append-only best case. Any residual delta log is folded
     by an explicit compact() afterwards, timed separately, so both
@@ -634,14 +634,14 @@ def bench_state_scale(
             .agg(F.sum("nb").alias("total"))
             .first()["total"]
         )
-        for n in sweep
+        for n in (1, *sweep)
     }
-    n_iter_tables = clog.select("it", "tbl").distinct().count()
     clog.unpersist()
-    out["flat_state_rows_rewritten"] = n_iter_tables * (n_keys // 4)
 
     def rows_rewritten(n: int) -> int:
         return appended + int(comp_buckets_by_n[n] * (n_keys // 4) / n)
+
+    out["flat_state_rows_rewritten"] = rows_rewritten(1)
 
     def drain(buckets: int) -> tuple[float, float]:
         target = tempfile.mkdtemp(prefix=f"clockpipe_state10x_b{buckets}_")
@@ -649,20 +649,14 @@ def bench_state_scale(
             cfg = PipeConfig(peek_changes_limit=CAP, sink_buckets=buckets)
             job = SyncJob(spark, cfg, sf_dir, target)
             for i in range(4):
-                store = job.store_for(f"t{i}")
                 part = seed.filter(F.col("user_id") % 4 == i)
-                if hasattr(store, "write_snapshot"):
-                    store.write_snapshot(part, ["user_id"])
-                else:
-                    store.write(part)
+                job.store_for(f"t{i}").write_snapshot(part, ["user_id"])
             t0 = time.perf_counter()
             job.sync_loop()
             sec = time.perf_counter() - t0
             t0 = time.perf_counter()
             for i in range(4):  # fold any residual delta log
-                store = job.store_for(f"t{i}")
-                if hasattr(store, "compact"):
-                    store.compact(spark)
+                job.store_for(f"t{i}").compact(spark)
             return round(sec, 2), round(time.perf_counter() - t0, 2)
         finally:
             shutil.rmtree(target, ignore_errors=True)

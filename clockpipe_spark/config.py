@@ -54,8 +54,8 @@ class PipeConfig:
     sleep_millis_when_peek_failed: int = 5_000    # config.rs:156-159
     sleep_millis_when_peek_is_empty: int = 5_000  # config.rs:161-164
     sleep_millis_when_write_failed: int = 5_000   # config.rs:166-169
-    # Spark-native sink layout: 0 = flat versioned store; >0 = hash-
-    # bucketed store where merges rewrite only touched buckets (the
+    # Spark-native sink layout: 0 = one bucket; >0 = that many hash
+    # buckets, so compaction rewrites only touched buckets (the
     # ORDER BY (pk) / index_granularity analog for parquet state)
     sink_buckets: int = 0
 

@@ -1,11 +1,12 @@
 """Bucketed replica store: hash-partitioned upsert state with
 merge-on-read deltas + periodic bucket-scoped compaction.
 
-This is the scale-out version of ReplicaStore (same merge semantics:
-version column + tombstones), emulating the ReplacingMergeTree
-merge-on-read economics the reference's sink relies on
-(adapter/mod.rs:90-105): ClickHouse *inserts* are cheap appended parts,
-background merges compact them, and FINAL dedups at read. Mapped here:
+This is the one replica store (``ReplicaStore`` is its one-bucket
+case): a version column that competes in the merge plus tombstones,
+emulating the ReplacingMergeTree merge-on-read economics the
+reference's sink relies on (adapter/mod.rs:90-105): ClickHouse
+*inserts* are cheap appended parts, background merges compact them, and
+FINAL dedups at read. Mapped here:
 
 - ``merge_changes`` APPENDS a keep-last-compacted delta file and
   observes the buckets it touches while writing it — cost O(batch),
@@ -19,11 +20,15 @@ background merges compact them, and FINAL dedups at read. Mapped here:
 - reads apply keep-last across base+deltas (merge-on-read FINAL); with
   an empty delta log the base is already deduped and reads skip the
   window entirely.
+- ``write_snapshot`` commits a full state (first_sync, or a caller
+  whose merge is not keep-last, like the additive rollup) to a fresh
+  version dir.
 
 A manifest maps bucket -> data path plus the ordered delta log, and the
 _CURRENT pointer swap makes every commit atomic for readers (a crash
-mid-commit leaves the previous manifest current). Superseded delta/
-bucket files are kept on disk so older manifests stay readable
+mid-commit leaves the previous manifest current). Every data file is
+written to a path no committed manifest lists yet, so superseded delta/
+bucket files stay intact and older manifests stay readable
 (time-travel / reader isolation); GC of unreferenced versions is an
 external janitor concern, as in Delta/Iceberg.
 
@@ -32,13 +37,14 @@ entry carries its ``schema`` and ``__schemas__`` maps each live base
 version dir to the schema its bucket files were written with. Reads pass
 those schemas to ``spark.read.schema`` instead of running a footer-
 inference Spark job per path group (the catalog role ClickHouse's table
-metadata plays for the reference's INSERTs).
+metadata plays for the reference's INSERTs). A manifest without them
+is not read: the lookup raises ``KeyError``.
 
 Measured economics at 10M keys / 1024 buckets / local[32] (bench.py
-state10x): appends are ~10x cheaper than a flat full rewrite, and one
-compaction per ``compact_every=8`` batches amortizes to less than the
-flat store pays per batch — see BENCH state10x for the recorded
-crossover data.
+state10x): appends are ~10x cheaper than a one-bucket full rewrite, and
+one compaction per ``compact_every=8`` batches amortizes to less than
+rewriting the whole state per batch — see BENCH state10x for the
+recorded crossover data.
 
 This is the minimal transactional core of what Delta/Iceberg provide;
 with those available, ``merge_changes`` becomes MERGE INTO (or a
@@ -63,6 +69,7 @@ from clockpipe_spark.cdc.ops import keep_last_by_key
 _DELTAS = "__deltas__"
 _KEYS = "__keys__"
 _SCHEMAS = "__schemas__"
+_EMPTY = "__empty__"  # schema of a truncated or empty-snapshot state
 
 
 def _file_schema(df: DataFrame) -> dict:
@@ -71,27 +78,19 @@ def _file_schema(df: DataFrame) -> dict:
     return T.StructType([f for f in df.schema.fields if f.name != "__bucket"]).jsonValue()
 
 
-def _read_grouped(
-    spark: SparkSession, parts: list[tuple[str, dict | None, str]]
-) -> DataFrame | None:
-    """Read ``(path, recorded schema, fallback group)`` entries: ONE
-    ``spark.read.schema(s).parquet(*paths)`` per distinct recorded
-    schema, aligned with unionByName(allowMissingColumns). Not one read
-    under a merged schema: a column whose type changed between files
-    (double base, bigint delta) fails the parquet scan, where the union
-    widens it."""
-    reads: dict[str, tuple[dict | None, list[str]]] = {}
-    for path, schema, fallback in parts:
-        key = json.dumps(schema) if schema is not None else "?" + fallback
-        reads.setdefault(key, (schema, []))[1].append(path)
+def _read_grouped(spark: SparkSession, parts: list[tuple[str, dict]]) -> DataFrame:
+    """Read ``(path, recorded schema)`` entries: ONE
+    ``spark.read.schema(s).parquet(*paths)`` per distinct schema,
+    aligned with unionByName(allowMissingColumns). Not one read under a
+    merged schema: a column whose type changed between files (double
+    base, bigint delta) fails the parquet scan, where the union widens
+    it."""
+    reads: dict[str, tuple[dict, list[str]]] = {}
+    for path, schema in parts:
+        reads.setdefault(json.dumps(schema), (schema, []))[1].append(path)
     df: DataFrame | None = None
     for schema, paths in reads.values():
-        if schema is None:
-            # written before the store recorded schemas: the one read
-            # that infers (one footer-scan Spark job per fallback group)
-            part = spark.read.parquet(*paths)
-        else:
-            part = spark.read.schema(T.StructType.fromJson(schema)).parquet(*paths)
+        part = spark.read.schema(T.StructType.fromJson(schema)).parquet(*paths)
         df = part if df is None else df.unionByName(part, allowMissingColumns=True)
     return df
 
@@ -138,8 +137,11 @@ class BucketedReplicaStore:
         deltas: list[dict],
         keys: Sequence[str],
         schemas: dict[str, dict],
+        empty: dict | None = None,
     ) -> int:
         manifest: dict = dict(buckets)
+        if empty is not None:
+            manifest[_EMPTY] = empty
         if deltas:
             manifest[_DELTAS] = deltas
         manifest[_KEYS] = list(keys)
@@ -181,49 +183,37 @@ class BucketedReplicaStore:
             paths = sorted({bucket_map[str(b)] for b in buckets if str(b) in bucket_map})
         if not paths:
             return None
-        dirs = [os.path.dirname(p) for p in paths]
-        return _read_grouped(spark, [(p, schemas.get(d), d) for p, d in zip(paths, dirs)])
+        return _read_grouped(spark, [(p, schemas[os.path.dirname(p)]) for p in paths])
 
-    def _read_deltas(
-        self, spark: SparkSession, deltas: list[dict], buckets: list[int] | None
-    ) -> DataFrame | None:
-        """Read the delta log (or the entries touching ``buckets``), one
-        read per recorded schema like ``_read_base``."""
-        if buckets is not None:
-            want = set(buckets)
-            deltas = [d for d in deltas if want & set(d["buckets"])]
+    def _read_deltas(self, spark: SparkSession, deltas: list[dict]) -> DataFrame | None:
+        """Read the delta log, one read per recorded schema like
+        ``_read_base``."""
         if not deltas:
             return None
-        df = _read_grouped(spark, [(d["path"], d.get("schema"), d["path"]) for d in deltas])
-        if buckets is not None:
-            df = df.filter(F.col("__bucket").isin([int(b) for b in buckets]))
-        return df
-
-    def _merged_state(
-        self, spark: SparkSession, buckets: list[int] | None = None
-    ) -> DataFrame | None:
-        """Merge-on-read FINAL view (tombstones still present): base ∪
-        delta log, keep-last per key on last_seq. Skips the window when
-        the delta log is empty — the base is already deduped."""
-        bucket_map, deltas, keys, schemas = self._parts()
-        base = self._read_base(spark, bucket_map, schemas, buckets)
-        delta = self._read_deltas(spark, deltas, buckets)
-        if base is not None and "__bucket" not in base.columns:
-            base = base.withColumn("__bucket", self._bucket_expr(keys).cast("int"))
-        if delta is None:
-            return base
-        merged = (
-            delta if base is None
-            else base.unionByName(delta, allowMissingColumns=True)
-        )
-        # last_seq ties only occur between a row and its redelivered
-        # at-least-once twin (a seq identifies one change), so the
-        # arbitrary tiebreak is harmless — both rows are identical
-        return keep_last_by_key(merged, keys, "last_seq")
+        return _read_grouped(spark, [(d["path"], d["schema"]) for d in deltas])
 
     def read_raw(self, spark: SparkSession) -> DataFrame | None:
-        raw = self._merged_state(spark)
-        return None if raw is None else raw.drop("__bucket")
+        """Merge-on-read FINAL view (tombstones still present): base ∪
+        delta log, keep-last per key on last_seq. Skips the window when
+        the delta log is empty — the base is already deduped. A
+        truncated state reads as an empty frame with its columns."""
+        bucket_map, deltas, keys, schemas = self._parts()
+        base = self._read_base(spark, bucket_map, schemas, None)
+        delta = self._read_deltas(spark, deltas)
+        if delta is not None:
+            delta = delta.drop("__bucket")
+            merged = (
+                delta if base is None
+                else base.unionByName(delta, allowMissingColumns=True)
+            )
+            # last_seq ties only occur between a row and its redelivered
+            # at-least-once twin (a seq identifies one change), so the
+            # arbitrary tiebreak is harmless — both rows are identical
+            return keep_last_by_key(merged, keys, "last_seq")
+        if base is not None:
+            return base
+        empty = self.read_manifest().get(_EMPTY)
+        return None if empty is None else spark.createDataFrame([], T.StructType.fromJson(empty))
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         raw = self.read_raw(spark)
@@ -232,9 +222,14 @@ class BucketedReplicaStore:
         return raw.filter(~raw["__deleted"]).drop("__deleted")
 
     def write_snapshot(self, df: DataFrame, keys: Sequence[str]) -> int:
-        """Seed all buckets from a snapshot (first_sync, K6 path). The
-        frame must already carry last_seq/__deleted bookkeeping."""
-        out_dir = os.path.join(self.root, "v_000000_snapshot")
+        """Commit ``df`` as the whole state, replacing base and delta log
+        (first_sync's K6 seed, or a full rewrite by a caller whose merge
+        is not keep-last). The frame must already carry
+        last_seq/__deleted bookkeeping and hold one row per key. Written
+        to a fresh version dir, like ``_compact``: the live manifest
+        may still list files of every earlier one."""
+        version = self.current_version() + 1
+        out_dir = os.path.join(self.root, f"v_{version:06d}")
         bucketed = df.withColumn("__bucket", self._bucket_expr(keys).cast("int"))
         (
             bucketed.repartition(self.n_buckets, "__bucket")
@@ -243,13 +238,15 @@ class BucketedReplicaStore:
             .parquet(out_dir)
         )
         # empty buckets produce no directory — only materialized buckets
-        # enter the manifest (absent bucket == empty bucket on read)
+        # enter the manifest (absent bucket == empty bucket on read); an
+        # empty snapshot keeps its schema like a truncate
         buckets = {
             str(b): os.path.join(out_dir, f"__bucket={b}")
             for b in range(self.n_buckets)
             if os.path.isdir(os.path.join(out_dir, f"__bucket={b}"))
         }
-        return self._commit(buckets, [], keys, {out_dir: _file_schema(bucketed)})
+        schema = _file_schema(bucketed)
+        return self._commit(buckets, [], keys, {out_dir: schema}, None if buckets else schema)
 
     def merge_changes(
         self,
@@ -259,14 +256,19 @@ class BucketedReplicaStore:
         order_col: str = "seq",
         op_col: str = "op",
     ) -> int:
-        """Apply a change batch: append a keep-last delta, then compact
-        when the delta log reaches ``compact_every``. Same merge
-        semantics as ReplicaStore.merge_changes (keep-last per PK, delete
-        keeps a version-competing tombstone); the bucket id is always
-        recomputed from the keys (never trusted from data), so bucket
-        membership survives schema evolution and re-reads. The batch may
-        hold several changes per key: the keep-last here is the batch's
-        only dedup."""
+        """Upsert+delete a change batch (K1+K2): append a keep-last delta,
+        then compact when the delta log reaches ``compact_every``.
+
+        Replay is idempotent the ReplacingMergeTree(ver, is_deleted) way:
+        ``last_seq`` is the version column and COMPETES at read and
+        compaction, so a replayed batch of older changes never
+        overwrites newer state; deletes persist as tombstone rows
+        (``__deleted``), so a replayed pre-delete insert loses to the
+        tombstone instead of resurrecting the key. The bucket id is
+        always recomputed from the keys (never trusted from data), so
+        bucket membership survives schema evolution and re-reads. The
+        batch may hold several changes per key: the keep-last here is
+        the batch's only dedup."""
         changes = changes.withColumn("last_seq", F.col(order_col))
         data_cols = [c for c in changes.columns if c not in (order_col, op_col)]
         delta = (
@@ -307,12 +309,15 @@ class BucketedReplicaStore:
         return v
 
     def truncate(self, spark: SparkSession) -> int | None:
-        """K3 — TRUNCATE propagation: commit an empty manifest (no
-        buckets, no deltas), keeping the merge keys; the superseded
-        files stay readable through older manifests."""
-        if self.current_version() < 0:
+        """K3 — TRUNCATE propagation: commit a manifest with no buckets
+        and no deltas that keeps the merge keys and the state's schema,
+        so reads return an empty frame (pipes/postgres.rs:391-417: the
+        table stays, its rows go); the superseded files stay readable
+        through older manifests."""
+        raw = self.read_raw(spark)
+        if raw is None:
             return None
-        return self._commit({}, [], self._parts()[2], {})
+        return self._commit({}, [], self._parts()[2], {}, raw.schema.jsonValue())
 
     def compact(self, spark: SparkSession, keys: Sequence[str] | None = None) -> int:
         """Fold the pending delta log into the base, rewriting only the
@@ -332,11 +337,10 @@ class BucketedReplicaStore:
                 return self._commit(bucket_map, [], keys, schemas)
             return self.current_version()
 
-        log = self._read_deltas(spark, deltas, None)
+        log = self._read_deltas(spark, deltas)
         base = self._read_base(spark, bucket_map, schemas, touched)
         if base is not None:
-            if "__bucket" not in base.columns:
-                base = base.withColumn("__bucket", self._bucket_expr(keys).cast("int"))
+            base = base.withColumn("__bucket", self._bucket_expr(keys).cast("int"))
             # equal-seq rows are identical redeliveries (a seq identifies
             # one change), so keep-last's arbitrary tiebreak is harmless
             log = base.unionByName(log, allowMissingColumns=True)

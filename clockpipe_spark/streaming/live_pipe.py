@@ -195,10 +195,11 @@ class LivePostgresRoutedPipe:
                         .cast(c.spark_type)
                         .alias(c.column_name)
                     )
-            store.write(
+            store.write_snapshot(
                 snap.select(*cols)
                 .withColumn("last_seq", F.lit(0).cast("long"))
-                .withColumn("__deleted", F.lit(False))
+                .withColumn("__deleted", F.lit(False)),
+                self.keys[t],
             )
             copied[t] = store.read_raw(self.spark).count()
         return copied
@@ -289,8 +290,8 @@ class LivePostgresRoutedPipe:
             self.stores[t].truncate(self.spark)
             mine = mine.filter((F.col("lsn") > t_max) & (F.col("msg_type") != "T"))
         # merge only when a write frame SURVIVES the truncate cut — an
-        # all-pre-truncate batch would otherwise rewrite a full state
-        # version with zero changes
+        # all-pre-truncate batch would otherwise run a delta write job
+        # for zero changes
         if not w_maxes or (t_max is not None and max(w_maxes) <= t_max):
             return
         writes = mine.filter(F.col("msg_type").isin("I", "U", "D"))

@@ -51,10 +51,12 @@ class ContinuousRollup:
             )
         else:
             merged = delta
-        self.store.write(
+        # additive, not keep-last: the summed rollup replaces the state
+        self.store.write_snapshot(
             merged.withColumn("last_seq", F.lit(-1).cast("bigint")).withColumn(
                 "__deleted", F.lit(False)
-            )
+            ),
+            self.KEYS,
         )
 
     def read(self, spark: SparkSession) -> DataFrame | None:

@@ -15,6 +15,7 @@ batch comes from the cursor-range peek of ``sync_iteration`` or from a
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from collections.abc import Callable
@@ -28,6 +29,7 @@ from clockpipe_spark.cdc.changelog import changelog_from_events
 # keep_last_by_key stays a module attribute: perfbench's tracer wraps it
 from clockpipe_spark.cdc.ops import apply_masks, keep_last_by_key  # noqa: F401
 from clockpipe_spark.config import PipeConfig
+from clockpipe_spark.streaming.bucketed_replica import BucketedReplicaStore
 from clockpipe_spark.streaming.replica import ReplicaStore
 
 
@@ -59,7 +61,8 @@ def run_sync_loop(
     ``sleep_millis_when_write_failed`` when the iteration died in its
     write phase (WriteFailedError, pipes/postgres.rs:408-446),
     ``sleep_millis_when_peek_failed`` otherwise (config.rs:156-159).
-    Each productive iteration paces by
+    Every retried iteration logs one WARNING naming its failure class
+    and attempt number. Each productive iteration paces by
     ``sleep_millis_after_sync_iteration`` (:513).
 
     ``daemon=True`` is the reference's long-running shape: an empty
@@ -74,19 +77,21 @@ def run_sync_loop(
         polls += 1
         try:
             counters = iteration()
-        except WriteFailedError:
+        except Exception as ex:
             failures += 1
             if failures > max_retries:
                 raise
+            write_failed = isinstance(ex, WriteFailedError)
+            logging.getLogger(__name__).warning(
+                "sync iteration failed (%s), retry attempt %d of %d: %s",
+                WriteFailedError.__name__ if write_failed else "peek",
+                failures, max_retries, ex,
+            )
             if sleep:
-                time.sleep(config.sleep_millis_when_write_failed / 1000)
-            continue  # cursor untouched -> same batch re-peeked
-        except Exception:
-            failures += 1
-            if failures > max_retries:
-                raise
-            if sleep:
-                time.sleep(config.sleep_millis_when_peek_failed / 1000)
+                time.sleep(
+                    (config.sleep_millis_when_write_failed if write_failed
+                     else config.sleep_millis_when_peek_failed) / 1000
+                )
             continue  # cursor untouched -> same batch re-peeked
         failures = 0
         if not counters:
@@ -129,11 +134,12 @@ class SyncJob:
         self.target_root = target_root
         self.keys = list(keys)
         self._changelog_fn = changelog_fn
+        self._events_schema: T.StructType | None = None
         self.cursor_file = os.path.join(target_root, "cursor.json")
         os.makedirs(target_root, exist_ok=True)
-        self.stores: dict[str, ReplicaStore] = {}
+        self.stores: dict[str, BucketedReplicaStore] = {}
 
-    def store_for(self, table: str):
+    def store_for(self, table: str) -> BucketedReplicaStore:
         if table not in self.stores:
             path = os.path.join(self.target_root, table)
             # per-table options inherit from global (config.rs:259-268)
@@ -144,10 +150,6 @@ class SyncJob:
             if src is not None:
                 buckets = self.config.options_for(src).sink_buckets
             if buckets and buckets > 0:
-                from clockpipe_spark.streaming.bucketed_replica import (
-                    BucketedReplicaStore,
-                )
-
                 self.stores[table] = BucketedReplicaStore(path, n_buckets=buckets)
             else:
                 self.stores[table] = ReplicaStore(path)
@@ -185,14 +187,11 @@ class SyncJob:
             state = df.withColumn("last_seq", F.lit(-1).cast("bigint")).withColumn(
                 "__deleted", F.lit(False)
             )
-            if hasattr(store, "write_snapshot"):
-                # the merges' key resolution, so a bucketed snapshot and
-                # later changelog merges hash by the SAME key columns
-                # (snapshot-then-CDC on one table is the reference's
-                # core shape, pipes/postgres.rs first_sync -> sync_loop)
-                store.write_snapshot(state, self.merge_keys_for(t.table_name, df.columns))
-            else:
-                store.write(state)
+            # the merges' key resolution, so the snapshot and later
+            # changelog merges hash by the SAME key columns
+            # (snapshot-then-CDC on one table is the reference's core
+            # shape, pipes/postgres.rs first_sync -> sync_loop)
+            store.write_snapshot(state, self.merge_keys_for(t.table_name, df.columns))
             copied[t.table_name] = store.read(self.spark).count()
         return copied
 
@@ -200,9 +199,12 @@ class SyncJob:
     def changelog(self) -> DataFrame:
         if self._changelog_fn is not None:
             return self._changelog_fn(self.spark)
-        return _changelog(
-            self.spark.read.parquet(os.path.join(self.source_dir, "events.parquet"))
-        )
+        path = os.path.join(self.source_dir, "events.parquet")
+        # infer once (a footer-scan job); later builds pass the schema,
+        # which keeps the file listing fresh but launches no job
+        if self._events_schema is None:
+            self._events_schema = self.spark.read.parquet(path).schema
+        return _changelog(self.spark.read.schema(self._events_schema).parquet(path))
 
     def read_cursor(self) -> int:
         try:
@@ -269,9 +271,8 @@ class SyncJob:
                 # rows after the last truncate cannot themselves be truncates
                 part = part.filter(F.col("seq") > truncated[tbl])
             keys = self.merge_keys_for(tbl, part.columns)
-            # no keep-last here: both stores keep the max seq per key
-            # (the flat one over changes ∪ state, the bucketed one over
-            # the changes), so a second dedup would only add a shuffle
+            # no keep-last here: the store keeps the max seq per key of
+            # the changes, so a second dedup would only add a shuffle
             self.store_for(tbl).merge_changes(
                 self.spark, part.select("seq", "op", *keys, "value", "ts"), keys
             )

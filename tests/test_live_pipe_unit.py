@@ -248,11 +248,12 @@ def test_daemon_mode_polls_through_empty_peeks(spark, tmp_path, monkeypatch):
     assert slept == [17.0, 1.0, 17.0, 17.0]
 
 
-def test_failed_iteration_is_retried_without_advancing(spark, tmp_path):
+def test_failed_iteration_is_retried_without_advancing(spark, tmp_path, caplog):
     """T3 (pipes/postgres.rs:433-452): a merge that fails once is
     retried by sync_loop; the failed attempt never advances the slot,
     so the retry re-peeks the same frames (the seam serves them twice,
-    as a slot that was not advanced does) and the slot advances once."""
+    as a slot that was not advanced does) and the slot advances once.
+    The retry logs one WARNING naming the failure class and attempt."""
     write_batch = [
         ("0/10", "7", _hex(encode_begin())),
         ("0/20", "7", _hex(encode_insert(500, [("t", "2", None), ("t", "b", None)]))),
@@ -280,6 +281,12 @@ def test_failed_iteration_is_retried_without_advancing(spark, tmp_path):
     assert advances() == ["SELECT pg_replication_slot_advance('slot', '0/30')"]
     rows = sorted((r["id"], r["v"]) for r in pipe.replica("t1").collect())
     assert rows == [(1, "a"), (2, "b")]
+    warnings = [
+        r.getMessage() for r in caplog.records
+        if r.name == "clockpipe_spark.sync_job" and r.levelname == "WARNING"
+    ]
+    assert len(warnings) == 1
+    assert "(WriteFailedError)" in warnings[0] and "attempt 1 of 3" in warnings[0]
 
 
 def _apply_model(snapshot, ops):

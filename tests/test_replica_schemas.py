@@ -1,19 +1,23 @@
 """Replica stores read with the schemas they recorded at write time:
 building a read launches no Spark job, a merge launches only its write,
-a column whose type changed across files still widens, and a store
-written before schemas were recorded still reads (by inference)."""
+a column whose type changed across files still widens, and an empty
+state keeps its columns. The sync job's default change source likewise
+infers its schema only once."""
 
 from __future__ import annotations
 
-import json
 import os
 
+from pyspark.sql import functions as F
+
+from clockpipe_spark.config import PipeConfig
 from clockpipe_spark.streaming.bucketed_replica import (
     _DELTAS,
     _SCHEMAS,
     BucketedReplicaStore,
 )
-from clockpipe_spark.streaming.replica import _SCHEMA, ReplicaStore
+from clockpipe_spark.streaming.replica import ReplicaStore
+from clockpipe_spark.sync_job import SyncJob
 
 KEYS = ["user_id"]
 
@@ -115,34 +119,30 @@ def test_manifest_schemas_cover_live_paths(spark, tmp_path):
     assert all("schema" in d for d in m[_DELTAS])
 
 
-def test_store_without_recorded_schemas_still_reads(spark, tmp_path):
-    """Stores written before schemas were recorded have no sidecar and
-    no manifest schemas: reads fall back to footer inference — the one
-    trigger of that path — and return the same rows."""
-    flat = ReplicaStore(str(tmp_path / "flat"))
-    flat.merge_changes(spark, _clog(spark, _seed(0)), KEYS)
-    flat.merge_changes(spark, _clog(spark, [(100, "U", 3, 33.0), (101, "D", 4, 0.0)]), KEYS)
-    expected = _rows(flat.read(spark))
-    os.remove(os.path.join(flat.current_path(), _SCHEMA))
-    jobs, legacy = _count_jobs(spark, lambda: flat.read(spark))
-    assert jobs > 0  # the inference read ran
-    assert _rows(legacy) == expected
+def test_changelog_infers_events_schema_once(spark, sf_dir, tmp_path):
+    """The default source footer-scans events.parquet on the first
+    build only; later builds pass that schema and launch no job."""
+    job = SyncJob(spark, PipeConfig(), sf_dir, str(tmp_path / "target"))
+    first = job.changelog()
+    jobs, second = _count_jobs(spark, job.changelog)
+    assert jobs == 0, "second changelog() build"
+    assert second.schema == first.schema
 
-    bkt = BucketedReplicaStore(str(tmp_path / "bkt"), n_buckets=4, compact_every=100)
-    bkt.merge_changes(spark, _clog(spark, _seed(0)), KEYS)
-    bkt.compact(spark)
-    bkt.merge_changes(spark, _clog(spark, [(100, "U", 3, 33.0)]), KEYS)
-    bkt.merge_changes(spark, _clog(spark, [(101, "D", 4, 0.0)]), KEYS)
-    expected = _rows(bkt.read(spark))
-    m = bkt.read_manifest()
-    m.pop(_SCHEMAS)
-    for d in m[_DELTAS]:
-        d.pop("schema")
-    with open(bkt._manifest_path(bkt.current_version()), "w") as f:
-        json.dump(m, f)
-    jobs, legacy = _count_jobs(spark, lambda: bkt.read(spark))
-    assert jobs > 0  # the inference reads ran
-    assert _rows(legacy) == expected
-    # a legacy store keeps merging and compacting
-    bkt.compact(spark)
-    assert _rows(bkt.read(spark)) == expected
+
+def test_empty_state_reads_as_empty_frame(spark, tmp_path):
+    """An empty snapshot (a source table with no rows) and a truncate
+    both leave a table with its columns and no rows, on one bucket and
+    on many — never a missing table."""
+    for n in (1, 4):
+        store = BucketedReplicaStore(str(tmp_path / f"e{n}"), n_buckets=n)
+        snap = _clog(spark, []).select(
+            "user_id", "value", F.col("seq").alias("last_seq"), F.lit(False).alias("__deleted")
+        )
+        store.write_snapshot(snap, ["user_id"])
+        got = store.read(spark)
+        assert got.count() == 0 and got.columns == ["user_id", "value", "last_seq"], n
+        store.merge_changes(spark, _clog(spark, [(1, "I", 1, 1.0)]), ["user_id"])
+        assert _rows(store.read(spark)) == [(1, 1.0)], n
+        store.truncate(spark)
+        got = store.read(spark)
+        assert got.count() == 0 and got.columns == ["user_id", "value", "last_seq"], n
