@@ -22,6 +22,7 @@ clusters + canonical choice (here).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -87,18 +88,7 @@ def connected_components(
             .select("id", "lbl")
             .localCheckpoint(eager=True)
         )
-        try:
-            changed = obs.get["c"]
-        except Exception:
-            # AQE's empty-relation propagation prunes CollectMetrics on
-            # an empty label set — fall back to the legacy rejoin count
-            # (only reachable for empty/degenerate vertex sets)
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.lbl") < F.col("o.lbl"))
-                .count()
-            )
+        changed = obs.get["c"]
         labels = new_labels
         if changed == 0:
             break
@@ -237,15 +227,15 @@ def connected_components_star(
             F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
         )
 
-    def _sig_of(frame, obs):
+    def _sig_of(obs):
         try:
             row = obs.get
-        except Exception:
+        except Py4JJavaError:
             # AQE's empty-relation propagation prunes CollectMetrics
-            # when the round's edge set goes empty, so the metric never
-            # arrives — fall back to the explicit agg (trivially cheap:
-            # it only happens on an empty/near-empty edge set)
-            row = frame.agg(*_sig_cols()).first()
+            # when the round's edge set is empty, so the metric never
+            # arrives (the JVM-side toPyRow raises) — and the empty
+            # set's signature is known without a job
+            return (0, 0)
         return (row["n"], row["h"])
 
     prev_sig = None
@@ -273,8 +263,8 @@ def connected_components_star(
             .observe(obs2, *_sig_cols())
             .localCheckpoint(eager=True)
         )
-        sig1 = _sig_of(mid, obs1)
-        sig2 = _sig_of(e, obs2)
+        sig1 = _sig_of(obs1)
+        sig2 = _sig_of(obs2)
         if sig1 == prev_sig or sig2 == sig1:
             break
         prev_sig = sig2

@@ -29,7 +29,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clockpipe_spark.streaming.neardup_state import StreamingNearDup, empty_df
+from clockpipe_spark.streaming.neardup_state import (
+    StreamingNearDup,
+    empty_df,
+    parquet_files,
+)
 
 _METRICS_SCHEMA = (
     "batch_id long, n_arrived long, n_gated long, n_admitted long"
@@ -67,21 +71,15 @@ def c4_quality_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:
 class CorpusIngestPipeline:
     """foreachBatch-compatible end-to-end corpus ingest.
 
-    ``gate`` is any DataFrame -> DataFrame filter (default: the C4
-    battery); dedup is StreamingNearDup (near-dup via persisted MinHash
-    bands; exact dedup for short docs). Admitted rows append to
-    ``<root>/corpus``; per-batch counts append to ``<root>/metrics``.
+    The gate is the C4 battery (``c4_quality_gate``); dedup is
+    StreamingNearDup (near-dup via persisted MinHash bands; exact dedup
+    for short docs). Admitted rows of batch ``<id>`` land in
+    ``<root>/corpus/batch=<id>``; per-batch counts append to
+    ``<root>/metrics``.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        gate=c4_quality_gate,
-        **neardup_kwargs,
-    ):
+    def __init__(self, spark: SparkSession, root: str, **neardup_kwargs):
         self.spark = spark
-        self.gate = gate
         self.corpus_dir = os.path.join(root, "corpus")
         self.metrics_dir = os.path.join(root, "metrics")
         self.neardup = StreamingNearDup(
@@ -92,7 +90,7 @@ class CorpusIngestPipeline:
     def process_batch(
         self,
         docs: DataFrame,
-        batch_id: int = -1,
+        batch_id: int,
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> DataFrame:
@@ -107,24 +105,22 @@ class CorpusIngestPipeline:
         written driver-side with pyarrow (its Spark write job cost
         ~0.6 s — pure job-launch overhead for 4 integers).
 
-        Corpus commit protocol (r13): with a real ``batch_id`` the
-        corpus write goes to a deterministic ``batch=<id>`` directory
-        via the dedup layer's ``pre_commit`` hook — i.e. BEFORE the
-        state's shorts/sigs commit marker — guarded by the directory's
-        ``_SUCCESS`` file. The old order (state fully committed, THEN
-        a blind corpus append filtered by pre-batch admitted_ids) had
-        an unhealable window: a crash between the two left the docs
+        Corpus commit protocol (r13): the corpus write goes to a
+        deterministic ``batch=<id>`` directory via the dedup layer's
+        ``pre_commit`` hook — i.e. BEFORE the state's shorts/sigs
+        commit marker — guarded by the directory's ``_SUCCESS`` file.
+        The old order (state fully committed, THEN a blind corpus
+        append filtered by pre-batch admitted_ids) had an unhealable
+        window: a crash between the two left the docs
         admitted-in-state, so the replay's anti-join wrote nothing and
         their text never reached the corpus. Now every window heals:
         crash before the corpus write → replay sees no state marker,
         recomputes the same admitted set, rewrites the same directory
         (mode=overwrite, deterministic content); crash after it →
         ``_SUCCESS`` exists, the write is skipped, and the state
-        re-commits idempotently. Callers without a batch_id (< 0) keep
-        the legacy blind append (no replay contract to honor).
-        ``already`` still filters cross-batch redelivery: a doc id
-        admitted under an EARLIER batch_id must not enter this batch's
-        directory too."""
+        re-commits idempotently. ``already`` still filters cross-batch
+        redelivery: a doc id admitted under an EARLIER batch_id must not
+        enter this batch's directory too."""
         from pyspark.sql import Observation
 
         obs_arrived, obs_gated, obs_admitted = (
@@ -142,12 +138,11 @@ class CorpusIngestPipeline:
             F.min(id_col).alias("lo"),
             F.max(id_col).alias("hi"),
         )
-        gated = self.gate(docs, text_col) if self.gate else docs
-        gated = gated.observe(obs_gated, F.count(F.lit(1)).alias("n"))
-        batch_dir = os.path.join(self.corpus_dir, f"batch={batch_id}")
-        corpus_done = batch_id >= 0 and os.path.exists(
-            os.path.join(batch_dir, "_SUCCESS")
+        gated = c4_quality_gate(docs, text_col).observe(
+            obs_gated, F.count(F.lit(1)).alias("n")
         )
+        batch_dir = os.path.join(self.corpus_dir, f"batch={batch_id}")
+        corpus_done = os.path.exists(os.path.join(batch_dir, "_SUCCESS"))
 
         def write_corpus(admitted_df: DataFrame) -> None:
             if corpus_done:
@@ -169,13 +164,9 @@ class CorpusIngestPipeline:
             already = self.neardup.admitted_ids(
                 id_range=(rng["lo"], rng["hi"]), distinct=False
             ).withColumnRenamed("id", id_col)
-            new_rows = admitted_df.join(already, id_col, "left_anti").observe(
+            admitted_df.join(already, id_col, "left_anti").observe(
                 obs_admitted, F.count(F.lit(1)).alias("n")
-            )
-            if batch_id >= 0:
-                new_rows.write.mode("overwrite").parquet(batch_dir)
-            else:
-                new_rows.write.mode("append").parquet(self.corpus_dir)
+            ).write.mode("overwrite").parquet(batch_dir)
 
         admitted = self.neardup.process_batch(
             gated, id_col, text_col, pre_commit=write_corpus
@@ -185,11 +176,10 @@ class CorpusIngestPipeline:
             # the state marker: the admitted count is what the batch
             # directory already holds (rare path — one cheap scan; an
             # all-duplicates batch may hold _SUCCESS and no data files)
-            part_files = [
-                f for f in os.listdir(batch_dir) if f.endswith(".parquet")
-            ]
             n_admitted = (
-                self.spark.read.parquet(batch_dir).count() if part_files else 0
+                self.spark.read.parquet(batch_dir).count()
+                if parquet_files(batch_dir)
+                else 0
             )
         else:
             n_admitted = obs_admitted.get["n"]
@@ -211,8 +201,8 @@ class CorpusIngestPipeline:
         Write-temp-then-rename (ADVICE r12 #2): pyarrow writes in place,
         so a crash mid-write would leave a torn half-file that breaks
         every subsequent metrics() read. Writing under a dot-prefixed
-        ``.inprogress`` name (skipped by ``_read_or_empty``'s
-        ``.parquet`` suffix filter) and ``os.rename``-ing — atomic on
+        ``.inprogress`` name (skipped by ``parquet_files``' suffix and
+        dot-prefix filter) and ``os.rename``-ing — atomic on
         POSIX within one directory — means readers only ever see
         complete files."""
         import uuid
@@ -243,21 +233,10 @@ class CorpusIngestPipeline:
         return fn
 
     def _read_or_empty(self, path: str, schema: str | None = None) -> DataFrame:
-        # skip Spark's in-flight task output (_temporary attempt dirs)
-        # and dot/underscore metadata — a crashed write must never leak
-        # torn part files into a reader's explicit file list (r13)
-        files = []
-        if os.path.isdir(path):
-            for dirpath, dirs, names in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                files.extend(
-                    os.path.join(dirpath, n)
-                    for n in names
-                    if n.endswith(".parquet") and not n.startswith(("_", "."))
-                )
+        files = parquet_files(path)
         if not files:
             return empty_df(self.spark, schema or _METRICS_SCHEMA)
-        return self.spark.read.parquet(*sorted(files))
+        return self.spark.read.parquet(*files)
 
     def corpus(self, schema: str | None = None) -> DataFrame:
         """The admitted corpus as of now."""

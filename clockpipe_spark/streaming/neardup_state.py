@@ -14,29 +14,10 @@ this operator is that state layer.
   candidate pairs, and ``shorts`` (id, text_hash) for docs too short to
   shingle. Appending a batch is a blind write — no rewrite of history
   (contrast: the replica store's merge path).
-- The sig log is id-bucketed LSM (r13), mirroring the band log: loose
-  appends carry ``sig_bucket = pmod(id, n_sig_buckets)``, compaction
-  folds into ``sig_bucket=K`` dirs, and the three per-batch sig reads
-  (verify join on colliding old_ids, replay anti-join on batch ids,
-  the corpus layer's redelivery filter) each prune to the dirs their
-  KNOWN id set hashes into. Without this every batch re-scanned the
-  corpus-sized sig log (measured: +1.3 s/batch per 1M history docs,
-  the one O(corpus) per-batch term left after the r12 band rework).
-- The band log is LSM-shaped (r12): each batch APPENDS loose top-level
-  files (one plain parquet write — no hive-commit cost), and once the
-  loose set exceeds ``compact_after_files`` a compaction folds it into
-  the BUCKETED layout (hive ``band_bucket=K`` dirs keyed on
-  ``pmod(band_hash, n_band_buckets)``). The per-batch probe reads the
-  pruned bucket dirs (bulk history — file-level pruning before any row
-  is scanned, the same economics as partition pruning on a 100 TB
-  table) plus the bounded loose set (recent appends). Rationale: a
-  64-dir dynamic-partition append costs ~1.4 s of commit protocol per
-  batch at ANY batch size (measured sf0.1: 1.57 s hive vs 0.15 s plain
-  for the same rows) — a fixed per-batch tax the compaction amortizes
-  across ``compact_after_files`` batches. Crash between compaction
-  write and loose-file delete leaves duplicate band rows, which the
-  candidate join's dropDuplicates absorbs (at-least-once, like every
-  other append here).
+- The band and sig logs are two instances of one bucketed LSM log
+  (``_BucketedLog``): bands bucket on ``band_hash`` (the probe prunes
+  to the buckets the batch's hashes fall into), sigs on ``id`` (the
+  verify join prunes to the buckets of the colliding old ids).
 - The probe itself is an equi-join of the batch's band hashes against
   those buckets — linear in batch size + collisions, never all-pairs.
 - Docs with < 3 tokens produce no shingles, hence no MinHash signature;
@@ -50,11 +31,9 @@ this operator is that state layer.
 
 from __future__ import annotations
 
-import logging
 import os
 
-from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clockpipe_spark.operators.neardup import (
@@ -84,6 +63,163 @@ def empty_df(spark: SparkSession, schema: str) -> DataFrame:
     )
 
 
+def parquet_files(path: str) -> list[str]:
+    """Parquet data files under ``path``, sorted, EXCLUDING in-flight
+    Spark task output: a crashed write leaves partial part files under
+    ``_temporary/`` attempt dirs that Spark's own directory reader
+    skips — an explicit file list must skip them too, or a replay after
+    a mid-write crash reads torn/duplicate state rows (r13). Dot- and
+    underscore-prefixed names (checksums, ``_SUCCESS``, in-progress
+    temp files) are skipped the same way."""
+    files = []
+    for dirpath, dirs, names in os.walk(path):
+        # prune metadata/attempt dirs in place (os.walk contract)
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files.extend(
+            os.path.join(dirpath, n)
+            for n in names
+            if n.endswith(".parquet") and not n.startswith(("_", "."))
+        )
+    return sorted(files)
+
+
+class _BucketedLog:
+    """One LSM-shaped state log (r12 bands, r13 sigs). Each batch
+    APPENDS a handful of loose top-level files (one plain parquet write
+    — no hive-commit cost) carrying ``bucket_col = pmod(key_col,
+    n_buckets)`` as a sorted column; once the loose set exceeds
+    ``compact_after_files`` a compaction folds it into hive
+    ``<bucket_col>=K`` dirs. A read that knows its bucket set lists only
+    those dirs (file-level pruning before any row is scanned, the same
+    economics as partition pruning on a 100 TB table) plus the bounded
+    loose set (recent appends), which is always read.
+
+    Rationale: a 64-dir dynamic-partition append costs ~1.4 s of commit
+    protocol per batch at ANY batch size (measured sf0.1: 1.57 s hive vs
+    0.15 s plain for the same rows) — a fixed per-batch tax compaction
+    amortizes across ``compact_after_files`` batches. Without bucket
+    pruning the sig reads re-scanned the corpus-sized sig log every
+    batch (measured: +1.3 s/batch per 1M history docs).
+
+    Compaction writes, then deletes the loose files: a crash between
+    the two leaves duplicate rows (both copies readable), never missing
+    ones — the candidate join's dropDuplicates and admitted_ids()'s
+    distinct absorb them (at-least-once, like every other append here).
+    ``sort_col`` orders rows inside each compacted bucket."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        schema: str,
+        bucket_col: str,
+        key_col: str,
+        n_buckets: int,
+        sort_col: str | None = None,
+    ):
+        self.spark = spark
+        self.path = path
+        self.schema = schema
+        self.bucket_col = bucket_col
+        self.key_col = key_col
+        self.n_buckets = n_buckets
+        self.sort_col = sort_col
+
+    def bucket(self, col: str | None = None, n_buckets: int | None = None) -> Column:
+        """Bucket id of ``col`` (default: the key) under ``n_buckets``."""
+        return F.pmod(
+            F.col(col or self.key_col), F.lit(n_buckets or self.n_buckets)
+        ).cast("int")
+
+    def files(self, buckets: list[int] | None = None) -> list[str]:
+        """Files of the given bucket ids (None = all); loose files are
+        always included."""
+        files = parquet_files(self.path)
+        if buckets is None:
+            return files
+        allowed = {f"{self.bucket_col}={b}" + os.sep for b in buckets}
+        return [
+            f
+            for f in files
+            if f"{self.bucket_col}=" not in f or any(a in f for a in allowed)
+        ]
+
+    def loose_files(self) -> list[str]:
+        """Files not yet folded into the bucketed layout."""
+        return self.files([])
+
+    def append(self, rows: DataFrame) -> None:
+        """One batch's rows as a few loose files, sorted by bucket."""
+        (
+            rows.withColumn(self.bucket_col, self.bucket())
+            .coalesce(4)
+            .sortWithinPartitions(self.bucket_col)
+            .write.mode("append")
+            .parquet(self.path)
+        )
+
+    def _write_bucketed(self, files: list[str], target: str, mode: str, n_buckets: int) -> None:
+        # the bucket is recomputed from the key (not read from the
+        # files): correct for loose files without the column, and tracks
+        # the target bucket count
+        rows = (
+            self.spark.read.schema(self.schema)
+            .parquet(*files)
+            .withColumn(self.bucket_col, self.bucket(n_buckets=n_buckets))
+            .repartition(F.col(self.bucket_col))
+        )
+        if self.sort_col:
+            rows = rows.sortWithinPartitions(self.sort_col)
+        rows.write.mode(mode).partitionBy(self.bucket_col).parquet(target)
+
+    def compact(self, after_files: int, force: bool = False) -> int:
+        """Fold the loose files into the bucketed layout once there are
+        more than ``after_files`` of them (or always, with ``force``);
+        returns the number of loose files compacted."""
+        loose = self.loose_files()
+        if not loose or (not force and len(loose) <= after_files):
+            return 0
+        self._write_bucketed(loose, self.path, "append", self.n_buckets)
+        for f in loose:
+            os.remove(f)
+        return len(loose)
+
+    def resize(self, n_buckets: int) -> None:
+        """Rewrite the whole log under ``n_buckets`` into a staged dir
+        and swap it in (offline; see StreamingNearDup.resize_buckets)."""
+        import shutil
+
+        staged = self.path + ".resize"
+        old = self.path + ".old"
+        # Crash recovery BEFORE anything else (ADVICE r13 #1): a prior
+        # resize that died between rename(path, old) and rename(staged,
+        # path) leaves path ABSENT with the full history parked in .old
+        # (and a complete copy in .resize). Without this restore, the
+        # empty-log check below would treat the log as empty,
+        # 'succeed', and orphan all history — silent duplicate misses.
+        # Restoring .old (the pre-resize original) is always correct;
+        # .resize is only adopted when .old is gone too (not reachable
+        # by a crash of this protocol, but defensively: it is a complete
+        # rewrite of the log, so adopting it loses nothing).
+        if not os.path.isdir(self.path):
+            if os.path.isdir(old):
+                os.rename(old, self.path)
+            elif os.path.isdir(staged):
+                os.rename(staged, self.path)
+        files = parquet_files(self.path)
+        if files:
+            shutil.rmtree(staged, ignore_errors=True)
+            self._write_bucketed(files, staged, "overwrite", n_buckets)
+            shutil.rmtree(old, ignore_errors=True)
+            os.rename(self.path, old)
+            os.rename(staged, self.path)
+            # delete the original only once the swap is verifiably in
+            # place (rename is atomic; this check makes the intent loud)
+            if parquet_files(self.path):
+                shutil.rmtree(old)
+        self.n_buckets = n_buckets
+
+
 class StreamingNearDup:
     """foreachBatch-compatible cross-batch near-dup filter."""
 
@@ -100,20 +236,52 @@ class StreamingNearDup:
         prune_verify_bytes: int = 256 << 20,
     ):
         self.spark = spark
-        self.bands_dir = os.path.join(root, "bands")
-        self.sigs_dir = os.path.join(root, "sigs")
+        self._bands = _BucketedLog(
+            spark,
+            os.path.join(root, "bands"),
+            _BANDS_SCHEMA,
+            "band_bucket",
+            "band_hash",
+            n_band_buckets,
+        )
+        # sorted by id so every row group carries tight min/max id
+        # stats — what makes _sig_id_history's range filter skip
+        # compacted history at the scan
+        self._sigs = _BucketedLog(
+            spark,
+            os.path.join(root, "sigs"),
+            _SIGS_SCHEMA,
+            "sig_bucket",
+            "id",
+            n_sig_buckets,
+            sort_col="id",
+        )
+        self.bands_dir = self._bands.path
+        self.sigs_dir = self._sigs.path
         self.shorts_dir = os.path.join(root, "shorts")
         self.n_hashes = n_hashes
         self.n_bands = n_bands
         self.threshold = threshold
-        self.n_band_buckets = n_band_buckets
         self.compact_after_files = compact_after_files
-        self.n_sig_buckets = n_sig_buckets
         # sig-log size past which the verify join switches from the
         # lazy full-log plan to checkpoint-cand + bucket-pruned reads
         self.prune_verify_bytes = prune_verify_bytes
         os.makedirs(root, exist_ok=True)
         self._pin_layout(root)
+
+    @property
+    def n_band_buckets(self) -> int:
+        return self._bands.n_buckets
+
+    @property
+    def n_sig_buckets(self) -> int:
+        return self._sigs.n_buckets
+
+    def _layout(self) -> dict[str, int]:
+        return {
+            "n_band_buckets": self.n_band_buckets,
+            "n_sig_buckets": self.n_sig_buckets,
+        }
 
     def _pin_layout(self, root: str) -> None:
         """Refuse to open an existing store with different bucket
@@ -135,10 +303,7 @@ class StreamingNearDup:
                 "completion on a store opened with the OLD counts after "
                 "removing the marker, or rebuild the store."
             )
-        want = {
-            "n_band_buckets": self.n_band_buckets,
-            "n_sig_buckets": self.n_sig_buckets,
-        }
+        want = self._layout()
         if os.path.exists(layout_path):
             with open(layout_path) as f:
                 have = json.load(f)
@@ -162,14 +327,7 @@ class StreamingNearDup:
             # hand (or rebuilds). Loose-only stores are safe to pin:
             # probes always read loose files unpruned, and compaction
             # recomputes buckets under the pinned counts.
-            def _has_bucketed(d: str, key: str) -> bool:
-                return os.path.isdir(d) and any(
-                    name.startswith(key + "=") for name in os.listdir(d)
-                )
-
-            if _has_bucketed(self.bands_dir, "band_bucket") or _has_bucketed(
-                self.sigs_dir, "sig_bucket"
-            ):
+            if any(log.files() != log.files([]) for log in (self._bands, self._sigs)):
                 raise ValueError(
                     f"StreamingNearDup store at {root} contains bucketed "
                     "state dirs but no _layout.json — the bucket counts "
@@ -178,10 +336,15 @@ class StreamingNearDup:
                     "duplicates. Write _layout.json with the counts the "
                     "store was built with, or rebuild the store."
                 )
-            tmp = layout_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(want, f)
-            os.replace(tmp, layout_path)
+            self._write_layout()
+
+    def _write_layout(self) -> None:
+        import json
+
+        path = os.path.join(self._root, "_layout.json")
+        with open(path + ".tmp", "w") as f:
+            json.dump(self._layout(), f)
+        os.replace(path + ".tmp", path)
 
     def resize_buckets(
         self,
@@ -191,8 +354,9 @@ class StreamingNearDup:
         """OFFLINE full-layout migration to new bucket counts — the
         sanctioned way to grow n_band_buckets as the corpus grows (the
         10M-history A/B: probe 6.9-8.8 s at 64 buckets vs 1.1-1.9 s at
-        4096). Rewrites each log under the new bucket dirs and swaps it
-        in; must not run concurrently with process_batch.
+        4096). Rewrites each log under the new bucket dirs (the
+        compaction write) and swaps it in; must not run concurrently
+        with process_batch.
 
         Crash protocol: a ``_layout.json.resizing`` marker is written
         first and removed last — any crash leaves the marker, and the
@@ -200,126 +364,23 @@ class StreamingNearDup:
         re-run or the store rebuilt. Loud and recoverable, never a
         silent miss."""
         import json
-        import shutil
 
         nbb = n_band_buckets or self.n_band_buckets
         nsb = n_sig_buckets or self.n_sig_buckets
-        layout_path = os.path.join(self._root, "_layout.json")
-        marker = layout_path + ".resizing"
+        marker = os.path.join(self._root, "_layout.json.resizing")
         with open(marker, "w") as f:
             json.dump({"n_band_buckets": nbb, "n_sig_buckets": nsb}, f)
-
-        def rewrite(log_dir, schema, bucket_col, bucket_expr, sort_col):
-            staged = log_dir + ".resize"
-            old = log_dir + ".old"
-            # Crash recovery BEFORE anything else (ADVICE r13 #1): a
-            # prior resize that died between rename(log_dir, old) and
-            # rename(staged, log_dir) leaves log_dir ABSENT with the
-            # full history parked in .old (and a complete copy in
-            # .resize). Without this restore, the empty-log early
-            # return below would treat the log as empty, 'succeed', and
-            # orphan all history — silent duplicate misses. Restoring
-            # .old (the pre-resize original) is always correct; .resize
-            # is only adopted when .old is gone too (not reachable by a
-            # crash of this protocol, but defensively: it is a complete
-            # rewrite of the log, so adopting it loses nothing).
-            if not os.path.isdir(log_dir):
-                if os.path.isdir(old):
-                    os.rename(old, log_dir)
-                elif os.path.isdir(staged):
-                    os.rename(staged, log_dir)
-            files = self._files(log_dir)
-            if not files:
-                return
-            shutil.rmtree(staged, ignore_errors=True)
-            (
-                self.spark.read.schema(schema)
-                .parquet(*files)
-                .withColumn(bucket_col, bucket_expr)
-                .repartition(F.col(bucket_col))
-                .sortWithinPartitions(sort_col)
-                .write.mode("overwrite")
-                .partitionBy(bucket_col)
-                .parquet(staged)
-            )
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(log_dir, old)
-            os.rename(staged, log_dir)
-            # delete the original only once the swap is verifiably in
-            # place (rename is atomic; this check makes the intent loud)
-            if self._files(log_dir):
-                shutil.rmtree(old)
-
-        rewrite(
-            self.bands_dir,
-            _BANDS_SCHEMA,
-            "band_bucket",
-            F.pmod(F.col("band_hash"), F.lit(nbb)).cast("int"),
-            "band_hash",
-        )
-        rewrite(
-            self.sigs_dir,
-            _SIGS_SCHEMA,
-            "sig_bucket",
-            F.pmod(F.col("id"), F.lit(nsb)).cast("int"),
-            "id",
-        )
-        self.n_band_buckets = nbb
-        self.n_sig_buckets = nsb
-        tmp = layout_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"n_band_buckets": nbb, "n_sig_buckets": nsb}, f)
-        os.replace(tmp, layout_path)
+        self._bands.resize(nbb)
+        self._sigs.resize(nsb)
+        self._write_layout()
         os.remove(marker)
 
     def _files(self, path: str) -> list[str]:
-        """Parquet data files under ``path``, EXCLUDING in-flight Spark
-        task output: a crashed write leaves partial part files under
-        ``_temporary/`` attempt dirs that Spark's own directory reader
-        skips — an explicit file list must skip them too, or a replay
-        after a mid-write crash reads torn/duplicate state rows (r13)."""
-        files = []
-        for dirpath, dirs, names in os.walk(path):
-            # prune metadata/attempt dirs in place (os.walk contract)
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            files.extend(
-                os.path.join(dirpath, n)
-                for n in names
-                if n.endswith(".parquet") and not n.startswith(("_", "."))
-            )
-        return sorted(files)
-
-    @staticmethod
-    def _pruned(
-        files: list[str], key: str, buckets: list[int] | None
-    ) -> list[str]:
-        """Keep files under ``key=<b>`` dirs for the given buckets (None
-        = all); loose files (not yet compacted, or pre-bucketing state
-        layouts) are always included for backward compatibility."""
-        if buckets is None:
-            return files
-        allowed = {f"{key}={b}" + os.sep for b in buckets}
-        return [
-            f
-            for f in files
-            if f"{key}=" not in f or any(a in f for a in allowed)
-        ]
+        return parquet_files(path)
 
     def _band_files(self, buckets: list[int] | None) -> list[str]:
         """Band-log files for the given band_hash-bucket ids."""
-        return self._pruned(self._files(self.bands_dir), "band_bucket", buckets)
-
-    def _sig_files(self, buckets: list[int] | None) -> list[str]:
-        """Sig-log files for the given id-bucket (pmod(id, n_sig_buckets))
-        ids. The sig log is LSM-shaped like the band log (r13): loose
-        appends carry ``sig_bucket`` as a sorted column, compaction
-        folds them into ``sig_bucket=K`` hive dirs, and every per-batch
-        read that knows its id set prunes to the touched dirs — without
-        this, the replay anti-join and the verify join re-scan the FULL
-        corpus-sized sig log every batch (measured: +1.3 s/batch per 1M
-        history docs — linear in history, the one O(corpus) term the
-        r12 band-log rework left behind)."""
-        return self._pruned(self._files(self.sigs_dir), "sig_bucket", buckets)
+        return self._bands.files(buckets)
 
     def _id_buckets(self, df: DataFrame, col: str) -> list[int]:
         """Distinct pmod(col, n_sig_buckets) values — bounded by
@@ -328,11 +389,7 @@ class StreamingNearDup:
         realistic batch's own ids pmod-spread across every bucket."""
         return [
             r["b"]
-            for r in df.select(
-                F.pmod(F.col(col), F.lit(self.n_sig_buckets))
-                .cast("int")
-                .alias("b")
-            )
+            for r in df.select(self._sigs.bucket(col).alias("b"))
             .distinct()
             .collect()
         ]
@@ -386,7 +443,6 @@ class StreamingNearDup:
         exactly like the compaction crash window."""
         import time as _time
 
-        _trace = os.environ.get("SPARK_GRAFT_TRACE") == "1"
         _t0 = _time.perf_counter()
         # per-phase walls of the LAST batch, always recorded (r14): the
         # bench hist blocks publish them so compute-vs-load attribution
@@ -398,8 +454,6 @@ class StreamingNearDup:
             nonlocal _t0
             now = _time.perf_counter()
             self.last_phase_walls[label] = round(now - _t0, 3)
-            if _trace:
-                print(f"# nd-trace {label}: {now - _t0:.3f}s", flush=True)
             _t0 = now
 
         from pyspark.sql import Observation
@@ -414,8 +468,7 @@ class StreamingNearDup:
         # all_dup checkpoint. CAVEAT (measured): when the signature set
         # is EMPTY, AQE's empty-relation propagation prunes the
         # CollectMetrics node out of the re-optimized plan and the
-        # metric never arrives — obs_docs.get then raises, and the
-        # reader below falls back to the legacy probe path.
+        # metric never arrives — so it is read only when n_sig > 0.
         obs_docs = Observation()
         docs = docs.observe(obs_docs, F.count(F.lit(1)).alias("n"))
         sig = minhash_signatures(docs, id_col, text_col, self.n_hashes).cache()
@@ -429,11 +482,7 @@ class StreamingNearDup:
         # cached bands frame, so this is also what materializes the
         # sig+bands caches.
         stats = bands.agg(
-            F.collect_set(
-                F.pmod(F.col("band_hash"), F.lit(self.n_band_buckets)).cast(
-                    "int"
-                )
-            ).alias("bb"),
+            F.collect_set(self._bands.bucket()).alias("bb"),
             F.min("id").alias("lo"),
             F.max("id").alias("hi"),
             # band rows are exactly n_bands per signature row, so the
@@ -481,13 +530,13 @@ class StreamingNearDup:
         # join re-scans the corpus-sized sig log every batch. Below the
         # gate the lazy single-job plan is cheaper than the extra
         # checkpoint wall (bench-scale ingest is fixed-cost-bound).
-        sig_log_files = self._files(self.sigs_dir)
+        sig_log_files = self._sigs.files()
         sig_log_bytes = sum(os.path.getsize(f) for f in sig_log_files)
         if sig_log_bytes > self.prune_verify_bytes:
             cand = cand.localCheckpoint(eager=True)
             old_buckets = self._id_buckets(cand, "old_id")
             hist_sigs_verify = self._history_df(
-                self._sig_files(old_buckets), _SIGS_SCHEMA
+                self._sigs.files(old_buckets), _SIGS_SCHEMA
             )
         else:
             hist_sigs_verify = self._history_df(sig_log_files, _SIGS_SCHEMA)
@@ -516,23 +565,10 @@ class StreamingNearDup:
         # n_short = observed doc count minus the stats job's signature
         # count (r20) — zero extra jobs — and when the batch has no
         # short docs the whole shorts subplan is elided from this
-        # batch's plans. n_short None = observation pruned (empty-sig
-        # batch, see above): build the shorts subplan and fall back to
-        # the legacy probe, which is exactly the pre-r20 behavior.
-        try:
-            n_short = obs_docs.get["n"] - n_sig
-        except Py4JJavaError:
-            # narrowed from bare Exception (VERDICT r20 #8): the pruned-
-            # CollectMetrics failure surfaces as the JVM-side toPyRow
-            # call raising; anything else (e.g. a renamed metric would
-            # raise KeyError above) should propagate, not silently run
-            # the slow legacy path forever
-            logging.getLogger(__name__).warning(
-                "neardup_state: doc-count observation pruned "
-                "(empty-signature batch) — falling back to the legacy "
-                "shorts probe for this batch"
-            )
-            n_short = None
+        # batch's plans. An empty-signature batch (n_sig == 0) has no
+        # observed count (see above): n_short stays None, the shorts
+        # subplan is built, and a limit(1) probe decides its append.
+        n_short = obs_docs.get["n"] - n_sig if n_sig else None
         shorts = None
         admitted_shorts = None
         dup_short_parts = []
@@ -609,12 +645,8 @@ class StreamingNearDup:
                 hist_shorts.select("id"), "id", "left_anti"
             )
 
-        # State-append discipline (r12, LSM): every log appends as a
-        # handful of PLAIN top-level files — the hive partitionBy append
-        # the bands log used before cost ~1.4 s/batch of dynamic-
-        # partition commit protocol regardless of batch size. Loose band
-        # files carry band_bucket as a sorted COLUMN; compact_bands()
-        # periodically folds them into the pruned band_bucket=K layout.
+        # Every log appends a handful of PLAIN loose files (see
+        # _BucketedLog); compaction folds the band and sig logs later.
         #
         # Commit ORDERING (r13, ADVICE r12 #1): the sigs append is the
         # batch's COMMIT MARKER and must be the last state write.
@@ -658,37 +690,8 @@ class StreamingNearDup:
             all_dup.withColumnRenamed("id", id_col), id_col, "left_anti"
         )
 
-        def w_sigs() -> None:
-            (
-                admitted_sig.withColumn(
-                    "sig_bucket",
-                    F.pmod(F.col("id"), F.lit(self.n_sig_buckets)).cast("int"),
-                )
-                .coalesce(4)
-                .sortWithinPartitions("sig_bucket")
-                .write.mode("append")
-                .parquet(self.sigs_dir)
-            )
-
         def w_bands() -> None:
-            (
-                band_hashes(admitted_sig, self.n_hashes, self.n_bands)
-                .withColumn(
-                    "band_bucket",
-                    F.pmod(F.col("band_hash"), F.lit(self.n_band_buckets)).cast(
-                        "int"
-                    ),
-                )
-                .coalesce(4)
-                .sortWithinPartitions("band_bucket")
-                .write.mode("append")
-                .parquet(self.bands_dir)
-            )
-
-        def w_shorts() -> None:
-            admitted_shorts.coalesce(4).write.mode("append").parquet(
-                self.shorts_dir
-            )
+            self._bands.append(band_hashes(admitted_sig, self.n_hashes, self.n_bands))
 
         def w_out() -> None:
             out_holder["out"] = lazy_out.localCheckpoint(eager=True)
@@ -708,16 +711,19 @@ class StreamingNearDup:
             f_out = pool.submit(w_out)  # not a state write — overlaps commits
             # n_short from the stats job (r20) skips the empty append
             # job (~0.4 s of commit protocol) for all-long-doc batches
-            # with no probe job at all (was a ~0.1 s limit(1).count()
-            # on the cached shorts frame); the legacy probe remains the
-            # fallback when the observation was pruned (empty-sig batch)
+            # with no probe job at all; an empty-signature batch probes
+            # its cached shorts frame instead
             if (
                 n_short > 0
                 if n_short is not None
                 else shorts.limit(1).count()
             ):
-                w_shorts()  # only after downstream stores are durable
-            w_sigs()  # commit marker: only after every other write landed
+                # only after downstream stores are durable
+                admitted_shorts.coalesce(4).write.mode("append").parquet(
+                    self.shorts_dir
+                )
+            # commit marker: only after every other write landed
+            self._sigs.append(admitted_sig)
             f_out.result()
         _mark("shorts_sigs_out")
 
@@ -733,79 +739,17 @@ class StreamingNearDup:
 
     def loose_band_files(self) -> list[str]:
         """Band-log files not yet folded into the bucketed layout."""
-        return [
-            f for f in self._files(self.bands_dir) if "band_bucket=" not in f
-        ]
-
-    def loose_sig_files(self) -> list[str]:
-        """Sig-log files not yet folded into the bucketed layout."""
-        return [
-            f for f in self._files(self.sigs_dir) if "sig_bucket=" not in f
-        ]
+        return self._bands.loose_files()
 
     def compact_bands(self, force: bool = False) -> int:
-        """Fold loose band appends into the ``band_bucket=K`` hive layout
-        once their count exceeds ``compact_after_files`` (or always,
-        with ``force``); returns the number of loose files compacted.
-
-        The write-then-delete order makes a crash window leave duplicate
-        band rows (both copies readable), never missing ones — the
-        candidate join dedups pairs, so duplicates cost only wasted
-        probe reads until the next compaction."""
-        loose = self.loose_band_files()
-        if not loose or (not force and len(loose) <= self.compact_after_files):
-            return 0
-        # band_bucket is recomputed from band_hash (not read from the
-        # loose files): correct even for legacy loose files without the
-        # column, and tracks the CURRENT n_band_buckets.
-        (
-            self.spark.read.schema(_BANDS_SCHEMA)
-            .parquet(*loose)
-            .withColumn(
-                "band_bucket",
-                F.pmod(F.col("band_hash"), F.lit(self.n_band_buckets)).cast("int"),
-            )
-            .repartition(F.col("band_bucket"))
-            .write.mode("append")
-            .partitionBy("band_bucket")
-            .parquet(self.bands_dir)
-        )
-        for f in loose:
-            os.remove(f)
-        return len(loose)
+        """Fold loose band appends into the ``band_bucket=K`` layout
+        (see _BucketedLog.compact); returns the files compacted."""
+        return self._bands.compact(self.compact_after_files, force)
 
     def compact_sigs(self, force: bool = False) -> int:
-        """Fold loose sig appends into the ``sig_bucket=K`` hive layout
-        once their count exceeds ``compact_after_files`` (or always,
-        with ``force``); returns the number of loose files compacted.
-        Same crash contract as compact_bands: write-then-delete leaves
-        duplicate rows at worst, and admitted_ids()'s distinct() (plus
-        the anti-joins' semantics) absorb duplicates."""
-        loose = self.loose_sig_files()
-        if not loose or (not force and len(loose) <= self.compact_after_files):
-            return 0
-        # sig_bucket is recomputed from id (not read from the loose
-        # files): correct even for legacy loose files without the
-        # column, and tracks the CURRENT n_sig_buckets.
-        (
-            self.spark.read.schema(_SIGS_SCHEMA)
-            .parquet(*loose)
-            .withColumn(
-                "sig_bucket",
-                F.pmod(F.col("id"), F.lit(self.n_sig_buckets)).cast("int"),
-            )
-            .repartition(F.col("sig_bucket"))
-            # sorted by id so every row group carries tight min/max id
-            # stats — what makes _sig_id_history's range filter skip
-            # compacted history at the scan
-            .sortWithinPartitions("id")
-            .write.mode("append")
-            .partitionBy("sig_bucket")
-            .parquet(self.sigs_dir)
-        )
-        for f in loose:
-            os.remove(f)
-        return len(loose)
+        """Fold loose sig appends into the ``sig_bucket=K`` layout
+        (see _BucketedLog.compact); returns the files compacted."""
+        return self._sigs.compact(self.compact_after_files, force)
 
     def admitted_ids(
         self, id_range: tuple | None = None, distinct: bool = True

@@ -1,21 +1,32 @@
-"""Replay contract at the replica store's commit boundaries: a manifest
-commit that raises once — after its data files were written — is
-retried by the run loop without advancing the cursor, and every
-table's FINAL view ends equal to a clean run's, on a one-bucket and a
-4-bucket store."""
+"""Replay contract at the commit boundaries of the replica store and of
+the corpus ingest.
+
+Replica store: a manifest commit that raises once — after its data
+files were written — is retried by the run loop without advancing the
+cursor, and every table's FINAL view ends equal to a clean run's, on a
+one-bucket and a 4-bucket store.
+
+Corpus ingest: one write at each state-log or corpus boundary raises
+once (after one write at that point has landed); replaying the failed
+batch under the same ``batch_id`` ends with the same corpus, admitted
+ids and per-batch admitted counts as a clean run."""
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 import threading
 from datetime import datetime, timedelta
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from clockpipe_spark.config import PipeConfig, SourceTable, TableOptions
 from clockpipe_spark.streaming.bucketed_replica import BucketedReplicaStore
+from clockpipe_spark.streaming.corpus_ingest import CorpusIngestPipeline
+from clockpipe_spark.streaming.neardup_state import StreamingNearDup
 from clockpipe_spark.streaming.rollup import ContinuousRollup
 from clockpipe_spark.sync_job import SyncJob, run_sync_loop
 
@@ -149,3 +160,178 @@ def test_commit_fault_resumes_to_clean_state(
         clean_runs[key] = run(spark, str(tmp_path / "clean"), buckets)
     got = run(spark, str(tmp_path / "faulty"), buckets, monkeypatch, when)
     assert got == clean_runs[key]
+
+
+# -- corpus ingest ---------------------------------------------------------------
+class _InjectedFault(OSError):
+    pass
+
+
+def _long_doc(rng: random.Random) -> str:
+    """60 lowercase alphabetic words: passes every C4 gate check."""
+    return " ".join(
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(4, 8)))
+        for _ in range(60)
+    )
+
+
+def _near(text: str) -> str:
+    """One word swapped: a near-duplicate at threshold 0.5."""
+    words = text.split()
+    words[30] = "zzzzzz"
+    return " ".join(words)
+
+
+def _ingest_batches() -> list[list[tuple[int, str]]]:
+    """Long docs with planted exact, near and intra-batch copies, plus a
+    short doc per batch that the quality gate drops."""
+    rng = random.Random(11)
+    d = [_long_doc(rng) for _ in range(10)]
+    return [
+        [(0, d[0]), (1, d[1]), (2, d[2]), (3, d[3]), (4, "too short")],
+        [(10, _near(d[1])), (11, d[2]), (12, d[4]), (13, d[5]), (14, "too short")],
+        [(20, _near(d[4])), (21, d[6]), (22, d[7]), (23, _near(d[7])), (24, "hi")],
+        [(30, d[8]), (31, d[6]), (32, d[9])],
+    ]
+
+
+def _state_batches() -> list[list[tuple[int, str]]]:
+    """Dedup-layer batches mixing long docs and docs too short to
+    shingle (< 3 tokens), which take the exact-hash shorts path."""
+    rng = random.Random(13)
+    d = [_long_doc(rng) for _ in range(4)]
+    return [
+        [(1, d[0]), (2, d[1]), (3, "hi"), (4, "ok then")],
+        [(5, _near(d[0])), (6, d[2]), (7, "hi"), (8, "yo")],
+        [(9, " HI "), (10, d[3]), (11, "yo"), (12, "new one")],
+    ]
+
+
+class _OneWriteFault:
+    """Makes one state-log or corpus write raise once, after one write
+    at that point has landed. ``kind == "write"`` raises in place of the
+    second ``DataFrameWriter.parquet`` call that ``match(path,
+    compacting)`` selects; ``kind == "remove"`` lets that second write
+    (a compaction's bucketed write) land and raises at the first
+    ``os.remove`` under ``remove_under`` after it — the window between
+    a compaction's write and its deletes."""
+
+    def __init__(self, monkeypatch, kind, match, remove_under=None):
+        self.fired = False
+        self.armed = False
+        self.seen = 0
+        lock = threading.Lock()  # the band append and pre_commit run on pool threads
+        real_parquet = DataFrameWriter.parquet
+        real_remove = os.remove
+
+        def parquet(writer, path, *args, **kwargs):
+            with lock:
+                if not self.fired and match(path, _compacting()):
+                    self.seen += 1
+                    if self.seen == 2 and kind == "write":
+                        self.fired = True
+                        raise _InjectedFault(f"injected write failure at {path}")
+                    self.armed = self.seen == 2
+            return real_parquet(writer, path, *args, **kwargs)
+
+        def remove(path, *args, **kwargs):
+            if self.armed and not self.fired and path.startswith(remove_under + os.sep):
+                self.fired = True
+                raise _InjectedFault(f"injected failure before deleting {path}")
+            return real_remove(path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        monkeypatch.setattr(os, "remove", remove)
+
+
+def _compacting() -> bool:
+    """Whether the current write runs inside a log compaction."""
+    f = sys._getframe(2)
+    while f is not None:
+        if f.f_code.co_name.startswith("compact"):
+            return True
+        f = f.f_back
+    return False
+
+
+def _replaying(step):
+    """Run ``step()``; after an injected fault, run it once more — the
+    at-least-once redelivery of the same batch."""
+    try:
+        return step()
+    except _InjectedFault:
+        return step()
+
+
+def _ingest_run(spark, root, fault=None, monkeypatch=None):
+    pipe = CorpusIngestPipeline(spark, root, threshold=0.5, compact_after_files=1)
+    nd = pipe.neardup
+    injector = fault and fault(monkeypatch, pipe, nd)
+    for batch_id, rows in enumerate(_ingest_batches()):
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        _replaying(lambda: pipe.process_batch(docs, batch_id=batch_id))
+    assert injector is None or injector.fired, "the injection point was never reached"
+    return {
+        "corpus": sorted(r["doc_id"] for r in pipe.corpus("doc_id long, text string").collect()),
+        "admitted": sorted(r["id"] for r in nd.admitted_ids().collect()),
+        "n_admitted": sorted(
+            (r["batch_id"], r["n_admitted"]) for r in pipe.metrics().collect()
+        ),
+    }
+
+
+def _state_run(spark, root, fault=None, monkeypatch=None):
+    nd = StreamingNearDup(spark, root, threshold=0.5, compact_after_files=1)
+    injector = fault and fault(monkeypatch, None, nd)
+    per_batch = []
+    for rows in _state_batches():
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        out = _replaying(lambda: nd.process_batch(docs))
+        per_batch.append(sorted(r["doc_id"] for r in out.collect()))
+    assert injector is None or injector.fired, "the injection point was never reached"
+    return {
+        "admitted": sorted(r["id"] for r in nd.admitted_ids().collect()),
+        "per_batch": per_batch,
+    }
+
+
+def _append_to(log):
+    """The per-batch append to one state log (not its compaction)."""
+    return lambda mp, pipe, nd: _OneWriteFault(
+        mp, "write", lambda path, compacting: path == getattr(nd, log) and not compacting
+    )
+
+
+def _compaction_of(log):
+    """A compaction of one state log, between its write and its deletes."""
+    return lambda mp, pipe, nd: _OneWriteFault(
+        mp,
+        "remove",
+        lambda path, compacting: path == getattr(nd, log) and compacting,
+        remove_under=getattr(nd, log),
+    )
+
+
+def _corpus_write(mp, pipe, nd):
+    """The pre_commit ``batch=<id>`` corpus write."""
+    prefix = os.path.join(pipe.corpus_dir, "batch=")
+    return _OneWriteFault(mp, "write", lambda path, _: path.startswith(prefix))
+
+
+INGEST_POINTS = {
+    "band_append": (_ingest_run, _append_to("bands_dir")),
+    "corpus_write": (_ingest_run, _corpus_write),
+    "shorts_append": (_state_run, _append_to("shorts_dir")),
+    "sigs_append": (_ingest_run, _append_to("sigs_dir")),
+    "band_compaction": (_ingest_run, _compaction_of("bands_dir")),
+    "sig_compaction": (_ingest_run, _compaction_of("sigs_dir")),
+}
+
+
+@pytest.mark.parametrize("point", list(INGEST_POINTS))
+def test_ingest_fault_replays_to_clean_state(spark, tmp_path, monkeypatch, clean_runs, point):
+    run, fault = INGEST_POINTS[point]
+    if run.__name__ not in clean_runs:
+        clean_runs[run.__name__] = run(spark, str(tmp_path / "clean"))
+    got = run(spark, str(tmp_path / "faulty"), fault, monkeypatch)
+    assert got == clean_runs[run.__name__]

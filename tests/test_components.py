@@ -36,6 +36,16 @@ def test_no_edges_all_singletons(spark):
     assert got == {5: 5, 6: 6, 7: 7}
 
 
+@pytest.mark.parametrize("fn", [connected_components, connected_components_star])
+def test_empty_edge_set(spark, fn):
+    assert _cc(spark, [5, 6, 7], [], fn=fn) == {5: 5, 6: 6, 7: 7}
+
+
+@pytest.mark.parametrize("fn", [connected_components, connected_components_star])
+def test_empty_vertex_and_edge_sets(spark, fn):
+    assert _cc(spark, [], [], fn=fn) == {}
+
+
 def test_cycle(spark):
     got = _cc(spark, [1, 2, 3], [(1, 2), (2, 3), (3, 1)])
     assert got == {1: 1, 2: 1, 3: 1}
