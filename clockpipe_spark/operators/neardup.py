@@ -1,13 +1,16 @@
 """Approximate near-duplicate detection: MinHash-LSH and SimHash.
 
-Two deliberately different execution styles:
+Both signatures are computed in one map-side Python pass over Arrow
+batches (no shuffle); only the pair joins run as Spark joins.
 
-- **MinHash** stays entirely JVM-side: shingle -> portable 32-bit hash
-  (md5 prefix, see ``portable_hash32``) -> 32 universal hash functions
-  ((a*h+b) mod p in 32-bit space so nothing overflows int64) -> per-doc
-  min per function (one groupBy with 32 partial-agg mins) -> band hashes
-  -> equi-join on (band, hash). At 100 TB this is the designed dedup
-  path: cost is linear in corpus + candidate pairs, never all-pairs.
+- **MinHash** (``with_minhash``): Spark tokenizes
+  (``split(trim(lower(text)), '\\s+')``), then one ``mapInArrow`` pass
+  takes distinct 3-word shingles -> portable 32-bit hash (md5 prefix,
+  see ``_minhash_batches``) -> 32 universal hash functions ((a*h+b) mod
+  p in 32-bit space so nothing overflows int64) -> per-doc numpy min per
+  function; then band hashes (SQL) -> equi-join on (band, hash). At 100 TB
+  this is the designed dedup path: cost is linear in corpus + candidate
+  pairs, never all-pairs, and the signature step shuffles nothing.
 
 - **SimHash** runs in mapInPandas (Arrow batches): per-doc 64-bit
   signature from md5-derived token hashes (deterministic across runs,
@@ -27,11 +30,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _P32 = 4294967311  # smallest prime > 2^32
-_MASK32 = (1 << 32) - 1
 
 # Signature frames cached by banded_hamming_pairs, kept so long-lived
 # sessions can release them: the cache manager dedupes by logical plan,
@@ -70,13 +74,13 @@ _SIG_CACHE_CAP = 64
 
 def release_signature_caches() -> int:
     """Unpersist every signature frame banded_hamming_pairs has cached
-    in this process; returns how many were released."""
+    in this process; returns how many were released. Frames of a
+    stopped session are only dropped from the registry: their cache
+    went with the session, and an unpersist there raises."""
     n = len(_SIG_CACHES)
     for df in _SIG_CACHES.values():
-        try:
+        if df.sparkSession.sparkContext._jsc is not None:
             df.unpersist()
-        except Exception:
-            pass  # session already stopped
     _SIG_CACHES.clear()
     return n
 
@@ -86,10 +90,7 @@ def _register_sig_cache(df: DataFrame) -> None:
     drop it; dedupe by semantic hash (repeat workloads share one JVM
     cache entry — and one registry slot), FIFO-evict past the backstop
     cap so the registry cannot itself leak in long-lived processes."""
-    try:
-        key = df.semanticHash()
-    except Exception:
-        key = id(df)  # session quirk — still tracked, still releasable
+    key = df.semanticHash()
     if key in _SIG_CACHES:
         return
     _SIG_CACHES[key] = df
@@ -108,32 +109,9 @@ def _register_sig_cache(df: DataFrame) -> None:
         )
 
 
-def portable_hash32(col):
-    """First 4 md5 bytes as a big-endian int in [0, 2^32).
-
-    Chosen over ``xxhash64`` (the r1-r9 seed hash) because BOTH engines
-    compute it natively — Spark ``conv(substring(md5(x),1,8),16,10)``,
-    DuckDB ``CAST('0x'||substring(md5(x),1,8) AS BIGINT)`` — which is
-    what makes the whole MinHash family oracle-pinnable at the driver
-    gate (VERDICT r9 directive #3). md5 is a JVM codegen builtin like
-    xxhash64; the swap trades a few ns/shingle map-side for a hash the
-    oracle can replay bit-for-bit, and recall tests are seed-agnostic.
-    """
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
-def portable_hash60(col):
-    """First 15 md5 hex chars (60 bits) as a non-negative bigint — the
-    band-key hash. 60 bits keeps the decimal rendering inside int64 for
-    both engines (16 chars could exceed 2^63 and null out under ANSI
-    casts); collision odds at 2^-60 per band pair are irrelevant next to
-    the est-Jaccard verification that follows the band join."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def _perm_params(n_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
-    # a, b < 2^31 so a*h32 + b < 2^63 — Spark runs ANSI mode and a long
-    # overflow inside the agg would abort the job
+    # a, b < 2^31 so a*h32 + b < 2^63: the family runs in plain int64
+    # arithmetic in numpy, and DuckDB replays it in BIGINT
     rng = random.Random(seed)
     return [
         (rng.randrange(1, 1 << 31), rng.randrange(0, 1 << 31))
@@ -157,89 +135,143 @@ def shingles_from_tokens(toks, k: int = 3):
     )
 
 
-def shingle_tokens(text_col, k: int = 3):
-    """Distinct k-word shingles (same tokenization as textops). Prefer
-    tokenizing into a column first + shingles_from_tokens in hot paths."""
-    return shingles_from_tokens(F.split(F.trim(F.lower(text_col)), r"\s+"), k)
+def tokens_sql(text_col: str = "text") -> str:
+    """SQL for a text's tokens, ``split(trim(lower(text)), '\\s+')``:
+    the one tokenization of the MinHash pass and the C4 quality gate."""
+    return f"split(trim(lower(`{text_col}`)), '\\\\s+')"
+
+
+# shingles per (shingle, hash function) matrix of the signature pass:
+# 2^15 x 32 int64 is 8 MB, so a large Arrow batch never builds one
+# matrix for all its docs
+_SHINGLE_BUDGET = 1 << 15
+
+
+def _minhash_batches(tokens_col: str, out_col: str, n_hashes: int):
+    """mapInArrow body: replace ``tokens_col`` (a doc's tokens) with
+    ``out_col``, the MinHash of the doc's distinct 3-word shingles (NULL
+    when it has none), passing the other columns through untouched.
+
+    A shingle is its 3 tokens joined by one space, as ``concat_ws``
+    joins them. It hashes to the first 4 md5 bytes of its UTF-8,
+    big-endian: Spark's ``conv(substring(md5(s),1,8),16,10)`` and
+    DuckDB's ``CAST('0x'||substring(md5(s),1,8) AS BIGINT)``, which is
+    what makes the whole MinHash family oracle-pinnable. The
+    per-function min over a doc's shingles is one numpy reduceat over a
+    (shingle, function) matrix, built per run of rows holding about
+    ``_SHINGLE_BUDGET`` shingles (one longer doc gets a matrix of its
+    own).
+
+    The returned closure references no module of this package, so the
+    Python workers need not import it."""
+    params = np.array(_perm_params(n_hashes), dtype=np.int64)
+    a, b, p = params[:, 0], params[:, 1], _P32
+    budget = _SHINGLE_BUDGET
+    md5 = hashlib.md5
+
+    def signatures(hashes: list[int], counts: list[int]) -> pa.Array:
+        n = np.array(counts, dtype=np.int64)
+        has = n > 0
+        mins = np.empty((0, n_hashes), dtype=np.int64)
+        if hashes:
+            h = np.array(hashes, dtype=np.int64)
+            starts = (np.cumsum(n) - n)[has]
+            mins = np.minimum.reduceat((h[:, None] * a + b) % p, starts, axis=0)
+        offsets = np.zeros(len(n) + 1, dtype=np.int32)
+        offsets[1:] = np.cumsum(has * n_hashes)
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(mins.ravel()), mask=pa.array(~has)
+        )
+
+    def compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            col = rb.schema.get_field_index(tokens_col)
+            docs = rb.column(col).to_pylist()
+            rb = rb.remove_column(col)
+            start, hashes, counts = 0, [], []
+            for end, toks in enumerate(docs, 1):
+                shingles = {" ".join(toks[j : j + 3]) for j in range(len(toks or ()) - 2)}
+                counts.append(len(shingles))
+                hashes.extend(
+                    int.from_bytes(md5(s.encode()).digest()[:4], "big") for s in shingles
+                )
+                if len(hashes) >= budget or end == len(docs):
+                    yield rb.slice(start, end - start).append_column(
+                        out_col, signatures(hashes, counts)
+                    )
+                    start, hashes, counts = end, [], []
+
+    return compute
+
+
+def with_minhash(
+    docs: DataFrame, text_col: str = "text", out_col: str = "minhash", n_hashes: int = 32
+) -> DataFrame:
+    """``docs`` plus ``out_col array<long>[n_hashes]``: the MinHash of
+    the distinct 3-word shingles of ``text_col``'s tokens
+    (``tokens_sql``), NULL for a text with fewer than 3 tokens. Spark
+    tokenizes; one ``mapInArrow`` pass shingles, hashes and takes the
+    minima, no shuffle. Every other column passes through with its
+    Arrow type unchanged.
+
+    The shingle hash h32 < 2^32 keeps every (a*h+b) product under 2^63,
+    so the universal-hash family runs in plain int64 arithmetic (and
+    DuckDB replays it exactly — see DEDUP_MINHASH_SQL).
+    """
+    schema = T.StructType(
+        docs.schema.fields + [T.StructField(out_col, T.ArrayType(T.LongType()))]
+    )
+    toks = docs.withColumn("__tokens", F.expr(tokens_sql(text_col)))
+    return toks.mapInArrow(_minhash_batches("__tokens", out_col, n_hashes), schema)
 
 
 def minhash_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n_hashes: int = 32
 ) -> DataFrame:
-    """(id, minhash array<long>[n_hashes]) — one shuffle (groupBy id).
-
-    h32 = portable_hash32(shingle) < 2^32 keeps every (a*h+b) product
-    under 2^63, so the universal-hash family runs in plain long
-    arithmetic (and DuckDB replays it exactly — see DEDUP_MINHASH_SQL).
-    """
-    params = _perm_params(n_hashes)
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("toks"),
+    """(id, minhash array<long>[n_hashes]) for every doc with at least
+    one 3-word shingle — the ``with_minhash`` pass, no shuffle."""
+    sig = with_minhash(
+        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
+        n_hashes=n_hashes,
     )
-    sh = toks.select("id", F.explode(shingles_from_tokens(F.col("toks"))).alias("shingle"))
-    # h32 is projected as a COLUMN before the groupBy (VERDICT r11
-    # directive #6): the 32 universal-hash mins then reference a long,
-    # so single evaluation of the md5/conv chain per shingle is
-    # structural — not dependent on codegen subexpression elimination
-    # inside the aggregate. A/B at sf0.1 showed CSE was already doing
-    # this (0.96 s vs 0.93 s sig-only, within noise); the projection
-    # form also drops the shingle string before the partial agg.
-    sh = sh.select("id", portable_hash32(F.col("shingle")).alias("h32"))
-    # F.expr strings, not Column composition (r20): each Column operator
-    # is a py4j round trip, and building these 32 aggregates
-    # operator-by-operator measured 1.2 s of socket wait per plan build
-    # (the bench times build+execute, and the streaming ingest rebuilds
-    # this plan every micro-batch). One parse call per aggregate yields
-    # the bit-identical expression tree (verified: optimizedPlan strings
-    # match modulo expr ids).
-    mins = [
-        F.expr(f"min((h32 * {a}L + {b}L) % {_P32}L) AS m{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = sh.groupBy("id").agg(*mins)
-    return sig.select(
-        "id", F.array(*[f"m{i}" for i in range(n_hashes)]).alias("minhash")
+    return sig.where("minhash IS NOT NULL").select("id", "minhash")
+
+
+def band_hash_sql(minhash_col: str = "minhash", n_hashes: int = 32, n_bands: int = 8) -> str:
+    """SQL for ``array<long>[n_bands]``: band b's hash is the 60-bit md5
+    prefix of its ``n_hashes/n_bands`` minhash values joined by commas.
+    60 bits keeps the decimal rendering inside int64 for every engine;
+    collision odds at 2^-60 per band pair are irrelevant next to the
+    est-Jaccard verification that follows the band join. One F.expr
+    parse instead of ~n_hashes*4 py4j round trips per Column tree (r20:
+    the streaming ingest builds this per micro-batch)."""
+    rows_per_band = n_hashes // n_bands
+    return "array({})".format(
+        ", ".join(
+            "CAST(conv(substring(md5(concat_ws(',', {cols})), 1, 15), 16, 10) AS BIGINT)".format(
+                cols=", ".join(
+                    f"CAST(element_at({minhash_col}, {band * rows_per_band + r + 1}) AS STRING)"
+                    for r in range(rows_per_band)
+                )
+            )
+            for band in range(n_bands)
+        )
     )
 
 
 def band_hashes(sig: DataFrame, n_hashes: int = 32, n_bands: int = 8) -> DataFrame:
     """(id, band_idx, band_hash) rows from a minhash-signature frame —
-    the LSH banding step, shared by the batch pair-miner and the
-    cross-batch streaming filter. Payload-free: only the 3 columns
-    travel through the candidate join."""
-    rows_per_band = n_hashes // n_bands
-    # one F.expr parse instead of ~n_hashes*4 py4j round trips (r20, same
-    # rationale as the minhash_signatures aggregates — this builder also
-    # runs per micro-batch in the streaming ingest). The string renders
-    # exactly the old Column tree: struct(band_idx, portable_hash60(
-    # concat_ws(',', CAST(element_at(minhash, i) AS STRING)...))).
-    bands_sql = ", ".join(
-        "struct({b} AS band_idx, CAST(conv(substring(md5(concat_ws(',', {cols})), 1, 15), 16, 10) AS BIGINT) AS band_hash)".format(
-            b=band,
-            cols=", ".join(
-                f"CAST(element_at(minhash, {band * rows_per_band + r + 1}) AS STRING)"
-                for r in range(rows_per_band)
-            ),
-        )
-        for band in range(n_bands)
+    the LSH banding step of the batch pair-miner. Payload-free: only the
+    3 columns travel through the candidate join."""
+    return sig.selectExpr(
+        "id", f"posexplode({band_hash_sql('minhash', n_hashes, n_bands)}) AS (band_idx, band_hash)"
     )
-    return sig.select(
-        "id", F.expr(f"explode(array({bands_sql}))").alias("b")
-    ).select("id", "b.band_idx", "b.band_hash")
 
 
-def minhash_est_jaccard(ma, mb, n_hashes: int):
-    """Signature-estimated Jaccard: matching-component fraction."""
-    return (
-        F.size(
-            F.filter(
-                F.zip_with(ma, mb, lambda x, y: (x == y).cast("int")),
-                lambda eq: eq == 1,
-            )
-        )
-        / F.lit(n_hashes)
-    )
+def minhash_est_jaccard(ma: str, mb: str, n_hashes: int) -> str:
+    """SQL for the signature-estimated Jaccard of two minhash array
+    columns: the matching-component fraction."""
+    return f"size(filter(zip_with({ma}, {mb}, (x, y) -> x = y), e -> e)) / {n_hashes}"
 
 
 def minhash_lsh_pairs(
@@ -256,7 +288,6 @@ def minhash_lsh_pairs(
     their signatures matches exactly. est_jaccard = matching-component
     fraction of the full signatures (an unbiased Jaccard estimator).
     """
-    rows_per_band = n_hashes // n_bands
     sig = minhash_signatures(docs, id_col, text_col, n_hashes).cache()
     _register_sig_cache(sig)  # same lifecycle as banded_hamming_pairs
     # bands carry only (id, band_idx, band_hash) — signatures are joined
@@ -286,7 +317,7 @@ def minhash_lsh_pairs(
     # at cluster scale it degrades gracefully to a shuffle join keyed on
     # doc id — the plan a 1B-doc corpus actually needs.
     scored = cand.join(sa, "doc_a").join(sb, "doc_b")
-    est = minhash_est_jaccard(F.col("ma"), F.col("mb"), n_hashes)
+    est = F.expr(minhash_est_jaccard("ma", "mb", n_hashes))
     return (
         scored.withColumn("est", est)
         .filter(F.col("est") >= threshold)

@@ -5,7 +5,7 @@ SimHash, LSH-blocked embedding dedup, multimodal plumbing.
 sha256 over the same utf-8 payload), proving the mapInPandas plumbing
 end-to-end. Since r11 the text hash families (MinHash-LSH, its cluster
 composition, SimHash) are oracle-pinned too: their hashes are md5-based
-(portable_hash32 / md5_number_upper), so DuckDB replays the signatures
+(md5-prefix shingle hash / md5_number_upper), so DuckDB replays the signatures
 bit-for-bit. Pytest additionally asserts recall against the exact
 operators (seed-agnostic).
 """
@@ -97,7 +97,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_sql_parts(n_hashes: int = 32, n_bands: int = 8) -> str:
     """Shared CTE chain replaying operators/neardup.minhash_lsh_pairs in
     DuckDB, bit-for-bit: same tokenization/shingling as the green
-    NEARDUP_JACCARD_SQL, same portable_hash32 (md5 prefix), same
+    NEARDUP_JACCARD_SQL, same md5-prefix shingle hash, same
     (a*h+b)%p universal-hash family from the same seeded params, same
     band/verify economics. One deliberate simplification: the band join
     keys on the 4 raw min values instead of their 60-bit md5 (Spark
@@ -735,7 +735,7 @@ ORACLES = {
     "mm_video_scene_cuts": MM_SCENE_CUTS_SQL,
     # r11 (VERDICT r9 directives #2/#3): the whole text hash family is
     # now oracle-pinned — the MinHash seed hash swapped from xxhash64 to
-    # the md5-prefix portable_hash32, and SimHash's md5-derived
+    # the md5-prefix shingle hash, and SimHash's md5-derived
     # signatures were always DuckDB-replayable via md5_number_upper.
     # Recall-vs-exact pytest coverage unchanged (seed-agnostic).
     "dedup_minhash_lsh": DEDUP_MINHASH_SQL,

@@ -29,6 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clockpipe_spark.operators.neardup import tokens_sql
 from clockpipe_spark.streaming.neardup_state import (
     StreamingNearDup,
     empty_df,
@@ -47,25 +48,22 @@ def c4_quality_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:
     arithmetic mirror queries/textops2.text_c4_filters exactly
     (tests/test_corpus_ingest.py pins gate == query keep-set, so the two
     cannot drift apart silently)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    with_toks = docs.withColumn("__toks", toks)
-    n_words = F.size(F.col("__toks"))
-    sum_len = F.aggregate(
-        F.col("__toks"), F.lit(0).cast("bigint"), lambda a, x: a + F.length(x)
-    )
-    alpha = F.size(F.filter(F.col("__toks"), lambda x: x.rlike("[a-z]")))
-    mean_x100 = F.when(n_words > 0, F.floor(sum_len * 100 / n_words)).otherwise(F.lit(0))
-    alpha_x100 = F.when(n_words > 0, F.floor(alpha * 100 / n_words)).otherwise(F.lit(0))
+    # one SQL parse per expression instead of a py4j round trip per
+    # Column operator: this plan is rebuilt every micro-batch
+    text = f"`{text_col}`"
+    with_toks = docs.withColumn("__toks", F.expr(tokens_sql(text_col)))
+    n_words = "size(__toks)"
+    sum_len = "aggregate(__toks, CAST(0 AS BIGINT), (a, x) -> a + length(x))"
+    alpha = "size(filter(__toks, x -> x RLIKE '[a-z]'))"
+    mean_x100 = f"CASE WHEN {n_words} > 0 THEN floor({sum_len} * 100 / {n_words}) ELSE 0 END"
+    alpha_x100 = f"CASE WHEN {n_words} > 0 THEN floor({alpha} * 100 / {n_words}) ELSE 0 END"
     keep = (
-        (n_words >= 50)
-        & (n_words <= 100_000)
-        & (mean_x100 >= 300)
-        & (mean_x100 <= 1000)
-        & (alpha_x100 >= 80)
-        & ~F.col(text_col).contains("{")
-        & ~F.lower(F.col(text_col)).contains("lorem ipsum")
+        f"{n_words} >= 50 AND {n_words} <= 100000"
+        f" AND {mean_x100} >= 300 AND {mean_x100} <= 1000"
+        f" AND {alpha_x100} >= 80"
+        f" AND NOT contains({text}, '{{') AND NOT contains(lower({text}), 'lorem ipsum')"
     )
-    return with_toks.filter(keep).drop("__toks")
+    return with_toks.where(keep).drop("__toks")
 
 
 class CorpusIngestPipeline:
@@ -118,9 +116,10 @@ class CorpusIngestPipeline:
         recomputes the same admitted set, rewrites the same directory
         (mode=overwrite, deterministic content); crash after it →
         ``_SUCCESS`` exists, the write is skipped, and the state
-        re-commits idempotently. ``already`` still filters cross-batch
-        redelivery: a doc id admitted under an EARLIER batch_id must not
-        enter this batch's directory too."""
+        re-commits idempotently. Cross-batch redelivery needs no filter
+        here: ``pre_commit`` receives only the docs whose ids the dedup
+        state does not hold yet, so a doc id admitted under an EARLIER
+        batch_id never enters this batch's directory too."""
         from pyspark.sql import Observation
 
         obs_arrived, obs_gated, obs_admitted = (
@@ -128,16 +127,7 @@ class CorpusIngestPipeline:
             Observation(),
             Observation(),
         )
-        # min/max ride the arrived-count observation (r13): they bound
-        # the redelivery filter's id range with ZERO extra jobs — the
-        # observation fires during the dedup layer's first docs scan,
-        # strictly before pre_commit needs the range
-        docs = docs.observe(
-            obs_arrived,
-            F.count(F.lit(1)).alias("n"),
-            F.min(id_col).alias("lo"),
-            F.max(id_col).alias("hi"),
-        )
+        docs = docs.observe(obs_arrived, F.count(F.lit(1)).alias("n"))
         gated = c4_quality_gate(docs, text_col).observe(
             obs_gated, F.count(F.lit(1)).alias("n")
         )
@@ -147,24 +137,7 @@ class CorpusIngestPipeline:
         def write_corpus(admitted_df: DataFrame) -> None:
             if corpus_done:
                 return
-            # Cross-batch redelivery filter: ids admitted by EARLIER
-            # batches must not re-enter the corpus. Resolved HERE —
-            # inside pre_commit, i.e. before this batch's sigs/shorts
-            # commit — so the file-list snapshot can never contain this
-            # batch's own rows, and range-restricted (r13) to the
-            # arrived ids' [min, max] (from the observation — no extra
-            # job): a redelivered id lies inside by construction, and
-            # the pushed-down range lets row-group id stats skip
-            # history instead of scanning a corpus-sized id column per
-            # batch.
-            rng = obs_arrived.get
-            # distinct=False (r20): a left_anti join is duplicate-
-            # insensitive on its right side, so the redelivery filter
-            # skips admitted_ids' dedup exchange inside this write job
-            already = self.neardup.admitted_ids(
-                id_range=(rng["lo"], rng["hi"]), distinct=False
-            ).withColumnRenamed("id", id_col)
-            admitted_df.join(already, id_col, "left_anti").observe(
+            admitted_df.observe(
                 obs_admitted, F.count(F.lit(1)).alias("n")
             ).write.mode("overwrite").parquet(batch_dir)
 

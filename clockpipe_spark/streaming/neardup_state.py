@@ -18,12 +18,18 @@ this operator is that state layer.
   (``_BucketedLog``): bands bucket on ``band_hash`` (the probe prunes
   to the buckets the batch's hashes fall into), sigs on ``id`` (the
   verify join prunes to the buckets of the colliding old ids).
+- A batch is read once: one shuffle-free signature pass, checkpointed
+  with the statistics the probe needs, then one checkpoint that flags
+  each doc as duplicate and/or already admitted. Every state append is
+  a narrow projection of that flagged frame.
 - The probe itself is an equi-join of the batch's band hashes against
-  those buckets — linear in batch size + collisions, never all-pairs.
+  those buckets and against the batch itself — linear in batch size +
+  collisions, never all-pairs.
 - Docs with < 3 tokens produce no shingles, hence no MinHash signature;
   they route through an EXACT dedup keyed on xxhash64(lower(trim(
   text))) against the ``shorts`` log (ADVICE r3: unconditional
-  admission re-admitted exact copies of short docs forever).
+  admission re-admitted exact copies of short docs forever). Their
+  text hash rides the same probe join as a band key of its own.
 - Admission ordering inside a batch follows the id order (lowest id of a
   colliding pair wins), matching the batch pair-miner's keep-lowest
   convention.
@@ -33,13 +39,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clockpipe_spark.operators.neardup import (
-    band_hashes,
+    band_hash_sql,
     minhash_est_jaccard,
-    minhash_signatures,
+    with_minhash,
 )
 
 _BANDS_SCHEMA = "id long, band_idx int, band_hash long"
@@ -48,19 +54,25 @@ _SHORTS_SCHEMA = "id long, text_hash long"
 
 
 def empty_df(spark: SparkSession, schema: str) -> DataFrame:
-    """JVM-side empty frame. spark.createDataFrame([], schema) builds an
-    RDD-backed relation whose EVERY job execution spins Python workers —
-    measured 0.47-0.52 s per count() vs 0.13-0.16 s for this range(0)
-    projection (r14). The shorts log is empty for any all-long-doc
-    corpus, so the old form taxed every single micro-batch."""
+    """JVM-side empty frame of a DDL schema string.
+    spark.createDataFrame([], schema) builds an RDD-backed relation
+    whose EVERY job execution spins Python workers — measured 0.47-0.52
+    s per count() vs 0.13-0.16 s for this range(0) projection (r14).
+    One SQL cast per column keeps it at a few py4j round trips: the
+    ingest plans an empty shorts history every batch of a gated
+    corpus."""
     from pyspark.sql import types as T
 
-    return spark.range(0).select(
-        *[
-            F.lit(None).cast(f.dataType).alias(f.name)
+    return spark.range(0).selectExpr(
+        *(
+            f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
             for f in T._parse_datatype_string(schema).fields
-        ]
+        )
     )
+
+
+def _is_data_file(name: str) -> bool:
+    return name.endswith(".parquet") and not name.startswith(("_", "."))
 
 
 def parquet_files(path: str) -> list[str]:
@@ -75,12 +87,18 @@ def parquet_files(path: str) -> list[str]:
     for dirpath, dirs, names in os.walk(path):
         # prune metadata/attempt dirs in place (os.walk contract)
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        files.extend(
-            os.path.join(dirpath, n)
-            for n in names
-            if n.endswith(".parquet") and not n.startswith(("_", "."))
-        )
+        files.extend(os.path.join(dirpath, n) for n in names if _is_data_file(n))
     return sorted(files)
+
+
+def read_snapshot(spark: SparkSession, paths: list[str], schema: str) -> DataFrame:
+    """A state log AS OF NOW: Spark lists the given dirs and files when
+    the read is planned, so the (lazy) downstream plan cannot pick up
+    rows this very batch appends later — otherwise a re-evaluation
+    after the state write would match every doc against itself."""
+    if not paths:
+        return empty_df(spark, schema)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 class _BucketedLog:
@@ -103,8 +121,8 @@ class _BucketedLog:
 
     Compaction writes, then deletes the loose files: a crash between
     the two leaves duplicate rows (both copies readable), never missing
-    ones — the candidate join's dropDuplicates and admitted_ids()'s
-    distinct absorb them (at-least-once, like every other append here).
+    ones — the candidate joins and the admitted-id membership tests are
+    insensitive to them (at-least-once, like every other append here).
     ``sort_col`` orders rows inside each compacted bucket."""
 
     def __init__(
@@ -125,31 +143,47 @@ class _BucketedLog:
         self.n_buckets = n_buckets
         self.sort_col = sort_col
 
-    def bucket(self, col: str | None = None, n_buckets: int | None = None) -> Column:
-        """Bucket id of ``col`` (default: the key) under ``n_buckets``."""
-        return F.pmod(
-            F.col(col or self.key_col), F.lit(n_buckets or self.n_buckets)
-        ).cast("int")
+    def bucket_sql(self, col: str | None = None, n_buckets: int | None = None) -> str:
+        """SQL for the bucket id of ``col`` (default: the key) under
+        ``n_buckets``."""
+        return f"CAST(pmod({col or self.key_col}, {n_buckets or self.n_buckets}) AS INT)"
 
-    def files(self, buckets: list[int] | None = None) -> list[str]:
-        """Files of the given bucket ids (None = all); loose files are
-        always included."""
-        files = parquet_files(self.path)
-        if buckets is None:
-            return files
-        allowed = {f"{self.bucket_col}={b}" + os.sep for b in buckets}
+    def bucket(self, col: str | None = None, n_buckets: int | None = None) -> Column:
+        return F.expr(self.bucket_sql(col, n_buckets))
+
+    def paths(self, buckets: list[int] | None = None) -> list[str]:
+        """Read paths for the given bucket ids (None = all, an empty
+        list = none): one per existing bucket dir plus every loose file,
+        so the count is bounded by ``n_buckets + compact_after_files``
+        however many compactions have run. Spark lists each dir when the
+        read is planned and skips ``_temporary``/dot entries, as
+        ``parquet_files`` does."""
+        if buckets == [] or not os.path.isdir(self.path):
+            return []
+        names = sorted(os.listdir(self.path))
+        prefix = f"{self.bucket_col}="
+        wanted = None if buckets is None else {f"{prefix}{b}" for b in buckets}
         return [
-            f
-            for f in files
-            if f"{self.bucket_col}=" not in f or any(a in f for a in allowed)
+            os.path.join(self.path, n)
+            for n in names
+            if (n.startswith(prefix) and (wanted is None or n in wanted)) or _is_data_file(n)
         ]
 
     def loose_files(self) -> list[str]:
         """Files not yet folded into the bucketed layout."""
-        return self.files([])
+        if not os.path.isdir(self.path):
+            return []
+        return [
+            os.path.join(self.path, n) for n in sorted(os.listdir(self.path)) if _is_data_file(n)
+        ]
+
+    def read(self, buckets: list[int] | None = None) -> DataFrame:
+        """Snapshot of the rows in the given buckets (None = all)."""
+        return read_snapshot(self.spark, self.paths(buckets), self.schema)
 
     def append(self, rows: DataFrame) -> None:
-        """One batch's rows as a few loose files, sorted by bucket."""
+        """One batch's rows as a few loose files (one per partition of
+        ``rows``, at most 4), sorted by bucket."""
         (
             rows.withColumn(self.bucket_col, self.bucket())
             .coalesce(4)
@@ -245,8 +279,8 @@ class StreamingNearDup:
             n_band_buckets,
         )
         # sorted by id so every row group carries tight min/max id
-        # stats — what makes _sig_id_history's range filter skip
-        # compacted history at the scan
+        # stats — what lets admitted_ids' id_range filter (the replay
+        # flag) skip compacted history at the scan
         self._sigs = _BucketedLog(
             spark,
             os.path.join(root, "sigs"),
@@ -327,7 +361,7 @@ class StreamingNearDup:
             # hand (or rebuilds). Loose-only stores are safe to pin:
             # probes always read loose files unpruned, and compaction
             # recomputes buckets under the pinned counts.
-            if any(log.files() != log.files([]) for log in (self._bands, self._sigs)):
+            if any(log.paths() != log.loose_files() for log in (self._bands, self._sigs)):
                 raise ValueError(
                     f"StreamingNearDup store at {root} contains bucketed "
                     "state dirs but no _layout.json — the bucket counts "
@@ -379,8 +413,8 @@ class StreamingNearDup:
         return parquet_files(path)
 
     def _band_files(self, buckets: list[int] | None) -> list[str]:
-        """Band-log files for the given band_hash-bucket ids."""
-        return self._bands.files(buckets)
+        """Band-log read paths for the given band_hash-bucket ids."""
+        return self._bands.paths(buckets)
 
     def _id_buckets(self, df: DataFrame, col: str) -> list[int]:
         """Distinct pmod(col, n_sig_buckets) values — bounded by
@@ -394,31 +428,15 @@ class StreamingNearDup:
             .collect()
         ]
 
-    def _sig_id_history(self, lo, hi) -> DataFrame:
-        """Sig-log ids range-filtered to [lo, hi] — for membership
-        checks against ids known to lie in that range. The filter
-        pushes into the parquet scan; with compaction sorting each
-        bucket by id, row-group min/max stats skip history wholesale
-        when live ids run ahead of it (the streaming steady state)."""
-        if lo is None:
-            return empty_df(self.spark, "id long")
-        return (
-            self._history(self.sigs_dir, _SIGS_SCHEMA)
-            .select("id")
-            .filter((F.col("id") >= lo) & (F.col("id") <= hi))
-        )
-
-    def _history_df(self, files: list[str], schema: str) -> DataFrame:
-        """Snapshot of a state log AS OF NOW: the parquet file list is
-        resolved eagerly, so the (lazy) downstream plan cannot pick up
-        rows this very batch appends later — otherwise a re-evaluation
-        after the state write would match every doc against itself."""
-        if not files:
-            return empty_df(self.spark, schema)
-        return self.spark.read.schema(schema).parquet(*files)
-
     def _history(self, path: str, schema: str) -> DataFrame:
-        return self._history_df(self._files(path), schema)
+        """Snapshot of every data file of the state log at ``path``."""
+        return read_snapshot(self.spark, parquet_files(path), schema)
+
+    def _shorts(self) -> DataFrame:
+        """Snapshot of the shorts log: never compacted, so one
+        directory path however many files it holds."""
+        paths = [self.shorts_dir] if parquet_files(self.shorts_dir) else []
+        return read_snapshot(self.spark, paths, _SHORTS_SCHEMA)
 
     def process_batch(
         self,
@@ -429,19 +447,26 @@ class StreamingNearDup:
     ) -> DataFrame:
         """Admit the subset of ``docs`` that near-duplicates neither the
         admitted history nor an earlier (lower-id) doc of this batch;
-        append the admitted docs' state. Returns the admitted rows.
+        append the admitted docs' state. Returns the rows of ``docs``
+        that duplicate nothing — a redelivered batch's rows included
+        (their ids are in the state, they do not duplicate it).
 
         ``pre_commit`` (r13): optional callable(admitted_df) executed
         AFTER the band append but BEFORE the shorts and sigs appends —
         i.e. strictly before any part of the batch becomes visible to
-        ``admitted_ids()``. Downstream writers (the corpus append) hook
-        here so a crash can never leave a doc admitted-in-state but
-        absent from their own store: every state row that could mark
-        the doc as "already admitted" on replay commits after the
-        downstream write. A pre_commit failure aborts the batch with
-        only band rows written — duplicates the candidate join absorbs,
-        exactly like the compaction crash window."""
+        ``admitted_ids()``. ``admitted_df`` holds the returned rows
+        whose ids the state does not hold yet: the rows this batch
+        admits. Downstream writers (the corpus append) hook here so a
+        crash can never leave a doc admitted-in-state but absent from
+        their own store: every state row that could mark the doc as
+        "already admitted" on replay commits after the downstream
+        write. A pre_commit failure aborts the batch with only band
+        rows written — duplicates the candidate join absorbs, exactly
+        like the compaction crash window."""
         import time as _time
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.sql import Observation
 
         _t0 = _time.perf_counter()
         # per-phase walls of the LAST batch, always recorded (r14): the
@@ -456,286 +481,216 @@ class StreamingNearDup:
             self.last_phase_walls[label] = round(now - _t0, 3)
             _t0 = now
 
-        from pyspark.sql import Observation
+        doc_cols = docs.columns
+        idq = f"`{id_col}`"
 
-        # The batch's doc count rides the stats job as an Observation
-        # (r20): with the signature count derived from the same job's
-        # band-row count (below), their difference is the short-doc
-        # count — which previously cost a separate limit(1).count()
-        # probe job on the cached shorts frame and, when zero (the
-        # common case for a gated corpus), now lets the whole shorts
-        # subplan (history read, window, unions) drop out of the
-        # all_dup checkpoint. CAVEAT (measured): when the signature set
-        # is EMPTY, AQE's empty-relation propagation prunes the
-        # CollectMetrics node out of the re-optimized plan and the
-        # metric never arrives — so it is read only when n_sig > 0.
-        obs_docs = Observation()
-        docs = docs.observe(obs_docs, F.count(F.lit(1)).alias("n"))
-        sig = minhash_signatures(docs, id_col, text_col, self.n_hashes).cache()
-        bands = band_hashes(sig, self.n_hashes, self.n_bands).cache()
-
-        # One driver round-trip for every batch statistic the pruning
-        # needs (r13 — was two separate collects): the band buckets the
-        # batch hashes into (file-level band-log pruning, ≤
-        # n_band_buckets values) and the batch id range (row-group
-        # pruning of the replay anti-join's history scan). Runs on the
-        # cached bands frame, so this is also what materializes the
-        # sig+bands caches.
-        stats = bands.agg(
-            F.collect_set(self._bands.bucket()).alias("bb"),
-            F.min("id").alias("lo"),
-            F.max("id").alias("hi"),
-            # band rows are exactly n_bands per signature row, so the
-            # signature count rides this same action (r20) — no extra
-            # job, no observation fragility
-            F.count(F.lit(1)).alias("nb"),
-        ).first()
-        probe_buckets, id_lo, id_hi = stats["bb"], stats["lo"], stats["hi"]
-        n_sig = stats["nb"] // self.n_bands
-        _mark("stats_collect")
-        hist_bands = self._history_df(self._band_files(probe_buckets), _BANDS_SCHEMA)
-
-        # candidates vs history: new id on the left, any admitted id right
-        vs_hist = (
-            bands.alias("n")
-            .join(
-                hist_bands.alias("h"),
-                (F.col("n.band_idx") == F.col("h.band_idx"))
-                & (F.col("n.band_hash") == F.col("h.band_hash"))
-                # replay safety: a re-delivered batch (at-least-once) must
-                # not match its own previously-admitted rows
-                & (F.col("n.id") != F.col("h.id")),
+        # The batch frame: every doc column plus its MinHash (one
+        # shuffle-free mapInArrow pass), its band hashes and, for a doc
+        # too short to shingle (< 3 tokens, no signature), the exact
+        # hash of its normalized text. Checkpointed once: every later
+        # plan of this batch reads it instead of the input, and the
+        # statistics the probe needs ride the same job as one
+        # observation — doc and signature counts, the id range (the
+        # row-group pruning of the state-membership read) and the band
+        # buckets the batch hashes into (file-level band-log pruning).
+        # No shuffle lies below the observation, so AQE cannot prune it
+        # even when the quality gate upstream drops every doc.
+        obs = Observation()
+        batch = (
+            with_minhash(docs, text_col, "__minhash", self.n_hashes)
+            .selectExpr(
+                "*",
+                "IF(__minhash IS NULL, NULL, "
+                f"{band_hash_sql('__minhash', self.n_hashes, self.n_bands)}) AS __bands",
+                f"IF(__minhash IS NULL, xxhash64(lower(trim(`{text_col}`))), NULL) AS __text_hash",
             )
-            .select(F.col("n.id").alias("new_id"), F.col("h.id").alias("old_id"))
-        )
-        # candidates within the batch: higher id is the duplicate
-        intra = (
-            bands.alias("a")
-            .join(
-                bands.alias("b"),
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.id") > F.col("b.id")),
+            .observe(
+                obs,
+                F.expr("count(1) AS n"),
+                F.expr("count(__minhash) AS n_sig"),
+                F.expr(f"min({idq}) AS lo"),
+                F.expr(f"max({idq}) AS hi"),
+                F.expr(
+                    "array_distinct(flatten(collect_set(transform(__bands, "
+                    f"h -> {self._bands.bucket_sql('h')})))) AS bb"
+                ),
             )
-            .select(F.col("a.id").alias("new_id"), F.col("b.id").alias("old_id"))
+            .localCheckpoint(eager=True)
         )
-        cand = vs_hist.unionByName(intra).dropDuplicates(["new_id", "old_id"])
+        stats = obs.get
+        _mark("batch_ckpt")
+        if not stats["n"]:
+            empty = batch.select(*doc_cols)
+            if pre_commit is not None:
+                pre_commit(empty)
+            return empty
+        n_short = stats["n"] - stats["n_sig"]
+
+        # LSH keys: a long doc's band hashes under band_idx 0..n_bands-1;
+        # a short doc's text hash under band_idx -1, so its EXACT dedup
+        # against the shorts log and within the batch rides the same
+        # equi-join as the band probe. The batch's keys, each carrying
+        # its doc's signature, probe ONE stream: the history keys — the
+        # bucket-pruned band log, plus the shorts log when the batch has
+        # short docs — and the batch's own keys, so an intra-batch
+        # candidate arrives with both signatures and only a history
+        # candidate looks its old signature up. The keys are n_bands
+        # rows per doc, each with the signature, so no broadcast is
+        # forced: the planner's size threshold picks the join.
+        keys = batch.selectExpr(
+            f"{idq} AS id",
+            "__minhash AS mn",
+            "inline(IF(__minhash IS NULL, "
+            "array(named_struct('band_idx', -1, 'band_hash', __text_hash)), "
+            "transform(__bands, (h, i) -> named_struct('band_idx', i, 'band_hash', h))))",
+        )
+        as_hist = ("id", "band_idx", "band_hash", "CAST(NULL AS array<bigint>) AS mo", "true AS hist")
+        stream = self._bands.read(stats["bb"]).selectExpr(*as_hist)
+        if n_short:
+            stream = stream.unionByName(
+                self._shorts().selectExpr(
+                    "id", "-1 AS band_idx", "text_hash AS band_hash", *as_hist[3:]
+                )
+            )
+        stream = stream.unionByName(
+            keys.selectExpr("id", "band_idx", "band_hash", "mn AS mo", "false AS hist")
+        )
+        # a history match must not be the doc itself (replay safety: a
+        # re-delivered batch must not match its own admitted rows); a
+        # match within the batch makes the higher id the duplicate
+        cand = (
+            keys.alias("n")
+            .join(
+                stream.alias("o"),
+                F.expr(
+                    "n.band_idx = o.band_idx AND n.band_hash = o.band_hash "
+                    "AND IF(o.hist, n.id != o.id, n.id > o.id)"
+                ),
+            )
+            .selectExpr("n.id AS new_id", "o.id AS old_id", "n.band_idx", "n.mn", "o.mo", "o.hist")
+        )
 
         # Verify-join history pruning is SIZE-GATED (r13): when the sig
-        # log is large, cand is checkpointed eagerly (it is tiny —
-        # bounded by collisions; the band-probe work it forces would
-        # have run exactly once in the downstream job anyway) and its
-        # old_id bucket set restricts the verify join to the sig-log
-        # dirs holding the colliding history docs — without this the
-        # join re-scans the corpus-sized sig log every batch. Below the
-        # gate the lazy single-job plan is cheaper than the extra
-        # checkpoint wall (bench-scale ingest is fixed-cost-bound).
-        sig_log_files = self._sigs.files()
-        sig_log_bytes = sum(os.path.getsize(f) for f in sig_log_files)
+        # log is large, the candidates are checkpointed eagerly (bounded
+        # by collisions; the band-probe work this forces would have run
+        # exactly once downstream anyway) and the old_id bucket set of
+        # the history candidates restricts the verify join to the
+        # sig-log dirs holding the colliding history docs — without this
+        # the join re-scans the corpus-sized sig log every batch. Below
+        # the gate the lazy plan is cheaper than the extra checkpoint.
+        sig_log_bytes = sum(os.path.getsize(f) for f in parquet_files(self.sigs_dir))
         if sig_log_bytes > self.prune_verify_bytes:
             cand = cand.localCheckpoint(eager=True)
-            old_buckets = self._id_buckets(cand, "old_id")
-            hist_sigs_verify = self._history_df(
-                self._sigs.files(old_buckets), _SIGS_SCHEMA
-            )
+            hist_sigs = self._sigs.read(self._id_buckets(cand.where("hist"), "old_id"))
         else:
-            hist_sigs_verify = self._history_df(sig_log_files, _SIGS_SCHEMA)
+            hist_sigs = self._sigs.read()
         _mark("cand_prune_gate")
 
-        # verify by signature-estimated Jaccard (sig store consulted only
-        # for surviving candidates; batch side is broadcast-sized)
-        all_sigs = hist_sigs_verify.unionByName(sig)
-        scored = (
+        # A candidate is a duplicate when its key is an exact text hash
+        # (band_idx -1) or its signatures' estimated Jaccard reaches the
+        # threshold; the sig log is consulted only for history
+        # candidates of long docs. Intra-batch chains (A~B, B~C) drop
+        # every id that matched ANY earlier/admitted doc — simple and
+        # deterministic.
+        est = minhash_est_jaccard("mn", "coalesce(mo, sig_mo)", self.n_hashes)
+        dup_ids = (
             cand.join(
-                F.broadcast(sig.select(F.col("id").alias("new_id"), F.col("minhash").alias("mn"))),
-                "new_id",
+                hist_sigs.selectExpr("id AS sig_id", "minhash AS sig_mo"),
+                F.expr("hist AND band_idx >= 0 AND old_id = sig_id"),
+                "left",
             )
-            .join(
-                all_sigs.select(F.col("id").alias("old_id"), F.col("minhash").alias("mo")),
-                "old_id",
-            )
-            .withColumn("est", minhash_est_jaccard(F.col("mn"), F.col("mo"), self.n_hashes))
-            .filter(F.col("est") >= self.threshold)
+            .where(f"band_idx = -1 OR {est} >= {self.threshold}")
+            .select("new_id")
         )
-        dup_ids = scored.select(F.col("new_id").alias("id"))
 
-        # Docs too short to shingle (< 3 tokens) have NO signature row —
-        # they cannot near-duplicate anything, so they route through an
-        # EXACT dedup on the normalized text hash instead (shorts log).
-        # n_short = observed doc count minus the stats job's signature
-        # count (r20) — zero extra jobs — and when the batch has no
-        # short docs the whole shorts subplan is elided from this
-        # batch's plans. An empty-signature batch (n_sig == 0) has no
-        # observed count (see above): n_short stays None, the shorts
-        # subplan is built, and a limit(1) probe decides its append.
-        n_short = obs_docs.get["n"] - n_sig if n_sig else None
-        shorts = None
-        admitted_shorts = None
-        dup_short_parts = []
-        if n_short is None or n_short > 0:
-            shorts = (
-                docs.select(
-                    F.col(id_col).alias("id"),
-                    F.xxhash64(F.lower(F.trim(F.col(text_col)))).alias(
-                        "text_hash"
-                    ),
-                )
-                .join(sig.select("id"), "id", "left_anti")
-                .cache()
+        # One checkpoint flags every doc: __dup (it duplicates an
+        # earlier or admitted doc) and __known (its id is in the state
+        # already — a replay). Both are IN-subqueries, planned as
+        # existence joins, so neither needs a distinct. The state
+        # membership read is RANGE-FILTERED to the batch's [min, max]
+        # ids (r13): it pushes into the parquet scans, where row-group
+        # stats skip history when streaming ids run ahead of it.
+        obs_admit = Observation()
+        flagged = (
+            batch.select(
+                "*",
+                F.col(id_col).isin(F.broadcast(dup_ids)).alias("__dup"),
+                F.col(id_col)
+                .isin(self.admitted_ids((stats["lo"], stats["hi"]), distinct=False))
+                .alias("__known"),
             )
-            hist_shorts = self._history(self.shorts_dir, _SHORTS_SCHEMA)
-            short_vs_hist = (
-                shorts.alias("n")
-                .join(
-                    hist_shorts.alias("h"),
-                    (F.col("n.text_hash") == F.col("h.text_hash"))
-                    # replay safety, as for bands
-                    & (F.col("n.id") != F.col("h.id")),
-                )
-                .select(F.col("n.id").alias("id"))
+            .observe(
+                obs_admit,
+                F.expr("count_if(NOT __dup AND NOT __known AND __minhash IS NOT NULL) AS n_long"),
+                F.expr("count_if(NOT __dup AND NOT __known AND __minhash IS NULL) AS n_short"),
             )
-            w = Window.partitionBy("text_hash").orderBy("id")
-            short_intra = (
-                shorts.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") > 1)
-                .select("id")
-            )
-            dup_short_parts = [short_vs_hist, short_intra]
-
-        # intra-batch chains (A~B, B~C): admission is transitive by id
-        # order only at threshold collisions within the same band family;
-        # keep semantics simple and deterministic — drop every id that
-        # matched ANY earlier/admitted doc.
-        #
-        # all_dup is materialized ONCE (r12): it feeds three consumers
-        # (sig append filter, shorts append filter, the returned
-        # anti-join), and before the checkpoint the candidate joins
-        # re-executed per consumer — the profile showed the band/est
-        # joins running twice per batch. It is a tiny id set (bounded by
-        # batch size), so the eager localCheckpoint is cheap. ONE
-        # distinct over the unioned id parts (r20) — the three chained
-        # distinct exchanges (dup_ids, dup_short_ids, the union) were
-        # set-algebra no-ops over the final one.
-        all_dup = dup_ids
-        for part in dup_short_parts:
-            all_dup = all_dup.unionByName(part)
-        all_dup = all_dup.distinct().localCheckpoint(eager=True)
-        _mark("all_dup_ckpt")
-        # Replay safety (at-least-once foreachBatch): a re-delivered batch
-        # must not re-append state rows for ids already admitted — the
-        # anti-join against history makes the state append idempotent.
-        # (all_dup replaces dup_ids / dup_short_ids in the filters below:
-        # equivalent, because sig ids and shorts ids partition the batch.)
-        # The history side is RANGE-FILTERED to [min, max] of this
-        # batch's ids (r13): a membership check can never match outside
-        # the probe set's own range, so the filter is always correct,
-        # and it pushes into the parquet scan where row-group min/max
-        # stats skip the bulk of a sorted/clustered log — streaming ids
-        # arrive roughly monotonic, so history row groups fall outside
-        # the live range. (Id-BUCKET pruning is useless here: pmod
-        # spreads any realistic batch across every bucket.)
-        hist_sig_ids = self._sig_id_history(id_lo, id_hi)
-        admitted_sig = (
-            sig.join(all_dup, "id", "left_anti")
-            .join(hist_sig_ids, "id", "left_anti")
-            .cache()
+            .localCheckpoint(eager=True)
         )
-        if shorts is not None:
-            admitted_shorts = shorts.join(all_dup, "id", "left_anti").join(
-                hist_shorts.select("id"), "id", "left_anti"
-            )
+        admit = obs_admit.get
+        _mark("flags_ckpt")
 
-        # Every log appends a handful of PLAIN loose files (see
-        # _BucketedLog); compaction folds the band and sig logs later.
+        # Every append below is a narrow projection of the one
+        # checkpointed frame; an append with no rows is skipped.
         #
         # Commit ORDERING (r13, ADVICE r12 #1): the sigs append is the
-        # batch's COMMIT MARKER and must be the last state write.
-        # w_bands derives its rows from admitted_sig, which anti-joins
-        # hist_sigs — so if the driver died after sigs committed but
-        # before bands did, a replay would compute an EMPTY admitted_sig
-        # and never write the missing band rows (near-dup detection
-        # against those docs permanently off). With sigs last, every
-        # crash window replays cleanly: bands/shorts already written
-        # but sigs absent → replay recomputes the same admitted set and
-        # re-appends (duplicate band/short rows are absorbed by the
-        # candidate joins' dropDuplicates/distinct, exactly like the
+        # batch's COMMIT MARKER and must be the last state write: the
+        # __known flag reads the sig log, so if sigs committed before
+        # bands and the driver died between them, a replay would flag
+        # every doc known and never write the missing band rows. With
+        # sigs last, every crash window replays cleanly: bands/shorts
+        # already written but sigs absent → the replay recomputes the
+        # same admitted set and re-appends (duplicate band/short rows
+        # are absorbed by the candidate joins, exactly like the
         # compaction crash window).
         #
-        # Full order: [bands ∥ pre_commit(lazy out)] → shorts? → [sigs ∥
-        # out-checkpoint].
+        # Full order: [bands ∥ pre_commit] → shorts → sigs.
         # - bands is independent of the downstream pre_commit write
         #   (corpus committed without bands heals: no marker → replay
         #   recomputes, _SUCCESS skips the corpus, bands rewritten), so
         #   they overlap on driver threads.
-        # - pre_commit consumes the LAZY admitted frame: its anti-join
-        #   folds into the downstream write's own job instead of paying
-        #   a separate checkpoint wall first. Safe post-hoc too: the
-        #   history snapshots are eager file lists and all_dup is
-        #   checkpointed, so re-evaluation is deterministic.
         # - shorts runs AFTER pre_commit because admitted_ids() is sigs
         #   ∪ shorts — if shorts committed before a downstream
         #   pre_commit write and the driver crashed between them, the
-        #   replay's "already admitted" snapshot would contain the
-        #   batch's short docs and the downstream store would skip (and
-        #   so permanently lose) them. SKIPPED outright when the batch
-        #   has no short docs (cheap probe of the cached shorts frame —
-        #   the common case for a gated corpus).
-        # - the eager checkpoint of the RETURNED admitted frame is not
-        #   a state write, so it overlaps the shorts/sigs commits.
-        # Net serialized walls per batch: stats collect, all_dup,
-        # max(bands, pre_commit), max(shorts?+sigs, out-checkpoint) —
-        # the r12 count plus the one wall crash-consistency truly costs.
-        out_holder: dict[str, DataFrame] = {}
-        lazy_out = docs.join(
-            all_dup.withColumnRenamed("id", id_col), id_col, "left_anti"
-        )
+        #   replay would flag the batch's short docs known and the
+        #   downstream store would skip (and so permanently lose) them.
+        out = flagged.where("NOT __dup").select(*doc_cols)
+        admitted = flagged.where("NOT __dup AND NOT __known")
+        longs = admitted.where("__minhash IS NOT NULL")
 
         def w_bands() -> None:
-            self._bands.append(band_hashes(admitted_sig, self.n_hashes, self.n_bands))
-
-        def w_out() -> None:
-            out_holder["out"] = lazy_out.localCheckpoint(eager=True)
+            if admit["n_long"]:
+                self._bands.append(
+                    longs.selectExpr(
+                        f"{idq} AS id", "posexplode(__bands) AS (band_idx, band_hash)"
+                    )
+                )
 
         def w_pre_commit() -> None:
             if pre_commit is not None:
-                pre_commit(lazy_out)
-
-        from concurrent.futures import ThreadPoolExecutor
+                pre_commit(admitted.select(*doc_cols))
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             futures = [pool.submit(f) for f in (w_bands, w_pre_commit)]
             for fut in futures:
                 fut.result()  # re-raise the first failure
         _mark("bands_and_pre_commit")
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_out = pool.submit(w_out)  # not a state write — overlaps commits
-            # n_short from the stats job (r20) skips the empty append
-            # job (~0.4 s of commit protocol) for all-long-doc batches
-            # with no probe job at all; an empty-signature batch probes
-            # its cached shorts frame instead
-            if (
-                n_short > 0
-                if n_short is not None
-                else shorts.limit(1).count()
-            ):
-                # only after downstream stores are durable
-                admitted_shorts.coalesce(4).write.mode("append").parquet(
-                    self.shorts_dir
-                )
+        if admit["n_short"]:
+            # only after downstream stores are durable
+            admitted.where("__minhash IS NULL").selectExpr(
+                f"{idq} AS id", "__text_hash AS text_hash"
+            ).coalesce(4).write.mode("append").parquet(self.shorts_dir)
+        if admit["n_long"]:
             # commit marker: only after every other write landed
-            self._sigs.append(admitted_sig)
-            f_out.result()
-        _mark("shorts_sigs_out")
+            self._sigs.append(longs.selectExpr(f"{idq} AS id", "__minhash AS minhash"))
+        _mark("shorts_and_sigs")
 
-        self.compact_bands()
-        self.compact_sigs()
-        _mark("compact_checks")
-        admitted_sig.unpersist()
-        if shorts is not None:
-            shorts.unpersist()
-        sig.unpersist()
-        bands.unpersist()
-        return out_holder["out"]
+        # the two logs compact independently, so on two driver threads
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futures = [pool.submit(f) for f in (self.compact_bands, self.compact_sigs)]
+            for fut in futures:
+                fut.result()
+        _mark("compact")
+        return out
 
     def loose_band_files(self) -> list[str]:
         """Band-log files not yet folded into the bucketed layout."""
@@ -756,23 +711,21 @@ class StreamingNearDup:
     ) -> DataFrame:
         """Ids admitted so far. ``id_range=(lo, hi)`` (r13) restricts
         the listing to that id interval — correct ONLY for membership
-        checks against ids known to lie inside it (the corpus append's
-        redelivery filter); pass None for a complete listing. The range
+        checks against ids known to lie inside it (process_batch's
+        replay flag); pass None for a complete listing. The range
         predicate pushes into both log scans, where row-group id stats
         skip clustered history.
 
         ``distinct=False`` (r20) skips the dedup exchange for consumers
-        whose semantics are duplicate-insensitive — an anti-join's
-        result is identical against a multiset right side, so the
-        corpus append's redelivery filter saves one aggregate exchange
-        per batch. Listing consumers keep the default."""
+        whose semantics are duplicate-insensitive — a membership test
+        is identical against a multiset, so the replay flag saves one
+        aggregate exchange per batch. Listing consumers keep the
+        default."""
         # distinct() guards against duplicate state rows from any history
         # written before the replay-idempotence anti-join existed
-        sig_ids = self._history(self.sigs_dir, _SIGS_SCHEMA).select("id")
-        short_ids = self._history(self.shorts_dir, _SHORTS_SCHEMA).select("id")
+        sig_ids = self._sigs.read().select("id")
+        short_ids = self._shorts().select("id")
         ids = sig_ids.unionByName(short_ids)
         if id_range is not None and id_range[0] is not None:
-            ids = ids.filter(
-                (F.col("id") >= id_range[0]) & (F.col("id") <= id_range[1])
-            )
+            ids = ids.where(f"id >= {id_range[0]} AND id <= {id_range[1]}")
         return ids.distinct() if distinct else ids

@@ -193,3 +193,23 @@ def test_batch_dirs_accumulate_and_cross_batch_redelivery_filtered(spark, pipe):
     assert os.path.exists(os.path.join(pipe.corpus_dir, "batch=1", "_SUCCESS"))
     rows = pipe.corpus("doc_id long, text string").collect()
     assert sorted(r["doc_id"] for r in rows) == [1, 2]
+
+
+def test_all_gated_batch_records_metrics_and_replays(spark, pipe, tmp_path):
+    """A batch whose every doc fails the quality gate admits nothing and
+    records (arrived, 0, 0) — also when replayed under the same batch_id.
+    Read from parquet, as a file or streaming source delivers it (a
+    literal in-memory frame lets the optimizer evaluate the gate at plan
+    time)."""
+    path = str(tmp_path / "gated_batch")
+    _df(spark, [(1, _SHORT), (2, _BRACED), (3, "hi")]).write.parquet(path)
+    batch = spark.read.schema("doc_id long, text string").parquet(path)
+    for _ in range(2):
+        assert pipe.process_batch(batch, batch_id=0).count() == 0
+    rows = [
+        (r["batch_id"], r["n_arrived"], r["n_gated"], r["n_admitted"])
+        for r in pipe.metrics().collect()
+    ]
+    assert rows == [(0, 3, 0, 0), (0, 3, 0, 0)]
+    assert pipe.corpus("doc_id long, text string").count() == 0
+    assert pipe.neardup.admitted_ids().count() == 0

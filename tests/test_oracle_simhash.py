@@ -13,7 +13,7 @@ Plus the hash-primitive pin itself: DuckDB ``md5_number_upper`` must
 equal Python ``int.from_bytes(md5(t).digest()[:8], 'little')`` (the
 simhash token hash, operators/neardup.py), and the 0x-hex-prefix cast
 must equal Spark's ``conv(substring(md5(x),1,8),16,10)`` rendering
-(portable_hash32).
+(the MinHash shingle hash).
 """
 
 from __future__ import annotations

@@ -461,3 +461,40 @@ def test_pin_refuses_bucketed_store_without_layout(spark, tmp_path):
     for counts in (4096, 64):
         with pytest.raises(ValueError, match="no _layout.json"):
             StreamingNearDup(spark, root, n_band_buckets=counts)
+
+
+def test_state_read_paths_do_not_grow_with_compactions(spark, tmp_path, monkeypatch):
+    """A state read passes one path per bucket dir plus the loose files,
+    so the paths one batch hands to Spark stay the same while every
+    compaction adds a file per bucket."""
+    import random
+
+    from pyspark.sql.readwriter import DataFrameReader
+    from test_commit_faults import _long_doc, _near
+
+    from clockpipe_spark.streaming.neardup_state import StreamingNearDup, parquet_files
+
+    nd = StreamingNearDup(
+        spark, str(tmp_path / "nd"), threshold=0.5, n_band_buckets=4, n_sig_buckets=4
+    )
+    rng = random.Random(5)
+    docs = [_long_doc(rng) for _ in range(12)]
+    passed: list[int] = []
+    real = DataFrameReader.parquet
+
+    def spy(reader, *paths, **kwargs):
+        passed.append(len(paths))
+        return real(reader, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    seen, files = {}, {}
+    for n in (1, 2, 3):
+        ids = range(4 * n, 4 * n + 4)
+        nd.process_batch(_df(spark, [(i, docs[i - 4]) for i in ids]))
+        assert nd.compact_bands(force=True) and nd.compact_sigs(force=True)
+        passed.clear()
+        assert nd.process_batch(_df(spark, [(100, _near(docs[0]))])).count() == 0
+        seen[n] = sorted(passed)
+        files[n] = len(parquet_files(nd.bands_dir)) + len(parquet_files(nd.sigs_dir))
+    assert seen[1] == seen[3] and max(seen[3]) <= 4
+    assert files[3] > files[1]
