@@ -1054,7 +1054,7 @@ def bench_live_pg(
 
     from clockpipe_spark.config import PipeConfig
     from clockpipe_spark.sources.livepg_cluster import LivePgCluster
-    from clockpipe_spark.streaming.live_pipe import LivePostgresCdcPipe
+    from clockpipe_spark.streaming.live_pipe import LivePostgresRoutedPipe
 
     target = tempfile.mkdtemp(prefix="clockpipe_livepg_bench_")
     try:
@@ -1067,15 +1067,15 @@ def bench_live_pg(
                 f"FROM generate_series(1, {n_rows}) g"
             )
             pg.sql("ANALYZE bench_t")
-            pipe = LivePostgresCdcPipe(
-                spark, pg.adapter(spark), "bench_t", target,
+            pipe = LivePostgresRoutedPipe(
+                spark, pg.adapter(spark), ["bench_t"], target,
                 publication="bench_pub", slot="bench_slot",
                 config=PipeConfig(peek_changes_limit=65_536),
             )
             pipe.initialize()
 
             t0 = time.perf_counter()
-            n_snap = pipe.first_sync()
+            n_snap = pipe.first_sync()["bench_t"]
             snap_sec = time.perf_counter() - t0
 
             per = n_rows // n_txns

@@ -2,9 +2,8 @@
 
 The reference introspects source catalogs (information_schema /
 pg_catalog, adapter/postgres.rs:696-758) and mirrors them into the sink.
-Here the catalog is Spark-native: tables are parquet datasets registered
-as temp views; schemas come from parquet footers (authoritative), and
-``spark.catalog`` is the introspection surface.
+Here the catalog is Spark-native: tables are parquet datasets loaded by
+name (``load_table``); schemas come from parquet footers (authoritative).
 
 Primary / merge keys mirror FIXTURES.md (composite PK handling follows the
 reference's multi-column PK rendering, pipes/postgres.rs:789-802).
@@ -133,13 +132,6 @@ def load_table(
             df = df.withColumn("ts", F.to_timestamp(F.col("ts")))
     per_session[key] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
-    """Register every table as a temp view so SQL-shaped operators can
-    refer to them by name."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def table_schema(spark: SparkSession, sf_dir: str, name: str):

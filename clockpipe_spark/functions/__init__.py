@@ -1,7 +1,4 @@
 from clockpipe_spark.functions.casts import (  # noqa: F401
-    pg_bool_parse,
-    pg_to_int,
-    pg_to_real,
     pg_datetime_trunc,
     pg_array_parse,
     pg_string_array_parse,

@@ -3,8 +3,8 @@
 The reference casts every replicated value through a target-type dispatch
 (adapter/clickhouse.rs:126-158) whose per-type behaviors carry
 correctness-critical quirks (SURVEY.md §1.3). Each function here builds a
-*pure column expression* — JVM-side, codegen-friendly, no Python UDFs —
-that reproduces one quirk exactly:
+*pure column expression* (the scalar pg casts as SQL strings) — JVM-side,
+codegen-friendly, no Python UDFs — that reproduces one quirk exactly:
 
 - integers: non-parsing text -> 0           (pgoutput.rs:82-89)
 - reals:    non-parsing text -> 0.0         (pgoutput.rs:91-98)
@@ -52,17 +52,27 @@ _F64_RE = (
 # Spark's special-literal fold recognizes case-insensitive 'nan' only
 # UNSIGNED, so '-nan'/'+NAN' abort the ANSI cast (CAST_INVALID_INPUT,
 # verified live — ADVICE r16 HIGH) while Rust f64::from_str and DuckDB
-# TRY_CAST both yield NaN. Matched first and emitted as lit(NaN).
+# TRY_CAST both yield NaN. Matched first and emitted as a NaN literal.
 _NAN_RE = r"^[+-]?[nN][aA][nN]$"
 
 
-def rust_trim(col: Column) -> Column:
+# The scalar casts below are SQL strings, parsed JVM-side in one call:
+# a Column builder of the same tree issued dozens of py4j round trips
+# per call (~0.14 s each, profiled on cdc_cast_matrix). Callers embed
+# them in selectExpr / F.expr.
+
+
+def _sql_lit(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def rust_trim_sql(col_sql: str) -> str:
     """`str::trim` semantics: strip Rust's Unicode White_Space set from
     both ends (and nothing else — NOT \\x1c-\\x1f)."""
-    return F.regexp_replace(col, _RUST_TRIM_RE, "")
+    return f"regexp_replace({col_sql}, {_sql_lit(_RUST_TRIM_RE)}, '')"
 
 
-def pg_to_int(col: Column) -> Column:
+def pg_to_int_sql(col_sql: str) -> str:
     """Text -> integer with the reference's zero-default on parse failure.
 
     trim-then-parse like pgoutput.rs:82-89. DELIBERATE DIVERGENCE for
@@ -83,13 +93,14 @@ def pg_to_int(col: Column) -> Column:
     string (ADVICE r17 low: this docstring previously claimed all
     int64-overflowing strings are parse Errs in Rust; only >u64 ones
     are)."""
-    s = rust_trim(col.cast("string"))
-    return F.coalesce(
-        F.when(s.rlike(_INT_RE), s.try_cast("bigint")), F.lit(0)
-    ).alias("pg_int")
+    s = rust_trim_sql(f"CAST({col_sql} AS STRING)")
+    return (
+        f"coalesce(CASE WHEN {s} RLIKE {_sql_lit(_INT_RE)}"
+        f" THEN try_cast({s} AS BIGINT) END, 0)"
+    )
 
 
-def pg_to_real(col: Column) -> Column:
+def pg_to_real_sql(col_sql: str) -> str:
     """Text -> double; non-parsing text -> 0.0 (pgoutput.rs:91-98).
 
     The grammar regex (Rust's f64::from_str) gates the cast: Spark's
@@ -99,26 +110,28 @@ def pg_to_real(col: Column) -> Column:
     or case-variant NaN is special-cased FIRST — it passes the Rust
     grammar but aborts Spark's ANSI cast (ADVICE r16 HIGH) — and the
     remaining arm uses try_cast so this expression can never abort,
-    mirroring pg_to_int's never-abort shape (whose u64 divergence is
-    documented there; no such issue here — f64::from_str saturates
+    mirroring pg_to_int_sql's never-abort shape (whose u64 divergence
+    is documented there; no such issue here — f64::from_str saturates
     rather than overflows, matching Spark's double cast)."""
-    s = rust_trim(col.cast("string"))
-    return F.coalesce(
-        F.when(s.rlike(_NAN_RE), F.lit(float("nan")))
-        .when(s.rlike(_F64_RE), s.try_cast("double")),
-        F.lit(0.0),
+    s = rust_trim_sql(f"CAST({col_sql} AS STRING)")
+    return (
+        f"coalesce(CASE WHEN {s} RLIKE {_sql_lit(_NAN_RE)}"
+        f" THEN CAST('NaN' AS DOUBLE)"
+        f" WHEN {s} RLIKE {_sql_lit(_F64_RE)}"
+        f" THEN try_cast({s} AS DOUBLE) END, CAST(0.0 AS DOUBLE))"
     )
 
 
-def pg_bool_parse(col: Column) -> Column:
+def pg_bool_parse_sql(col_sql: str) -> str:
     """'t' | '1' | 'true' -> TRUE, anything else (including NULL and
     untrimmed ' t ') -> FALSE.
 
     Exact mirror of the reference: it only lowercases (no trim), and a
     NULL value routes through text_or("false") -> FALSE rather than
     propagating NULL (pgoutput.rs:157-163, parse_bool + to_bool)."""
-    return F.coalesce(
-        F.lower(col.cast("string")).isin("t", "1", "true"), F.lit(False)
+    return (
+        f"coalesce(lower(CAST({col_sql} AS STRING)) IN ('t', '1', 'true'),"
+        " false)"
     )
 
 
@@ -229,7 +242,6 @@ def mongo_timestamp_str(secs: Column) -> Column:
 # fits int64 and takes the fast plain-cast arm; the 19+-digit tail
 # (unreachable for BSON-origin values, possible for other callers)
 # takes a per-element try_cast — slow, but only on matched elements.
-_INT_RE = r"^[+-]?[0-9]+$"
 _INT_SAFE_RE = r"^[+-]?[0-9]{1,18}$"
 _DBL_RE = r"^[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?$"
 
@@ -277,45 +289,8 @@ def mongo_string_array(col: Column) -> Column:
     return F.filter(col, lambda x: x.isNotNull())
 
 
-# ---- SQL-string twins (r21, guide §1.2 driver boundary) ----
-# The Column builders above issue dozens of py4j round trips per call
-# (~0.14 s each profiled on cdc_cast_matrix); these build the IDENTICAL
-# expression trees as SQL strings that parse JVM-side in one call
-# (plan_equiv-verified at the call sites). They share the regex
-# constants verbatim, so the two forms cannot drift.
-
-
-def _sql_lit(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def rust_trim_sql(col_sql: str) -> str:
-    return f"regexp_replace({col_sql}, {_sql_lit(_RUST_TRIM_RE)}, '')"
-
-
-def pg_to_int_sql(col_sql: str) -> str:
-    s = rust_trim_sql(f"CAST({col_sql} AS STRING)")
-    return (
-        f"coalesce(CASE WHEN {s} RLIKE {_sql_lit(_INT_RE)}"
-        f" THEN try_cast({s} AS BIGINT) END, 0)"
-    )
-
-
-def pg_to_real_sql(col_sql: str) -> str:
-    s = rust_trim_sql(f"CAST({col_sql} AS STRING)")
-    return (
-        f"coalesce(CASE WHEN {s} RLIKE {_sql_lit(_NAN_RE)}"
-        f" THEN CAST('NaN' AS DOUBLE)"
-        f" WHEN {s} RLIKE {_sql_lit(_F64_RE)}"
-        f" THEN try_cast({s} AS DOUBLE) END, CAST(0.0 AS DOUBLE))"
-    )
-
-
-def pg_bool_parse_sql(col_sql: str) -> str:
-    return (
-        f"coalesce(lower(CAST({col_sql} AS STRING)) IN ('t', '1', 'true'),"
-        " false)"
-    )
+# SQL form of pg_datetime_trunc for selectExpr callers; both forms
+# have registry callers.
 
 
 def pg_datetime_trunc_sql(col_sql: str) -> str:

@@ -1,5 +1,5 @@
 """Vector/embedding primitives: cosine similarity as a pure Catalyst
-expression, plus a random-hyperplane LSH bucketizer (Arrow-vectorized).
+expression, plus multi-table hyperplane LSH, IVF and PQ (Arrow-vectorized).
 
 The exact path (zip_with + aggregate fold) stays JVM-side in whole-stage
 codegen; LSH bucket assignment uses one pandas UDF doing a single numpy
@@ -48,25 +48,6 @@ def cosine_prenormed(a: Column, b: Column, a_norm_sq: Column, b_norm_sq: Column)
     """Pair-join cosine with per-side norms precomputed before the join —
     the join output evaluates one fold (the dot) instead of three."""
     return dot(a, b) / F.sqrt(a_norm_sq * b_norm_sq)
-
-
-def hyperplane_lsh_bucketizer(dim: int, n_planes: int = 16, seed: int = 42):
-    """Returns a pandas UDF mapping array<float/double> -> int64 bucket of
-    sign bits against `n_planes` fixed random hyperplanes.
-
-    Deterministic: planes come from a seeded RandomState. Vectorized: one
-    (batch × dim) @ (dim × n_planes) matmul per Arrow batch.
-    """
-    planes = np.random.RandomState(seed).randn(dim, n_planes)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    @pandas_udf("long")
-    def bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())  # (batch, dim)
-        bits = (mat @ planes) >= 0  # (batch, n_planes)
-        return pd.Series(bits @ weights)
-
-    return bucket
 
 
 def ivf_assigner(centroids: np.ndarray, nprobe: int = 1, deterministic: bool = True):

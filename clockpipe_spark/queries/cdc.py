@@ -31,12 +31,9 @@ from clockpipe_spark.functions.casts import (
     mongo_epoch_seconds,
     mongo_string_array,
     mongo_timestamp_str,
-    pg_bool_parse,
     _F64_RE,
     _RUST_WS,
     pg_datetime_trunc,
-    pg_to_int,
-    pg_to_real,
 )
 
 _CLOG_CTE = f"WITH changelog AS ({CHANGELOG_SQL})"

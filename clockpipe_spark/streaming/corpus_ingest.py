@@ -105,8 +105,8 @@ class CorpusIngestPipeline:
 
         Corpus commit protocol (r13): the corpus write goes to a
         deterministic ``batch=<id>`` directory via the dedup layer's
-        ``pre_commit`` hook — i.e. BEFORE the state's shorts/sigs
-        commit marker — guarded by the directory's ``_SUCCESS`` file.
+        ``pre_commit`` hook — i.e. BEFORE the state's sigs commit
+        marker — guarded by the directory's ``_SUCCESS`` file.
         The old order (state fully committed, THEN a blind corpus
         append filtered by pre-batch admitted_ids) had an unhealable
         window: a crash between the two left the docs

@@ -9,12 +9,11 @@ the replication slot itself, advanced only AFTER every merge commits
 versioned keyed merge absorbs the duplicates, exactly like the
 parquet-changelog twin (``SyncJob``).
 
-``LivePostgresRoutedPipe`` is the real unit — N tables through ONE
+``LivePostgresRoutedPipe`` is the one unit — N tables through ONE
 publication and ONE slot, frames decoded once and routed by relation
 OID (the reference's deployment shape, pipes/postgres.rs:355-426 +
-sync routing A2).  ``LivePostgresCdcPipe`` is the single-table
-convenience wrapper over it, so every protocol rule lives in exactly
-one place.
+sync routing A2).  The reference's single-table pipe is the routed
+pipe with ``tables=[table]``.
 
 Snapshot/replay idempotence anchor: snapshot rows are stamped with
 version 0, BELOW every replayable record LSN, so every replayed
@@ -347,63 +346,3 @@ class LivePostgresRoutedPipe:
     def replica(self, table: str) -> DataFrame | None:
         return self.stores[table].read(self.spark)
 
-
-class LivePostgresCdcPipe:
-    """One table, one publication, one pgoutput slot — the reference's
-    per-pipe unit.  A thin wrapper over ``LivePostgresRoutedPipe`` with
-    ``tables=[table]`` and flattened return shapes, so the protocol
-    (stamp-before-read, skip-only advance, truncate ordering, K5,
-    merge-then-advance) lives in exactly one implementation."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        source: JdbcPostgresSource,
-        table: str,
-        target_root: str,
-        publication: str,
-        slot: str,
-        config: PipeConfig | None = None,
-        keys: Sequence[str] | None = None,
-    ):
-        self.table = table
-        self._routed = LivePostgresRoutedPipe(
-            spark, source, [table], target_root, publication, slot,
-            config=config,
-            key_overrides={table: keys} if keys else None,
-        )
-        self.store = self._routed.stores[table]
-
-    @property
-    def columns(self) -> list[PgColumn]:
-        return self._routed.columns[self.table]
-
-    @property
-    def keys(self) -> list[str]:
-        return self._routed.keys[self.table]
-
-    def initialize(self) -> list[str]:
-        return self._routed.initialize()
-
-    def first_sync(self) -> int | None:
-        copied = self._routed.first_sync()
-        return copied.get(self.table)
-
-    def sync_iteration(self) -> dict[str, int]:
-        routed = self._routed.sync_iteration()
-        if not routed:
-            return {}
-        if SKIP_ONLY in routed and self.table not in routed:
-            return {"skip_only_frames": routed[SKIP_ONLY]["frames"]}
-        return routed.get(self.table, {})
-
-    def sync_loop(
-        self,
-        max_iterations: int | None = None,
-        sleep: bool = False,
-        daemon: bool = False,
-    ) -> int:
-        return self._routed.sync_loop(max_iterations, sleep=sleep, daemon=daemon)
-
-    def replica(self) -> DataFrame | None:
-        return self._routed.replica(self.table)

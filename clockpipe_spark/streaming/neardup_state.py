@@ -8,11 +8,11 @@ corpus. A streaming corpus needs dedup against accumulated history —
 this operator is that state layer.
 
 100 TB design:
-- State is three append-only parquet logs: ``bands`` (id, band_idx,
+- State is two append-only parquet logs: ``bands`` (id, band_idx,
   band_hash — 3 narrow columns, the only thing the candidate join ever
-  shuffles), ``sigs`` (id, minhash) consulted only for the surviving
-  candidate pairs, and ``shorts`` (id, text_hash) for docs too short to
-  shingle. Appending a batch is a blind write — no rewrite of history
+  shuffles) and ``sigs`` (id, minhash), consulted only for the
+  surviving candidate pairs and written last as each batch's commit
+  marker. Appending a batch is a blind write — no rewrite of history
   (contrast: the replica store's merge path).
 - The band and sig logs are two instances of one bucketed LSM log
   (``_BucketedLog``): bands bucket on ``band_hash`` (the probe prunes
@@ -27,9 +27,10 @@ this operator is that state layer.
   collisions, never all-pairs.
 - Docs with < 3 tokens produce no shingles, hence no MinHash signature;
   they route through an EXACT dedup keyed on xxhash64(lower(trim(
-  text))) against the ``shorts`` log (ADVICE r3: unconditional
-  admission re-admitted exact copies of short docs forever). Their
-  text hash rides the same probe join as a band key of its own.
+  text))) (ADVICE r3: unconditional admission re-admitted exact copies
+  of short docs forever). That hash is the doc's one LSH key, band -1,
+  so it lands in the band log and rides the same probe join; its sig
+  row carries a NULL minhash and only marks the doc admitted.
 - Admission ordering inside a batch follows the id order (lowest id of a
   colliding pair wins), matching the batch pair-miner's keep-lowest
   convention.
@@ -50,7 +51,9 @@ from clockpipe_spark.operators.neardup import (
 
 _BANDS_SCHEMA = "id long, band_idx int, band_hash long"
 _SIGS_SCHEMA = "id long, minhash array<long>"
-_SHORTS_SCHEMA = "id long, text_hash long"
+# sig-log size past which the verify join switches from the lazy
+# full-log plan to checkpoint-cand + bucket-pruned reads
+PRUNE_VERIFY_BYTES = 256 << 20
 
 
 def empty_df(spark: SparkSession, schema: str) -> DataFrame:
@@ -58,9 +61,8 @@ def empty_df(spark: SparkSession, schema: str) -> DataFrame:
     spark.createDataFrame([], schema) builds an RDD-backed relation
     whose EVERY job execution spins Python workers — measured 0.47-0.52
     s per count() vs 0.13-0.16 s for this range(0) projection (r14).
-    One SQL cast per column keeps it at a few py4j round trips: the
-    ingest plans an empty shorts history every batch of a gated
-    corpus."""
+    One SQL cast per column keeps it at a few py4j round trips: every
+    read of a state log that holds no files yet plans one."""
     from pyspark.sql import types as T
 
     return spark.range(0).selectExpr(
@@ -267,7 +269,6 @@ class StreamingNearDup:
         n_band_buckets: int = 64,
         compact_after_files: int = 32,
         n_sig_buckets: int = 64,
-        prune_verify_bytes: int = 256 << 20,
     ):
         self.spark = spark
         self._bands = _BucketedLog(
@@ -292,14 +293,10 @@ class StreamingNearDup:
         )
         self.bands_dir = self._bands.path
         self.sigs_dir = self._sigs.path
-        self.shorts_dir = os.path.join(root, "shorts")
         self.n_hashes = n_hashes
         self.n_bands = n_bands
         self.threshold = threshold
         self.compact_after_files = compact_after_files
-        # sig-log size past which the verify join switches from the
-        # lazy full-log plan to checkpoint-cand + bucket-pruned reads
-        self.prune_verify_bytes = prune_verify_bytes
         os.makedirs(root, exist_ok=True)
         self._pin_layout(root)
 
@@ -336,6 +333,13 @@ class StreamingNearDup:
                 "log layouts may be mixed — re-run resize_buckets() to "
                 "completion on a store opened with the OLD counts after "
                 "removing the marker, or rebuild the store."
+            )
+        if parquet_files(os.path.join(root, "shorts")):
+            raise ValueError(
+                f"StreamingNearDup store at {root} holds a shorts/ log. "
+                "Short docs now live in the band and sig logs, and the "
+                "shorts log is not read — opening the store would re-admit "
+                "every short doc it holds. Rebuild the store."
             )
         want = self._layout()
         if os.path.exists(layout_path):
@@ -409,13 +413,6 @@ class StreamingNearDup:
         self._write_layout()
         os.remove(marker)
 
-    def _files(self, path: str) -> list[str]:
-        return parquet_files(path)
-
-    def _band_files(self, buckets: list[int] | None) -> list[str]:
-        """Band-log read paths for the given band_hash-bucket ids."""
-        return self._bands.paths(buckets)
-
     def _id_buckets(self, df: DataFrame, col: str) -> list[int]:
         """Distinct pmod(col, n_sig_buckets) values — bounded by
         n_sig_buckets, collected from a cached/checkpointed frame.
@@ -427,16 +424,6 @@ class StreamingNearDup:
             .distinct()
             .collect()
         ]
-
-    def _history(self, path: str, schema: str) -> DataFrame:
-        """Snapshot of every data file of the state log at ``path``."""
-        return read_snapshot(self.spark, parquet_files(path), schema)
-
-    def _shorts(self) -> DataFrame:
-        """Snapshot of the shorts log: never compacted, so one
-        directory path however many files it holds."""
-        paths = [self.shorts_dir] if parquet_files(self.shorts_dir) else []
-        return read_snapshot(self.spark, paths, _SHORTS_SCHEMA)
 
     def process_batch(
         self,
@@ -452,17 +439,17 @@ class StreamingNearDup:
         (their ids are in the state, they do not duplicate it).
 
         ``pre_commit`` (r13): optional callable(admitted_df) executed
-        AFTER the band append but BEFORE the shorts and sigs appends —
-        i.e. strictly before any part of the batch becomes visible to
+        alongside the band append but BEFORE the sigs append — i.e.
+        strictly before any part of the batch becomes visible to
         ``admitted_ids()``. ``admitted_df`` holds the returned rows
         whose ids the state does not hold yet: the rows this batch
         admits. Downstream writers (the corpus append) hook here so a
         crash can never leave a doc admitted-in-state but absent from
-        their own store: every state row that could mark the doc as
-        "already admitted" on replay commits after the downstream
-        write. A pre_commit failure aborts the batch with only band
-        rows written — duplicates the candidate join absorbs, exactly
-        like the compaction crash window."""
+        their own store: the sig row that marks the doc as "already
+        admitted" on replay commits after the downstream write. A
+        pre_commit failure aborts the batch with only band rows
+        written — duplicates the candidate join absorbs, exactly like
+        the compaction crash window."""
         import time as _time
         from concurrent.futures import ThreadPoolExecutor
 
@@ -490,10 +477,10 @@ class StreamingNearDup:
         # hash of its normalized text. Checkpointed once: every later
         # plan of this batch reads it instead of the input, and the
         # statistics the probe needs ride the same job as one
-        # observation — doc and signature counts, the id range (the
-        # row-group pruning of the state-membership read) and the band
-        # buckets the batch hashes into (file-level band-log pruning).
-        # No shuffle lies below the observation, so AQE cannot prune it
+        # observation — the doc count, the id range (the row-group
+        # pruning of the state-membership read) and the band buckets
+        # the batch's keys hash into (file-level band-log pruning). No
+        # shuffle lies below the observation, so AQE cannot prune it
         # even when the quality gate upstream drops every doc.
         obs = Observation()
         batch = (
@@ -507,11 +494,11 @@ class StreamingNearDup:
             .observe(
                 obs,
                 F.expr("count(1) AS n"),
-                F.expr("count(__minhash) AS n_sig"),
                 F.expr(f"min({idq}) AS lo"),
                 F.expr(f"max({idq}) AS hi"),
                 F.expr(
-                    "array_distinct(flatten(collect_set(transform(__bands, "
+                    "array_distinct(flatten(collect_set(transform("
+                    "coalesce(__bands, array(__text_hash)), "
                     f"h -> {self._bands.bucket_sql('h')})))) AS bb"
                 ),
             )
@@ -524,36 +511,30 @@ class StreamingNearDup:
             if pre_commit is not None:
                 pre_commit(empty)
             return empty
-        n_short = stats["n"] - stats["n_sig"]
 
-        # LSH keys: a long doc's band hashes under band_idx 0..n_bands-1;
-        # a short doc's text hash under band_idx -1, so its EXACT dedup
-        # against the shorts log and within the batch rides the same
-        # equi-join as the band probe. The batch's keys, each carrying
-        # its doc's signature, probe ONE stream: the history keys — the
-        # bucket-pruned band log, plus the shorts log when the batch has
-        # short docs — and the batch's own keys, so an intra-batch
-        # candidate arrives with both signatures and only a history
-        # candidate looks its old signature up. The keys are n_bands
-        # rows per doc, each with the signature, so no broadcast is
-        # forced: the planner's size threshold picks the join.
-        keys = batch.selectExpr(
-            f"{idq} AS id",
-            "__minhash AS mn",
+        # A doc's LSH keys, the rows it probes with and appends to the
+        # band log: a long doc's band hashes under band_idx
+        # 0..n_bands-1, a short doc's text hash under band_idx -1, so
+        # its EXACT dedup rides the same equi-join as the band probe.
+        # The batch's keys, each carrying its doc's signature, probe ONE
+        # stream: the bucket-pruned band log and the batch's own keys,
+        # so an intra-batch candidate arrives with both signatures and
+        # only a history candidate looks its old signature up. The keys
+        # are n_bands rows per doc, each with the signature, so no
+        # broadcast is forced: the planner's size threshold picks the
+        # join.
+        lsh_keys = (
             "inline(IF(__minhash IS NULL, "
             "array(named_struct('band_idx', -1, 'band_hash', __text_hash)), "
-            "transform(__bands, (h, i) -> named_struct('band_idx', i, 'band_hash', h))))",
+            "transform(__bands, (h, i) -> named_struct('band_idx', i, 'band_hash', h))))"
         )
-        as_hist = ("id", "band_idx", "band_hash", "CAST(NULL AS array<bigint>) AS mo", "true AS hist")
-        stream = self._bands.read(stats["bb"]).selectExpr(*as_hist)
-        if n_short:
-            stream = stream.unionByName(
-                self._shorts().selectExpr(
-                    "id", "-1 AS band_idx", "text_hash AS band_hash", *as_hist[3:]
-                )
+        keys = batch.selectExpr(f"{idq} AS id", "__minhash AS mn", lsh_keys)
+        stream = (
+            self._bands.read(stats["bb"])
+            .selectExpr(
+                "id", "band_idx", "band_hash", "CAST(NULL AS array<bigint>) AS mo", "true AS hist"
             )
-        stream = stream.unionByName(
-            keys.selectExpr("id", "band_idx", "band_hash", "mn AS mo", "false AS hist")
+            .unionByName(keys.selectExpr("id", "band_idx", "band_hash", "mn AS mo", "false AS hist"))
         )
         # a history match must not be the doc itself (replay safety: a
         # re-delivered batch must not match its own admitted rows); a
@@ -579,7 +560,7 @@ class StreamingNearDup:
         # the join re-scans the corpus-sized sig log every batch. Below
         # the gate the lazy plan is cheaper than the extra checkpoint.
         sig_log_bytes = sum(os.path.getsize(f) for f in parquet_files(self.sigs_dir))
-        if sig_log_bytes > self.prune_verify_bytes:
+        if sig_log_bytes > PRUNE_VERIFY_BYTES:
             cand = cand.localCheckpoint(eager=True)
             hist_sigs = self._sigs.read(self._id_buckets(cand.where("hist"), "old_id"))
         else:
@@ -604,12 +585,14 @@ class StreamingNearDup:
         )
 
         # One checkpoint flags every doc: __dup (it duplicates an
-        # earlier or admitted doc) and __known (its id is in the state
-        # already — a replay). Both are IN-subqueries, planned as
-        # existence joins, so neither needs a distinct. The state
-        # membership read is RANGE-FILTERED to the batch's [min, max]
-        # ids (r13): it pushes into the parquet scans, where row-group
-        # stats skip history when streaming ids run ahead of it.
+        # earlier or admitted doc) and __known (its id is in the sig
+        # log already — a replay). Both are IN-subqueries, planned as
+        # existence joins, so neither needs a distinct. __known reads
+        # the sig log only: band rows land before pre_commit, so they
+        # cannot mark a doc admitted. The membership read is
+        # RANGE-FILTERED to the batch's [min, max] ids (r13): it pushes
+        # into the parquet scans, where row-group stats skip history
+        # when streaming ids run ahead of it.
         obs_admit = Observation()
         flagged = (
             batch.select(
@@ -619,51 +602,35 @@ class StreamingNearDup:
                 .isin(self.admitted_ids((stats["lo"], stats["hi"]), distinct=False))
                 .alias("__known"),
             )
-            .observe(
-                obs_admit,
-                F.expr("count_if(NOT __dup AND NOT __known AND __minhash IS NOT NULL) AS n_long"),
-                F.expr("count_if(NOT __dup AND NOT __known AND __minhash IS NULL) AS n_short"),
-            )
+            .observe(obs_admit, F.expr("count_if(NOT __dup AND NOT __known) AS n"))
             .localCheckpoint(eager=True)
         )
-        admit = obs_admit.get
+        n_admit = obs_admit.get["n"]
         _mark("flags_ckpt")
 
         # Every append below is a narrow projection of the one
-        # checkpointed frame; an append with no rows is skipped.
+        # checkpointed frame; a batch that admits no doc appends nothing.
         #
-        # Commit ORDERING (r13, ADVICE r12 #1): the sigs append is the
-        # batch's COMMIT MARKER and must be the last state write: the
-        # __known flag reads the sig log, so if sigs committed before
-        # bands and the driver died between them, a replay would flag
-        # every doc known and never write the missing band rows. With
-        # sigs last, every crash window replays cleanly: bands/shorts
-        # already written but sigs absent → the replay recomputes the
-        # same admitted set and re-appends (duplicate band/short rows
-        # are absorbed by the candidate joins, exactly like the
-        # compaction crash window).
-        #
-        # Full order: [bands ∥ pre_commit] → shorts → sigs.
-        # - bands is independent of the downstream pre_commit write
-        #   (corpus committed without bands heals: no marker → replay
-        #   recomputes, _SUCCESS skips the corpus, bands rewritten), so
-        #   they overlap on driver threads.
-        # - shorts runs AFTER pre_commit because admitted_ids() is sigs
-        #   ∪ shorts — if shorts committed before a downstream
-        #   pre_commit write and the driver crashed between them, the
-        #   replay would flag the batch's short docs known and the
-        #   downstream store would skip (and so permanently lose) them.
+        # Commit ORDERING (r13, ADVICE r12 #1): [bands ∥ pre_commit] →
+        # sigs. The sigs append is the batch's COMMIT MARKER and must be
+        # the last state write: the __known flag reads the sig log, so
+        # if sigs committed before bands or a downstream pre_commit
+        # write and the driver died between them, a replay would flag
+        # every doc known and never write the missing rows. With sigs
+        # last, every crash window replays cleanly: bands already
+        # written but sigs absent → the replay recomputes the same
+        # admitted set and re-appends (duplicate band rows are absorbed
+        # by the candidate joins, exactly like the compaction crash
+        # window). bands is independent of the downstream pre_commit
+        # write (corpus committed without bands heals: no marker →
+        # replay recomputes, _SUCCESS skips the corpus, bands
+        # rewritten), so the two overlap on driver threads.
         out = flagged.where("NOT __dup").select(*doc_cols)
         admitted = flagged.where("NOT __dup AND NOT __known")
-        longs = admitted.where("__minhash IS NOT NULL")
 
         def w_bands() -> None:
-            if admit["n_long"]:
-                self._bands.append(
-                    longs.selectExpr(
-                        f"{idq} AS id", "posexplode(__bands) AS (band_idx, band_hash)"
-                    )
-                )
+            if n_admit:
+                self._bands.append(admitted.selectExpr(f"{idq} AS id", lsh_keys))
 
         def w_pre_commit() -> None:
             if pre_commit is not None:
@@ -674,15 +641,11 @@ class StreamingNearDup:
             for fut in futures:
                 fut.result()  # re-raise the first failure
         _mark("bands_and_pre_commit")
-        if admit["n_short"]:
-            # only after downstream stores are durable
-            admitted.where("__minhash IS NULL").selectExpr(
-                f"{idq} AS id", "__text_hash AS text_hash"
-            ).coalesce(4).write.mode("append").parquet(self.shorts_dir)
-        if admit["n_long"]:
-            # commit marker: only after every other write landed
-            self._sigs.append(longs.selectExpr(f"{idq} AS id", "__minhash AS minhash"))
-        _mark("shorts_and_sigs")
+        if n_admit:
+            # commit marker: only after every other write landed; a
+            # short doc's row carries a NULL minhash
+            self._sigs.append(admitted.selectExpr(f"{idq} AS id", "__minhash AS minhash"))
+        _mark("sigs")
 
         # the two logs compact independently, so on two driver threads
         with ThreadPoolExecutor(max_workers=2) as pool:
@@ -691,10 +654,6 @@ class StreamingNearDup:
                 fut.result()
         _mark("compact")
         return out
-
-    def loose_band_files(self) -> list[str]:
-        """Band-log files not yet folded into the bucketed layout."""
-        return self._bands.loose_files()
 
     def compact_bands(self, force: bool = False) -> int:
         """Fold loose band appends into the ``band_bucket=K`` layout
@@ -709,12 +668,12 @@ class StreamingNearDup:
     def admitted_ids(
         self, id_range: tuple | None = None, distinct: bool = True
     ) -> DataFrame:
-        """Ids admitted so far. ``id_range=(lo, hi)`` (r13) restricts
-        the listing to that id interval — correct ONLY for membership
-        checks against ids known to lie inside it (process_batch's
-        replay flag); pass None for a complete listing. The range
-        predicate pushes into both log scans, where row-group id stats
-        skip clustered history.
+        """Ids admitted so far: the sig log, every admitted doc's commit
+        marker. ``id_range=(lo, hi)`` (r13) restricts the listing to
+        that id interval — correct ONLY for membership checks against
+        ids known to lie inside it (process_batch's replay flag); pass
+        None for a complete listing. The range predicate pushes into
+        the log scan, where row-group id stats skip clustered history.
 
         ``distinct=False`` (r20) skips the dedup exchange for consumers
         whose semantics are duplicate-insensitive — a membership test
@@ -723,9 +682,7 @@ class StreamingNearDup:
         default."""
         # distinct() guards against duplicate state rows from any history
         # written before the replay-idempotence anti-join existed
-        sig_ids = self._sigs.read().select("id")
-        short_ids = self._shorts().select("id")
-        ids = sig_ids.unionByName(short_ids)
+        ids = self._sigs.read().select("id")
         if id_range is not None and id_range[0] is not None:
             ids = ids.where(f"id >= {id_range[0]} AND id <= {id_range[1]}")
         return ids.distinct() if distinct else ids

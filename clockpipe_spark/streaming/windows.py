@@ -7,7 +7,7 @@ The window expressions are the SAME ones the batch queries
 tests, which is exactly how Spark guarantees the unified semantics.
 
 State budgeting at scale: watermark bounds the live window state; keys
-are (window, event_type) / (user_id, session) — narrow, TTL'd by the
+are (window, event_type) / the dedup keys — narrow, TTL'd by the
 watermark, so state size is O(active windows), not O(events).
 """
 
@@ -27,16 +27,6 @@ def tumbling_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def sliding_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """1h windows sliding every 30m."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "n", "sum_value")
-    )
-
-
 def dedup_within_watermark(
     stream: DataFrame, keys: list[str], watermark: str = "2 hours"
 ) -> DataFrame:
@@ -47,13 +37,3 @@ def dedup_within_watermark(
     watermark passes it: bounded state at 100 TB event volume."""
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
-
-def session_stats(stream: DataFrame, gap: str = "30 minutes",
-                  watermark: str = "2 hours") -> DataFrame:
-    """Per-user session windows (inactivity gap) — stateful merge windows."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events", "sum_value")
-    )

@@ -24,16 +24,27 @@ from clockpipe_spark.functions.casts import (
     mongo_string_array,
     mongo_timestamp_str,
     objectid_hex,
-    pg_bool_parse,
+    pg_bool_parse_sql,
     pg_datetime_trunc,
     pg_string_array_parse,
-    pg_to_int,
-    pg_to_real,
+    pg_to_int_sql,
+    pg_to_real_sql,
 )
 
 
 def _one(spark, expr):
     return spark.range(1).select(expr.alias("v")).first()["v"]
+
+
+def _cast(spark, sql, value):
+    """The SQL-string cast ``sql`` applied to ``value`` as a string
+    column."""
+    return (
+        spark.range(1)
+        .select(F.lit(value).cast("string").alias("s"))
+        .select(F.expr(sql("s")).alias("v"))
+        .first()["v"]
+    )
 
 
 def test_datetime_truncation(spark):
@@ -59,18 +70,18 @@ def test_bool_parse(spark):
         (" t ", False),  # reference lowercases but never trims
         (None, False),   # Null -> text_or("false") -> FALSE, not NULL
     ]:
-        got = _one(spark, pg_bool_parse(F.lit(s).cast("string")))
+        got = _cast(spark, pg_bool_parse_sql, s)
         assert got is expected, s
 
 
 def test_numeric_cast_defaults(spark):
     # pgoutput.rs:82-98: failed parses default to zero, not NULL
-    assert _one(spark, pg_to_int(F.lit("12abc"))) == 0
-    assert _one(spark, pg_to_int(F.lit("1.5"))) == 0  # Rust i64 parse fails
-    assert _one(spark, pg_to_int(F.lit("-42"))) == -42
-    assert _one(spark, pg_to_real(F.lit("abc"))) == 0.0
-    assert _one(spark, pg_to_real(F.lit("1.5"))) == 1.5
-    assert _one(spark, pg_to_real(F.lit("-2.25e2"))) == -225.0
+    assert _cast(spark, pg_to_int_sql, "12abc") == 0
+    assert _cast(spark, pg_to_int_sql, "1.5") == 0  # Rust i64 parse fails
+    assert _cast(spark, pg_to_int_sql, "-42") == -42
+    assert _cast(spark, pg_to_real_sql, "abc") == 0.0
+    assert _cast(spark, pg_to_real_sql, "1.5") == 1.5
+    assert _cast(spark, pg_to_real_sql, "-2.25e2") == -225.0
 
 
 def test_numeric_cast_whitespace_fidelity(spark):
@@ -92,7 +103,7 @@ def test_numeric_cast_whitespace_fidelity(spark):
         ("9223372036854775807", 2**63 - 1),
     ]
     for s, expected in int_cases:
-        assert _one(spark, pg_to_int(F.lit(s))) == expected, repr(s)
+        assert _cast(spark, pg_to_int_sql, s) == expected, repr(s)
     real_cases = [
         ("\t1.5", 1.5),
         ("\xa02.5e1 ", 25.0),
@@ -107,8 +118,8 @@ def test_numeric_cast_whitespace_fidelity(spark):
         ("1e999", float("inf")),  # Rust f64 parse saturates, as does Spark
     ]
     for s, expected in real_cases:
-        assert _one(spark, pg_to_real(F.lit(s))) == expected, repr(s)
-    got_nan = _one(spark, pg_to_real(F.lit("NaN")))
+        assert _cast(spark, pg_to_real_sql, s) == expected, repr(s)
+    got_nan = _cast(spark, pg_to_real_sql, "NaN")
     assert got_nan != got_nan  # NaN != NaN
 
 
@@ -204,48 +215,3 @@ def test_mongo_typed_arrays(spark):
     empty = F.array().cast("array<string>")
     assert _one(spark, mongo_array_int(empty)) == []
     assert _one(spark, mongo_string_array(empty)) == []
-
-
-def test_sql_twin_builders_match_column_builders(spark):
-    """r21 exprification pin: the SQL-string cast builders must produce
-    the same results as the Column builders on the quirk corpus (they
-    share the regex constants, so this pins the surrounding SQL)."""
-    from clockpipe_spark.functions.casts import (
-        pg_bool_parse,
-        pg_bool_parse_sql,
-        pg_datetime_trunc,
-        pg_datetime_trunc_sql,
-        pg_to_int,
-        pg_to_int_sql,
-        pg_to_real,
-        pg_to_real_sql,
-    )
-    from pyspark.sql import functions as F
-
-    rows = [
-        ("1",), ("-42",), ("+7",), (" 17 ",), ("\t1\n",), ("1_000",),
-        ("1.5",), ("12abc",), ("",), (None,), ("9223372036854775808",),
-        ("1e999",), ("-nan",), ("NaN",), ("inf",), ("-Infinity",),
-        ("t",), ("TRUE",), ("0",), ("1\x1f",), ("1.5d",),
-        ("2024-03-01 10:20:30.999999",),
-    ]
-    df = spark.createDataFrame(rows, "s string").withColumn(
-        "ts", F.lit("2024-03-01 10:20:30.999999").cast("timestamp")
-    )
-    col_form = df.select(
-        "s",
-        pg_to_int(F.col("s")).alias("i"),
-        pg_to_real(F.col("s")).alias("r"),
-        pg_bool_parse(F.col("s")).alias("b"),
-        pg_datetime_trunc(F.col("ts")).alias("t"),
-    )
-    sql_form = df.selectExpr(
-        "s",
-        f"{pg_to_int_sql('s')} AS i",
-        f"{pg_to_real_sql('s')} AS r",
-        f"{pg_bool_parse_sql('s')} AS b",
-        f"{pg_datetime_trunc_sql('ts')} AS t",
-    )
-    a = {r["s"]: (r["i"], str(r["r"]), r["b"], r["t"]) for r in col_form.collect()}
-    b = {r["s"]: (r["i"], str(r["r"]), r["b"], r["t"]) for r in sql_form.collect()}
-    assert a == b

@@ -14,9 +14,9 @@ from pyspark.sql import functions as F
 from clockpipe_spark.functions.casts import (
     _F64_RE as _F64_PAT,
     _RUST_WS,
-    pg_bool_parse,
-    pg_to_int,
-    pg_to_real,
+    pg_bool_parse_sql,
+    pg_to_int_sql,
+    pg_to_real_sql,
 )
 
 _INT_RE = re.compile(r"^[+-]?[0-9]+$")
@@ -42,7 +42,7 @@ _value = st.one_of(
                          # 2^64-1 parse as u64 in the reference (text
                          # passed through to ClickHouse) but have no
                          # bigint representation here -> documented
-                         # zero-default divergence (pg_to_int); 2^64 is
+                         # zero-default divergence (pg_to_int_sql); 2^64 is
                          # a parse Err in both engines.
                          "9223372036854775808", "18446744073709551615",
                          "18446744073709551616"]),
@@ -63,7 +63,7 @@ def _py_int(s: str) -> int:
     v = int(t)
     # Out-of-bigint-range -> 0: for v >= 2^64 a parse Err in Rust too;
     # for [2^63, 2^64) a DOCUMENTED divergence (the reference's u64
-    # branch passes the text through to ClickHouse, see pg_to_int).
+    # branch passes the text through to ClickHouse, see pg_to_int_sql).
     return v if -(2**63) <= v < 2**63 else 0
 
 
@@ -85,9 +85,9 @@ def test_cast_quirks_match_reference_semantics(spark, values):
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i long, s string")
     rows = df.select(
         "i",
-        pg_to_int(F.col("s")).alias("as_int"),
-        pg_to_real(F.col("s")).alias("as_real"),
-        pg_bool_parse(F.col("s")).alias("as_bool"),
+        F.expr(pg_to_int_sql("s")).alias("as_int"),
+        F.expr(pg_to_real_sql("s")).alias("as_real"),
+        F.expr(pg_bool_parse_sql("s")).alias("as_bool"),
     ).collect()
     by_i = {r["i"]: r for r in rows}
     for i, v in enumerate(values):
@@ -118,8 +118,8 @@ def test_cast_quirks_match_duckdb_oracle_arms(spark, values):
         r["i"]: (r["as_int"], r["as_real"])
         for r in df.select(
             "i",
-            pg_to_int(F.col("s")).alias("as_int"),
-            pg_to_real(F.col("s")).alias("as_real"),
+            F.expr(pg_to_int_sql("s")).alias("as_int"),
+            F.expr(pg_to_real_sql("s")).alias("as_real"),
         ).collect()
     }
     con = duckdb.connect()

@@ -197,7 +197,7 @@ def _ingest_batches() -> list[list[tuple[int, str]]]:
 
 def _state_batches() -> list[list[tuple[int, str]]]:
     """Dedup-layer batches mixing long docs and docs too short to
-    shingle (< 3 tokens), which take the exact-hash shorts path."""
+    shingle (< 3 tokens), whose exact text hash is their one band key."""
     rng = random.Random(13)
     d = [_long_doc(rng) for _ in range(4)]
     return [
@@ -321,7 +321,8 @@ def _corpus_write(mp, pipe, nd):
 INGEST_POINTS = {
     "band_append": (_ingest_run, _append_to("bands_dir")),
     "corpus_write": (_ingest_run, _corpus_write),
-    "shorts_append": (_state_run, _append_to("shorts_dir")),
+    "state_band_append": (_state_run, _append_to("bands_dir")),
+    "state_sigs_append": (_state_run, _append_to("sigs_dir")),
     "sigs_append": (_ingest_run, _append_to("sigs_dir")),
     "band_compaction": (_ingest_run, _compaction_of("bands_dir")),
     "sig_compaction": (_ingest_run, _compaction_of("sigs_dir")),

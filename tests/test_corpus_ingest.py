@@ -157,7 +157,6 @@ def test_crash_after_corpus_before_state_marker_heals(spark, pipe, tmp_path):
     assert pipe.process_batch(batch, batch_id=0).count() == 1
     # simulate losing the state commit AFTER the corpus landed
     shutil.rmtree(pipe.neardup.sigs_dir)
-    shutil.rmtree(pipe.neardup.shorts_dir, ignore_errors=True)
     assert pipe.neardup.admitted_ids().count() == 0
     n_corpus = pipe.corpus("doc_id long, text string").count()
     assert n_corpus == 1

@@ -412,7 +412,7 @@ def test_live_pg_array_literal_renderings(pg, spark):
 def test_live_scalar_renderings_through_cast_matrix(pg, spark):
     """What the wire ACTUALLY carries for bool / numeric / timestamp /
     timestamptz columns, and that the P3 cast matrix lands them: bool
-    renders 't'/'f' (the short form pg_bool_parse keys on),
+    renders 't'/'f' (the short form pg_bool_parse_sql keys on),
     timestamptz renders in the SESSION TimeZone — the cluster pins
     TimeZone=UTC at CREATE so the offset-less rendering the reference
     assumes ('+00' suffix stripped upstream) holds; a deployment whose
@@ -421,10 +421,10 @@ def test_live_scalar_renderings_through_cast_matrix(pg, spark):
     from pyspark.sql import functions as F
 
     from clockpipe_spark.functions.casts import (
-        pg_bool_parse,
+        pg_bool_parse_sql,
         pg_datetime_trunc,
-        pg_to_int,
-        pg_to_real,
+        pg_to_int_sql,
+        pg_to_real_sql,
     )
 
     pg.sql("ALTER DATABASE postgres SET timezone TO 'UTC'")
@@ -462,8 +462,8 @@ def test_live_scalar_renderings_through_cast_matrix(pg, spark):
         r["id"]: (r["b"], r["p"], str(r["t"]), str(r["tz"]), r["bad_int"])
         for r in df.select(
             "id",
-            pg_bool_parse(F.col("ok")).alias("b"),
-            pg_to_real(F.col("price")).alias("p"),
+            F.expr(pg_bool_parse_sql("ok")).alias("b"),
+            F.expr(pg_to_real_sql("price")).alias("p"),
             pg_datetime_trunc(
                 F.to_timestamp(F.col("ts"))
             ).alias("t"),
@@ -472,7 +472,7 @@ def test_live_scalar_renderings_through_cast_matrix(pg, spark):
             pg_datetime_trunc(
                 F.to_timestamp(F.substring(F.col("tstz"), 1, 26))
             ).alias("tz"),
-            pg_to_int(F.col("price")).alias("bad_int"),
+            F.expr(pg_to_int_sql("price")).alias("bad_int"),
         ).collect()
     }
     assert got[1] == (True, 1234.5, "2024-01-02 03:04:05",
@@ -660,7 +660,7 @@ def test_live_end_to_end_snapshot_plus_cdc(pg, spark):
 
 
 # ---------------------------------------------------------------------------
-# LivePostgresCdcPipe: the full IPipe lifecycle against the real server
+# The routed pipe on one table: the full IPipe lifecycle against the real server
 
 
 def test_live_pipe_full_lifecycle(pg, spark, tmp_path):
@@ -669,7 +669,7 @@ def test_live_pipe_full_lifecycle(pg, spark, tmp_path):
     iterations, with during-snapshot changes absorbed idempotently by
     the WAL-stamped snapshot."""
     from clockpipe_spark.config import PipeConfig
-    from clockpipe_spark.streaming.live_pipe import LivePostgresCdcPipe
+    from clockpipe_spark.streaming.live_pipe import LivePostgresRoutedPipe
 
     pg.sql(
         "CREATE TABLE live_pipe_t (id int PRIMARY KEY, v text, "
@@ -680,17 +680,17 @@ def test_live_pipe_full_lifecycle(pg, spark, tmp_path):
         "g * 1.25, '2024-01-01'::timestamp + g * interval '1 min' "
         "FROM generate_series(1, 40) g"
     )
-    pipe = LivePostgresCdcPipe(
-        spark, pg.adapter(spark), "live_pipe_t", str(tmp_path),
+    pipe = LivePostgresRoutedPipe(
+        spark, pg.adapter(spark), ["live_pipe_t"], str(tmp_path),
         publication="live_pipe_pub", slot="live_pipe_slot",
         config=PipeConfig(peek_changes_limit=30),
     )
-    assert pipe.keys == ["id"]
+    assert pipe.keys == {"live_pipe_t": ["id"]}
     issued = pipe.initialize()
     assert len(issued) == 2  # publication + slot created
     assert pipe.initialize() == []  # idempotent
-    assert pipe.first_sync() == 40
-    assert pipe.first_sync() is None  # K6 guard
+    assert pipe.first_sync()["live_pipe_t"] == 40
+    assert pipe.first_sync() == {}  # K6 guard
 
     # churn in many single-statement transactions so the cap splits it
     for i in range(1, 21):
@@ -705,7 +705,7 @@ def test_live_pipe_full_lifecycle(pg, spark, tmp_path):
 
     got = {
         (r["id"], r["v"], r["ok"], str(r["price"]), str(r["at"]))
-        for r in pipe.replica().select(
+        for r in pipe.replica("live_pipe_t").select(
             "id", "v", "ok",
             F.col("price").cast("decimal(10,2)").alias("price"), "at"
         ).collect()
@@ -724,12 +724,12 @@ def test_live_pipe_full_lifecycle(pg, spark, tmp_path):
 
 
 def test_live_pipe_truncate_propagation(pg, spark, tmp_path):
-    from clockpipe_spark.streaming.live_pipe import LivePostgresCdcPipe
+    from clockpipe_spark.streaming.live_pipe import LivePostgresRoutedPipe
 
     pg.sql("CREATE TABLE live_pipe_tr (id int PRIMARY KEY, v text)")
     pg.sql("INSERT INTO live_pipe_tr VALUES (1, 'a'), (2, 'b')")
-    pipe = LivePostgresCdcPipe(
-        spark, pg.adapter(spark), "live_pipe_tr", str(tmp_path),
+    pipe = LivePostgresRoutedPipe(
+        spark, pg.adapter(spark), ["live_pipe_tr"], str(tmp_path),
         publication="live_pipe_pub2", slot="live_pipe_slot2",
     )
     pipe.initialize()
@@ -737,9 +737,9 @@ def test_live_pipe_truncate_propagation(pg, spark, tmp_path):
     pg.sql("INSERT INTO live_pipe_tr VALUES (3, 'c')")
     pg.sql("TRUNCATE live_pipe_tr")
     pg.sql("INSERT INTO live_pipe_tr VALUES (9, 'reborn')")
-    counters = pipe.sync_iteration()
+    counters = pipe.sync_iteration()["live_pipe_tr"]
     assert counters.get("T") == 1
-    got = [(r["id"], r["v"]) for r in pipe.replica().collect()]
+    got = [(r["id"], r["v"]) for r in pipe.replica("live_pipe_tr").collect()]
     assert got == [(9, "reborn")]  # only the post-truncate row survives
 
 
@@ -749,13 +749,13 @@ def test_live_pipe_crash_between_merge_and_advance_replays(pg, spark, tmp_path):
     next iteration re-peeks and re-merges the SAME frames — the
     versioned keyed merge must absorb the duplicates and the slot must
     end fully advanced."""
-    from clockpipe_spark.streaming.live_pipe import LivePostgresCdcPipe
+    from clockpipe_spark.streaming.live_pipe import LivePostgresRoutedPipe
 
     pg.sql("CREATE TABLE live_pipe_cr (id int PRIMARY KEY, v text)")
     pg.sql("INSERT INTO live_pipe_cr VALUES (1, 'a')")
     src = pg.adapter(spark)
-    pipe = LivePostgresCdcPipe(
-        spark, src, "live_pipe_cr", str(tmp_path),
+    pipe = LivePostgresRoutedPipe(
+        spark, src, ["live_pipe_cr"], str(tmp_path),
         publication="live_pipe_pub3", slot="live_pipe_slot3",
     )
     pipe.initialize()
@@ -775,9 +775,9 @@ def test_live_pipe_crash_between_merge_and_advance_replays(pg, spark, tmp_path):
     src.advance_slot = crashing_advance
     with pytest.raises(RuntimeError, match="injected crash"):
         pipe.sync_iteration()  # merged, NOT advanced
-    counters = pipe.sync_iteration()  # replays the same frames
+    counters = pipe.sync_iteration()["live_pipe_cr"]  # replays the same frames
     assert counters == {"U": 1, "I": 1}
-    got = sorted((r["id"], r["v"]) for r in pipe.replica().collect())
+    got = sorted((r["id"], r["v"]) for r in pipe.replica("live_pipe_cr").collect())
     assert got == [(1, "b"), (2, "x")]
     assert pipe.sync_iteration() == {}  # now drained — advance stuck
 
@@ -835,12 +835,12 @@ def test_live_pipe_add_column_evolution(pg, spark, tmp_path):
     history — rows written BEFORE the ALTER (including pre-ALTER frames
     inside the same sync batch) read NULL for the new column, matching
     the server for a no-default add."""
-    from clockpipe_spark.streaming.live_pipe import LivePostgresCdcPipe
+    from clockpipe_spark.streaming.live_pipe import LivePostgresRoutedPipe
 
     pg.sql("CREATE TABLE live_evo (id int PRIMARY KEY, v text)")
     pg.sql("INSERT INTO live_evo VALUES (1, 'a')")
-    pipe = LivePostgresCdcPipe(
-        spark, pg.adapter(spark), "live_evo", str(tmp_path),
+    pipe = LivePostgresRoutedPipe(
+        spark, pg.adapter(spark), ["live_evo"], str(tmp_path),
         publication="live_evo_pub", slot="live_evo_slot",
     )
     pipe.initialize()
@@ -850,11 +850,11 @@ def test_live_pipe_add_column_evolution(pg, spark, tmp_path):
     pg.sql("ALTER TABLE live_evo ADD COLUMN score int")
     pg.sql("INSERT INTO live_evo VALUES (3, 'c', 30)")
     pg.sql("UPDATE live_evo SET score = 10 WHERE id = 1")
-    counters = pipe.sync_iteration()
+    counters = pipe.sync_iteration()["live_evo"]
     assert counters == {"I": 2, "U": 1}
-    assert [c.column_name for c in pipe.columns] == ["id", "v", "score"]
+    assert [c.column_name for c in pipe.columns["live_evo"]] == ["id", "v", "score"]
     got = sorted(
-        (r["id"], r["v"], r["score"]) for r in pipe.replica().collect()
+        (r["id"], r["v"], r["score"]) for r in pipe.replica("live_evo").collect()
     )
     live = sorted(
         (r["id"], r["v"], r["score"])
@@ -867,7 +867,7 @@ def test_live_stray_relation_refuses_to_advance(pg, spark, tmp_path):
     """A pre-existing publication covering MORE tables than the pipe is
     configured with: the stray table's frames must RAISE, not be
     silently dropped and advanced past (the slot cannot rewind)."""
-    from clockpipe_spark.streaming.live_pipe import LivePostgresCdcPipe
+    from clockpipe_spark.streaming.live_pipe import LivePostgresRoutedPipe
 
     pg.sql("CREATE TABLE live_stray_a (id int PRIMARY KEY)")
     pg.sql("CREATE TABLE live_stray_b (id int PRIMARY KEY)")
@@ -875,8 +875,8 @@ def test_live_stray_relation_refuses_to_advance(pg, spark, tmp_path):
     # schema (a real JDBC relation can — seam limitation, not pipe's)
     pg.sql("INSERT INTO live_stray_a VALUES (0)")
     pg.sql("CREATE PUBLICATION live_stray_pub FOR TABLE live_stray_a, live_stray_b")
-    pipe = LivePostgresCdcPipe(
-        spark, pg.adapter(spark), "live_stray_a", str(tmp_path),
+    pipe = LivePostgresRoutedPipe(
+        spark, pg.adapter(spark), ["live_stray_a"], str(tmp_path),
         publication="live_stray_pub", slot="live_stray_slot",
     )
     pipe.initialize()
@@ -895,12 +895,12 @@ def test_live_pk_changing_update_leaves_exactly_one_row(pg, spark, tmp_path):
     with exactly one row for the moved record.  (Documented divergence:
     the reference's ReplacingMergeTree sink leaves the stale old-key
     row behind forever.)"""
-    from clockpipe_spark.streaming.live_pipe import LivePostgresCdcPipe
+    from clockpipe_spark.streaming.live_pipe import LivePostgresRoutedPipe
 
     pg.sql("CREATE TABLE live_pkmove (id int PRIMARY KEY, v text)")
     pg.sql("INSERT INTO live_pkmove VALUES (1, 'a'), (5, 'e')")
-    pipe = LivePostgresCdcPipe(
-        spark, pg.adapter(spark), "live_pkmove", str(tmp_path),
+    pipe = LivePostgresRoutedPipe(
+        spark, pg.adapter(spark), ["live_pkmove"], str(tmp_path),
         publication="live_pkmove_pub", slot="live_pkmove_slot",
     )
     pipe.initialize()
@@ -911,9 +911,9 @@ def test_live_pk_changing_update_leaves_exactly_one_row(pg, spark, tmp_path):
     # and a same-batch re-insert of the vacated key must win over the
     # tombstone (higher LSN)
     pg.sql("INSERT INTO live_pkmove VALUES (1, 'reborn')")
-    counters = pipe.sync_iteration()
+    counters = pipe.sync_iteration()["live_pkmove"]
     assert counters == {"U": 1, "I": 1}
-    got = sorted((r["id"], r["v"]) for r in pipe.replica().collect())
+    got = sorted((r["id"], r["v"]) for r in pipe.replica("live_pkmove").collect())
     live = sorted(
         (r["id"], r["v"]) for r in pg.rows("SELECT id, v FROM live_pkmove")
     )
@@ -939,12 +939,12 @@ def test_live_inflight_transaction_across_first_sync_converges(
     import subprocess
     import time
 
-    from clockpipe_spark.streaming.live_pipe import LivePostgresCdcPipe
+    from clockpipe_spark.streaming.live_pipe import LivePostgresRoutedPipe
 
     pg.sql("CREATE TABLE live_race (id int PRIMARY KEY, v text)")
     pg.sql("INSERT INTO live_race VALUES (1, 'committed')")
-    pipe = LivePostgresCdcPipe(
-        spark, pg.adapter(spark), "live_race", str(tmp_path),
+    pipe = LivePostgresRoutedPipe(
+        spark, pg.adapter(spark), ["live_race"], str(tmp_path),
         publication="live_race_pub", slot="live_race_slot",
     )
     pipe.initialize()
@@ -971,8 +971,8 @@ def test_live_inflight_transaction_across_first_sync_converges(
         else:
             raise AssertionError("in-flight transaction never settled")
 
-        assert pipe.first_sync() == 1  # MVCC: in-flight row invisible
-        snap = {r["id"] for r in pipe.replica().collect()}
+        assert pipe.first_sync()["live_race"] == 1  # MVCC: in-flight row invisible
+        snap = {r["id"] for r in pipe.replica("live_race").collect()}
         assert snap == {1}, "precondition: the race window was real"
 
         proc.stdin.write("COMMIT;\n")
@@ -982,9 +982,9 @@ def test_live_inflight_transaction_across_first_sync_converges(
         if proc.poll() is None:
             proc.kill()
 
-    counters = pipe.sync_iteration()
+    counters = pipe.sync_iteration()["live_race"]
     assert counters == {"I": 1}
-    got = sorted((r["id"], r["v"]) for r in pipe.replica().collect())
+    got = sorted((r["id"], r["v"]) for r in pipe.replica("live_race").collect())
     assert got == [(1, "committed"), (2, "inflight")], (
         "replayed in-flight change must win the merge against the "
         "snapshot (version-0 stamping); losing it is permanent silent "
@@ -998,12 +998,12 @@ def test_live_bytea_snapshot_and_cdc_state_agree(pg, spark, tmp_path):
     (_typed_cell), or snapshot state and CDC state silently disagree
     for the same column (ADVICE r8).  One row lands via the snapshot,
     one via CDC; both must equal the live bytes."""
-    from clockpipe_spark.streaming.live_pipe import LivePostgresCdcPipe
+    from clockpipe_spark.streaming.live_pipe import LivePostgresRoutedPipe
 
     pg.sql("CREATE TABLE live_bytea (id int PRIMARY KEY, blob bytea)")
     pg.sql(r"INSERT INTO live_bytea VALUES (1, '\x00ff7a'::bytea)")
-    pipe = LivePostgresCdcPipe(
-        spark, pg.adapter(spark), "live_bytea", str(tmp_path),
+    pipe = LivePostgresRoutedPipe(
+        spark, pg.adapter(spark), ["live_bytea"], str(tmp_path),
         publication="live_bytea_pub", slot="live_bytea_slot",
     )
     pipe.initialize()
@@ -1011,7 +1011,7 @@ def test_live_bytea_snapshot_and_cdc_state_agree(pg, spark, tmp_path):
     pg.sql(r"INSERT INTO live_bytea VALUES (2, '\x00ff7a'::bytea)")
     pg.sql(r"UPDATE live_bytea SET blob = '\xdeadbeef'::bytea WHERE id = 1")
     pipe.sync_iteration()
-    got = {r["id"]: bytes(r["blob"]) for r in pipe.replica().collect()}
+    got = {r["id"]: bytes(r["blob"]) for r in pipe.replica("live_bytea").collect()}
     assert got == {1: b"\xde\xad\xbe\xef", 2: b"\x00\xff\x7a"}
 
 

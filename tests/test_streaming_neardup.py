@@ -85,9 +85,9 @@ def test_streaming_foreachbatch_integration(spark, tmp_path):
 
 def test_short_docs_route_through_exact_dedup(spark, dedup):
     """Docs with < 3 tokens produce no shingles hence no signature row;
-    they route through an exact-hash dedup on lower(trim(text)) against
-    the shorts log (ADVICE r3: unconditional admission re-admitted exact
-    copies of short docs forever)."""
+    they route through an exact-hash dedup on lower(trim(text)), whose
+    hash is their one band-log key (ADVICE r3: unconditional admission
+    re-admitted exact copies of short docs forever)."""
     out = dedup.process_batch(
         _df(spark, [(1, DOC_A), (2, "hi"), (3, "ok then"), (4, "")])
     )
@@ -108,10 +108,10 @@ def test_short_doc_intra_batch_keeps_lowest_id(spark, dedup):
 def test_short_doc_replay_idempotent(spark, dedup):
     batch = _df(spark, [(1, "hi"), (2, DOC_A)])
     assert dedup.process_batch(batch).count() == 2
-    n1 = dedup._history(dedup.shorts_dir, "id long, text_hash long").count()
+    n1 = dedup._bands.read().where("band_idx = -1").count()
     # same batch re-delivered: rows re-admitted, state unchanged
     assert dedup.process_batch(batch).count() == 2
-    n2 = dedup._history(dedup.shorts_dir, "id long, text_hash long").count()
+    n2 = dedup._bands.read().where("band_idx = -1").count()
     assert n1 == n2 == 1
 
 
@@ -130,11 +130,11 @@ def test_band_log_probe_prunes_buckets(spark, dedup):
     dedup.process_batch(_df(spark, [(3, DOC_C)]))
     # appends are loose until compaction; a dup arriving NOW (state
     # entirely loose) must still be caught
-    assert dedup.loose_band_files()
+    assert dedup._bands.loose_files()
     assert dedup.process_batch(_df(spark, [(8, DOC_A_NEAR)])).count() == 0
     n_compacted = dedup.compact_bands(force=True)
-    assert n_compacted > 0 and not dedup.loose_band_files()
-    all_files = dedup._band_files(None)
+    assert n_compacted > 0 and not dedup._bands.loose_files()
+    all_files = dedup._bands.paths()
     assert all_files and all("band_bucket=" in f for f in all_files)
 
     probe = _df(spark, [(9, DOC_A_NEAR)])
@@ -153,7 +153,7 @@ def test_band_log_probe_prunes_buckets(spark, dedup):
         .distinct()
         .collect()
     )
-    probe_files = dedup._band_files(buckets)
+    probe_files = dedup._bands.paths(buckets)
     allowed = {f"band_bucket={b}" for b in buckets}
     assert probe_files, "probe of a near-copy must hit its twin's buckets"
     assert all(any(a in f for a in allowed) for f in probe_files)
@@ -168,11 +168,11 @@ def test_replay_does_not_duplicate_state(spark, dedup):
     re-append state rows nor self-match previously admitted docs."""
     batch = _df(spark, [(1, DOC_A), (2, DOC_B)])
     assert dedup.process_batch(batch).count() == 2
-    n_state = dedup._history(dedup.sigs_dir, "id long, minhash array<long>").count()
+    n_state = dedup._sigs.read().count()
     # replay the identical batch: rows re-admitted (downstream dedups by
     # id), but state row count is unchanged
     assert dedup.process_batch(batch).count() == 2
-    n_state2 = dedup._history(dedup.sigs_dir, "id long, minhash array<long>").count()
+    n_state2 = dedup._sigs.read().count()
     assert n_state2 == n_state == 2
     assert sorted(r["id"] for r in dedup.admitted_ids().collect()) == [1, 2]
 
@@ -180,7 +180,7 @@ def test_replay_does_not_duplicate_state(spark, dedup):
 def test_crash_between_bands_and_sigs_heals_on_replay(spark, dedup):
     """Commit-ordering crash window (ADVICE r12 #1): the sigs append is
     the batch's commit marker and is written LAST, so the only possible
-    partial state after a crash is bands/shorts present + sigs absent.
+    partial state after a crash is bands present + sigs absent.
     A replay of that window must re-derive the full admitted set (the
     sig-history anti-join sees no marker), re-append bands (duplicates
     absorbed by the candidate join), and land the sigs — after which
@@ -196,20 +196,13 @@ def test_crash_between_bands_and_sigs_heals_on_replay(spark, dedup):
     # simulate the crash window: bands committed, sigs (the marker) not
     shutil.rmtree(dedup.sigs_dir)
     assert not os.path.isdir(dedup.sigs_dir)
-    band_rows_partial = dedup._history(
-        dedup.bands_dir, "id long, band_idx int, band_hash long"
-    ).count()
+    band_rows_partial = dedup._bands.read().count()
     assert band_rows_partial > 0
 
     # at-least-once replay of the same batch
     assert dedup.process_batch(batch).count() == 2
     # the marker is restored…
-    sig_ids = {
-        r["id"]
-        for r in dedup._history(
-            dedup.sigs_dir, "id long, minhash array<long>"
-        ).collect()
-    }
+    sig_ids = {r["id"] for r in dedup._sigs.read().collect()}
     assert sig_ids == {1, 2}
     # …and near-dup detection against the healed state works end-to-end
     assert dedup.process_batch(_df(spark, [(3, DOC_A_NEAR)])).count() == 0
@@ -285,6 +278,8 @@ def test_inflight_task_output_invisible_to_state_readers(spark, dedup, tmp_path)
     post-crash replay reads torn/duplicate band rows."""
     import os
 
+    from clockpipe_spark.streaming.neardup_state import parquet_files
+
     batch = _df(spark, [(1, DOC_A), (2, DOC_B)])
     assert dedup.process_batch(batch).count() == 2
 
@@ -298,24 +293,23 @@ def test_inflight_task_output_invisible_to_state_readers(spark, dedup, tmp_path)
     with open(os.path.join(dedup.bands_dir, ".part-crc.parquet"), "wb") as f:
         f.write(b"not parquet either")
 
-    assert all("_temporary" not in p for p in dedup._files(dedup.bands_dir))
+    assert all("_temporary" not in p for p in parquet_files(dedup.bands_dir))
     # and the probe path still works end-to-end over the polluted dir
     assert dedup.process_batch(_df(spark, [(3, DOC_A_NEAR)])).count() == 0
 
 
-def test_pruned_verify_path_matches_lazy_path(spark, tmp_path):
+def test_pruned_verify_path_matches_lazy_path(spark, tmp_path, monkeypatch):
     """The size-gated verify-join pruning (r13) must be semantics-
-    preserving: with prune_verify_bytes=0 (pruned path forced at any
-    state size) the filter admits exactly what the lazy path admits,
-    across batches, replay included."""
+    preserving: with a 0-byte gate (pruned path forced at any state
+    size) the filter admits exactly what the lazy path admits, across
+    batches, replay included."""
+    from clockpipe_spark.streaming import neardup_state
     from clockpipe_spark.streaming.neardup_state import StreamingNearDup
 
     results = {}
     for tag, gate in (("lazy", 1 << 60), ("pruned", 0)):
-        nd = StreamingNearDup(
-            spark, str(tmp_path / f"nd_{tag}"), threshold=0.5,
-            prune_verify_bytes=gate,
-        )
+        monkeypatch.setattr(neardup_state, "PRUNE_VERIFY_BYTES", gate)
+        nd = StreamingNearDup(spark, str(tmp_path / f"nd_{tag}"), threshold=0.5)
         nd.process_batch(_df(spark, [(1, DOC_A), (2, DOC_B)]))
         # compact so the pruned path actually reads sig_bucket=K dirs
         nd.compact_sigs(force=True)
@@ -328,9 +322,7 @@ def test_pruned_verify_path_matches_lazy_path(spark, tmp_path):
             "replay": nd.process_batch(
                 _df(spark, [(3, DOC_A_NEAR), (4, DOC_C)])
             ).count(),
-            "state_rows": nd._history(
-                nd.sigs_dir, "id long, minhash array<long>"
-            ).count(),
+            "state_rows": nd._sigs.read().count(),
         }
     assert results["pruned"] == results["lazy"]
     assert results["lazy"]["batch2"] == [4]
@@ -362,7 +354,7 @@ def test_resize_buckets_migrates_layout(spark, tmp_path):
     migration."""
     import os
 
-    from clockpipe_spark.streaming.neardup_state import StreamingNearDup
+    from clockpipe_spark.streaming.neardup_state import StreamingNearDup, parquet_files
 
     root = str(tmp_path / "resize")
     nd = StreamingNearDup(spark, root, n_band_buckets=64)
@@ -373,9 +365,7 @@ def test_resize_buckets_migrates_layout(spark, tmp_path):
 
     # layout migrated: new-bucket dirs exist, old counts refused,
     # new counts reopen cleanly
-    assert any(
-        "band_bucket=" in f for f in nd._files(nd.bands_dir)
-    )
+    assert any("band_bucket=" in f for f in parquet_files(nd.bands_dir))
     with pytest.raises(ValueError, match="layout mismatch"):
         StreamingNearDup(spark, root, n_band_buckets=64)
     nd2 = StreamingNearDup(
@@ -461,6 +451,26 @@ def test_pin_refuses_bucketed_store_without_layout(spark, tmp_path):
     for counts in (4096, 64):
         with pytest.raises(ValueError, match="no _layout.json"):
             StreamingNearDup(spark, root, n_band_buckets=counts)
+
+
+def test_store_with_shorts_log_is_refused(spark, tmp_path):
+    """Short docs live in the band and sig logs; a store from the layout
+    that kept them in a separate ``shorts/`` log is refused at open
+    rather than read without it (its short docs would be re-admitted)."""
+    import os
+
+    from clockpipe_spark.streaming.neardup_state import StreamingNearDup
+
+    root = str(tmp_path / "old")
+    StreamingNearDup(spark, root).process_batch(_df(spark, [(1, DOC_A)]))
+    # an empty shorts dir holds no state: still opens
+    os.makedirs(os.path.join(root, "shorts"))
+    StreamingNearDup(spark, root)
+    spark.createDataFrame([(2, 7)], "id long, text_hash long").write.mode(
+        "append"
+    ).parquet(os.path.join(root, "shorts"))
+    with pytest.raises(ValueError, match="shorts/ log"):
+        StreamingNearDup(spark, root)
 
 
 def test_state_read_paths_do_not_grow_with_compactions(spark, tmp_path, monkeypatch):
