@@ -11,7 +11,11 @@ FINAL dedups at read. Mapped here:
 - ``merge_changes`` APPENDS a keep-last-compacted delta file and
   observes the buckets it touches while writing it — cost O(batch),
   independent of state size. This is the hot path a 100 TB streaming
-  ingest lives on.
+  ingest lives on. It is ``write_delta`` (write the file, no commit)
+  then ``append_delta`` (commit a written delta dir), the one commit
+  path: ``SyncJob`` writes the deltas of all its tables in one routed
+  write (``keep_last_delta`` partitioned by table) and hands each
+  table's dir to its store's ``append_delta``.
 - every ``compact_every`` appended deltas (or on explicit ``compact()``)
   the store folds the delta log into the base, rewriting ONLY the
   buckets containing delta keys: state is split into N buckets by
@@ -95,6 +99,34 @@ def _read_grouped(spark: SparkSession, parts: list[tuple[str, dict]]) -> DataFra
     return df
 
 
+def _sql_name(c: str) -> str:
+    return "`" + c.replace("`", "``") + "`"
+
+
+def keep_last_delta(
+    changes: DataFrame,
+    keys: Sequence[str],
+    bucket: str,
+    order_col: str = "seq",
+    op_col: str = "op",
+    by: Sequence[str] = (),
+) -> DataFrame:
+    """A change batch as delta rows: the last change per ``(*by, *keys)``
+    with its data columns, ``last_seq`` (the order column), ``__deleted``
+    and ``__bucket`` (the int SQL expression ``bucket``) — the columns of
+    every delta file. A routed write keeps its ``by`` columns in the
+    data columns and partitions the write by them, so its files hold the
+    same columns. SQL strings, not Column builders: each builder call is
+    a dozen or more py4j round trips."""
+    data_cols = [c for c in changes.columns if c not in (order_col, op_col)]
+    return keep_last_by_key(changes, [*by, *keys], order_col).selectExpr(
+        *map(_sql_name, data_cols),
+        f"{_sql_name(order_col)} AS last_seq",
+        f"{_sql_name(op_col)} = 'D' AS __deleted",
+        f"{bucket} AS __bucket",
+    )
+
+
 class BucketedReplicaStore:
     def __init__(self, root: str, n_buckets: int = 16, compact_every: int = 8):
         self.root = root
@@ -159,8 +191,10 @@ class BucketedReplicaStore:
         return v
 
     # -- data access --------------------------------------------------------
-    def _bucket_expr(self, keys: Sequence[str]):
-        return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.n_buckets))
+    def _bucket_sql(self, keys: Sequence[str]) -> str:
+        """A row's bucket id as SQL: hash(PK) mod N, an int."""
+        cols = ", ".join(map(_sql_name, keys))
+        return f"CAST(pmod(xxhash64({cols}), {self.n_buckets}) AS INT)"
 
     def _read_base(
         self,
@@ -230,7 +264,7 @@ class BucketedReplicaStore:
         may still list files of every earlier one."""
         version = self.current_version() + 1
         out_dir = os.path.join(self.root, f"v_{version:06d}")
-        bucketed = df.withColumn("__bucket", self._bucket_expr(keys).cast("int"))
+        bucketed = df.withColumn("__bucket", F.expr(self._bucket_sql(keys)))
         (
             bucketed.repartition(self.n_buckets, "__bucket")
             .write.mode("overwrite")
@@ -248,6 +282,55 @@ class BucketedReplicaStore:
         schema = _file_schema(bucketed)
         return self._commit(buckets, [], keys, {out_dir: schema}, None if buckets else schema)
 
+    def delta_dir(self) -> str:
+        """Where the next delta is written: a path no committed manifest
+        lists (the version the delta's own commit will take)."""
+        return os.path.join(self.root, f"d_{self.current_version() + 1:06d}")
+
+    def write_delta(
+        self,
+        changes: DataFrame,
+        keys: Sequence[str],
+        order_col: str = "seq",
+        op_col: str = "op",
+    ) -> tuple[str, list[int], dict] | None:
+        """Write a change batch's keep-last delta to ``delta_dir()``
+        without committing it. Returns (dir, touched buckets, schema) for
+        ``append_delta``; ``None`` for an empty batch, whose dir is
+        removed (a bucketless delta entry would make every subsequent
+        merge re-enter compaction and grow the log unboundedly)."""
+        delta = keep_last_delta(changes, keys, self._bucket_sql(keys), order_col, op_col)
+        delta_dir = self.delta_dir()
+        # the touched-bucket set rides the write as an Observation, so
+        # learning it costs no job; the read side prunes whole delta
+        # files via the manifest's bucket list before row filters. One
+        # file: the delta is batch-sized.
+        observed = Observation()
+        (
+            delta.observe(observed, F.expr("collect_set(__bucket) AS buckets"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(delta_dir)
+        )
+        touched = sorted(observed.get["buckets"])
+        if not touched:
+            shutil.rmtree(delta_dir, ignore_errors=True)
+            return None
+        return delta_dir, touched, delta.schema.jsonValue()
+
+    def append_delta(
+        self, delta_dir: str, touched: list[int], schema: dict, keys: Sequence[str]
+    ) -> int:
+        """Commit a written delta dir as the last entry of the delta log.
+        The delta's schema rides its manifest entry, so reads skip footer
+        inference."""
+        bucket_map, deltas, _, schemas = self._parts()
+        deltas = deltas + [{"path": delta_dir, "buckets": touched, "schema": schema}]
+        return self._commit(bucket_map, deltas, keys, schemas)
+
+    def compact_due(self) -> bool:
+        return len(self._parts()[1]) >= self.compact_every
+
     def merge_changes(
         self,
         spark: SparkSession,
@@ -256,8 +339,9 @@ class BucketedReplicaStore:
         order_col: str = "seq",
         op_col: str = "op",
     ) -> int:
-        """Upsert+delete a change batch (K1+K2): append a keep-last delta,
-        then compact when the delta log reaches ``compact_every``.
+        """Upsert+delete a change batch (K1+K2): ``write_delta``, then
+        ``append_delta``, then compact when the delta log reaches
+        ``compact_every``.
 
         Replay is idempotent the ReplacingMergeTree(ver, is_deleted) way:
         ``last_seq`` is the version column and COMPETES at read and
@@ -269,44 +353,11 @@ class BucketedReplicaStore:
         bucket membership survives schema evolution and re-reads. The
         batch may hold several changes per key: the keep-last here is
         the batch's only dedup."""
-        changes = changes.withColumn("last_seq", F.col(order_col))
-        data_cols = [c for c in changes.columns if c not in (order_col, op_col)]
-        delta = (
-            keep_last_by_key(changes, keys, order_col)
-            .withColumn("__deleted", F.col(op_col) == "D")
-            .select(*data_cols, "__deleted")
-            .withColumn("__bucket", self._bucket_expr(keys).cast("int"))
-        )
-        bucket_map, deltas, _, schemas = self._parts()
-        version = self.current_version() + 1
-        delta_dir = os.path.join(self.root, f"d_{version:06d}")
-        # the touched-bucket set rides the write as an Observation, so
-        # learning it costs no job; the read side prunes whole delta
-        # files via the manifest's bucket list before row filters. One
-        # file: the delta is batch-sized.
-        observed = Observation()
-        (
-            delta.observe(observed, F.collect_set("__bucket").alias("buckets"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(delta_dir)
-        )
-        touched = sorted(observed.get["buckets"])
-        if not touched:
-            # empty batch: appending a bucketless delta entry would make
-            # every subsequent merge re-enter compaction (which
-            # skips empty-touched logs) and grow the log unboundedly
-            shutil.rmtree(delta_dir, ignore_errors=True)
+        written = self.write_delta(changes, keys, order_col, op_col)
+        if written is None:
             return self.current_version()
-        # the delta's schema rides its manifest entry, so reads skip
-        # footer inference
-        deltas = deltas + [
-            {"path": delta_dir, "buckets": touched, "schema": delta.schema.jsonValue()}
-        ]
-        v = self._commit(bucket_map, deltas, keys, schemas)
-        if len(deltas) >= self.compact_every:
-            return self._compact(spark, keys)
-        return v
+        v = self.append_delta(*written, keys)
+        return self._compact(spark, keys) if self.compact_due() else v
 
     def truncate(self, spark: SparkSession) -> int | None:
         """K3 — TRUNCATE propagation: commit a manifest with no buckets
@@ -340,7 +391,7 @@ class BucketedReplicaStore:
         log = self._read_deltas(spark, deltas)
         base = self._read_base(spark, bucket_map, schemas, touched)
         if base is not None:
-            base = base.withColumn("__bucket", self._bucket_expr(keys).cast("int"))
+            base = base.withColumn("__bucket", F.expr(self._bucket_sql(keys)))
             # equal-seq rows are identical redeliveries (a seq identifies
             # one change), so keep-last's arbitrary tiebreak is harmless
             log = base.unionByName(log, allowMissingColumns=True)

@@ -10,6 +10,11 @@ function applies a change batch (``SyncJob.apply_batch``), whether the
 batch comes from the cursor-range peek of ``sync_iteration`` or from a
 ``readStream`` micro-batch of ``run_stream``; one run loop
 (``run_sync_loop``) drives this job and the live Postgres pipes.
+
+A batch is one stats pass and then one keep-last write partitioned by
+``tbl`` for all its tables (one per distinct merge-key tuple), whose
+per-table output dirs each store commits as its next delta — the Spark
+jobs of an iteration do not grow with the table count.
 """
 
 from __future__ import annotations
@@ -17,11 +22,13 @@ from __future__ import annotations
 import json
 import logging
 import os
+import shutil
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,7 +36,7 @@ from clockpipe_spark.cdc.changelog import changelog_from_events
 # keep_last_by_key stays a module attribute: perfbench's tracer wraps it
 from clockpipe_spark.cdc.ops import apply_masks, keep_last_by_key  # noqa: F401
 from clockpipe_spark.config import PipeConfig
-from clockpipe_spark.streaming.bucketed_replica import BucketedReplicaStore
+from clockpipe_spark.streaming.bucketed_replica import BucketedReplicaStore, keep_last_delta
 from clockpipe_spark.streaming.replica import ReplicaStore
 
 
@@ -62,8 +69,10 @@ def run_sync_loop(
     write phase (WriteFailedError, pipes/postgres.rs:408-446),
     ``sleep_millis_when_peek_failed`` otherwise (config.rs:156-159).
     Every retried iteration logs one WARNING naming its failure class
-    and attempt number. Each productive iteration paces by
-    ``sleep_millis_after_sync_iteration`` (:513).
+    and attempt number. A ``ValueError`` or ``TypeError`` (a merge key
+    the changelog lacks, a malformed frame) is not retried: it
+    propagates on the first attempt, cursor untouched. Each productive
+    iteration paces by ``sleep_millis_after_sync_iteration`` (:513).
 
     ``daemon=True`` is the reference's long-running shape: an empty
     peek sleeps ``sleep_millis_when_peek_is_empty`` and keeps polling
@@ -77,6 +86,8 @@ def run_sync_loop(
         polls += 1
         try:
             counters = iteration()
+        except (ValueError, TypeError):
+            raise  # a config or schema fault: a replay fails the same way
         except Exception as ex:
             failures += 1
             if failures > max_retries:
@@ -104,6 +115,11 @@ def run_sync_loop(
         if sleep:
             time.sleep(config.sleep_millis_after_sync_iteration / 1000)
     return it
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _changelog(events: DataFrame) -> DataFrame:
@@ -241,17 +257,25 @@ class SyncJob:
         both ``sync_iteration`` and ``run_stream``'s foreachBatch.
         Returns the (table, op) -> n counters, the reference's
         per-iteration log line, and the batch's last seq; ``({}, None)``
-        for an empty batch.
+        for an empty batch. ``batch`` should be cached: it is read twice.
 
-        ONE stats job yields emptiness, the counters, the last seq and
+        ONE stats pass yields emptiness, the counters, the last seq and
         each table's last TRUNCATE — per-iteration fixed cost is what
         bounds small-batch throughput. A TRUNCATE wipes its table's
-        state inline and only the table's changes AFTER the batch's last
-        TRUNCATE merge (K3, pipes/postgres.rs:391-417). Any failure after
-        the stats job surfaces as WriteFailedError."""
+        state first, and only the table's changes AFTER the batch's last
+        TRUNCATE merge (K3, pipes/postgres.rs:391-417). The rest is ONE
+        routed write per merge-key tuple (``_write_routed``), not one
+        pipeline per table: the reference routes by table because a
+        ClickHouse INSERT targets one table, a Spark write partitioned by
+        ``tbl`` is one job whatever the table count. Each table's delta
+        then commits to its store, and due compactions run concurrently.
+
+        Merge keys resolve on the driver first, so a changelog without a
+        table's key column raises ``ValueError`` before anything is
+        written; any failure after that surfaces as WriteFailedError."""
         stats = (
             batch.groupBy("tbl", "op")
-            .agg(F.count("*").alias("n"), F.max("seq").alias("mx"))
+            .agg(F.expr("count(*) AS n"), F.expr("max(seq) AS mx"))
             .collect()
         )
         if not stats:
@@ -261,32 +285,70 @@ class SyncJob:
         for r in stats:
             last[r["tbl"]] = max(r["mx"], last.get(r["tbl"], r["mx"]))
         truncated = {r["tbl"]: r["mx"] for r in stats if r["op"] == "T"}
-
-        def merge_one(tbl: str) -> None:
-            part = batch.filter(F.col("tbl") == tbl)
-            if tbl in truncated:
-                self.store_for(tbl).truncate(self.spark)
-                if last[tbl] <= truncated[tbl]:
-                    return
-                # rows after the last truncate cannot themselves be truncates
-                part = part.filter(F.col("seq") > truncated[tbl])
-            keys = self.merge_keys_for(tbl, part.columns)
-            # no keep-last here: the store keeps the max seq per key of
-            # the changes, so a second dedup would only add a shuffle
-            self.store_for(tbl).merge_changes(
-                self.spark, part.select("seq", "op", *keys, "value", "ts"), keys
-            )
-
-        # per-table merges are independent Spark jobs on disjoint target
-        # dirs -> submit concurrently (cluster slots stay busy instead of
-        # serializing 4 small jobs)
-        tables = sorted(last)
+        keys = {tbl: tuple(self.merge_keys_for(tbl, batch.columns)) for tbl in sorted(last)}
+        # tables with changes after their last TRUNCATE, by merge keys
+        routes: dict[tuple[str, ...], list[str]] = {}
+        for tbl, k in keys.items():
+            if tbl not in truncated or last[tbl] > truncated[tbl]:
+                routes.setdefault(k, []).append(tbl)
         try:
-            with ThreadPoolExecutor(max_workers=min(8, len(tables))) as pool:
-                list(pool.map(merge_one, tables))
+            for tbl in sorted(truncated):
+                self.store_for(tbl).truncate(self.spark)
+            for k, tables in routes.items():
+                routed = [f"tbl IN ({', '.join(map(_sql_str, tables))})"]
+                # rows up to a table's last TRUNCATE went with it
+                routed += [
+                    f"(tbl != {_sql_str(t)} OR seq > {truncated[t]})"
+                    for t in tables
+                    if t in truncated
+                ]
+                self._write_routed(batch.filter(" AND ".join(routed)), tables, list(k))
+            due = [t for ts in routes.values() for t in ts if self.store_for(t).compact_due()]
+            if due:
+                with ThreadPoolExecutor(max_workers=min(8, len(due))) as pool:
+                    list(pool.map(lambda t: self.store_for(t).compact(self.spark, keys[t]), due))
         except Exception as ex:
             raise WriteFailedError(str(ex)) from ex
         return counters, max(last.values())
+
+    def _write_routed(self, rows: DataFrame, tables: list[str], keys: list[str]) -> None:
+        """Write the keep-last deltas of ``tables`` (one merge-key tuple)
+        as ONE ``partitionBy("tbl")`` write to a staging dir, then move
+        each ``tbl=<t>`` dir to its store's next delta dir and commit it
+        there. Each row's bucket is its own store's ``_bucket_sql``,
+        chosen by a CASE on ``tbl``; the touched (tbl, bucket) pairs ride
+        the write as an Observation. The files hold the columns
+        ``merge_changes`` writes, so the manifest entries are the same."""
+        stores = {t: self.store_for(t) for t in tables}
+        bucket = " ".join(f"WHEN {_sql_str(t)} THEN {stores[t]._bucket_sql(keys)}" for t in tables)
+        delta = keep_last_delta(
+            rows.select("tbl", "seq", "op", *keys, "value", "ts"),
+            keys,
+            f"CASE tbl {bucket} END",
+            by=("tbl",),
+        )
+        staging = os.path.join(self.target_root, "_routed")
+        observed = Observation()
+        (
+            delta.observe(observed, F.expr("collect_set(struct(tbl, __bucket)) AS touched"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .partitionBy("tbl")
+            .parquet(staging)
+        )
+        touched: dict[str, list[int]] = {t: [] for t in tables}
+        for tbl, b in observed.get["touched"]:
+            touched[tbl].append(b)
+        # partition dir names escape special characters as %XX
+        written = {unquote(d[4:]): d for d in os.listdir(staging) if d.startswith("tbl=")}
+        schema = T.StructType([f for f in delta.schema.fields if f.name != "tbl"]).jsonValue()
+        for t in tables:
+            # a delta dir left by an attempt that failed before its
+            # commit is listed by no manifest
+            dst = stores[t].delta_dir()
+            shutil.rmtree(dst, ignore_errors=True)
+            os.replace(os.path.join(staging, written[t]), dst)
+            stores[t].append_delta(dst, sorted(touched[t]), schema, keys)
 
     def sync_iteration(self) -> dict[tuple[str, str], int]:
         """peek -> apply_batch -> advance (after ALL tables committed).
@@ -301,9 +363,11 @@ class SyncJob:
         clog = self.changelog()
 
         def peek_and_apply(start: int):
-            batch = clog.filter(
-                (F.col("seq") > start) & (F.col("seq") <= start + cap)
-            ).cache()
+            # a peek holds at most `cap` rows, so ONE cached partition
+            # holds it; a one-partition batch meets every clustering
+            # requirement, so the stats aggregate and the keep-last
+            # window need no shuffle, nor the job that runs its map side
+            batch = clog.filter(f"seq > {start} AND seq <= {start + cap}").coalesce(1).cache()
             try:
                 return self.apply_batch(batch)
             finally:

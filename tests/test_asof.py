@@ -119,12 +119,13 @@ def test_asof_join_tolerance(spark):
 def test_asof_selectexpr_build_matches_column_build(spark, sf_dir):
     """r21 exprification pin: the selectExpr-built asof plan must equal
     the Column-built reference (optimizedPlan modulo expr ids)."""
+    import os
     import sys
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.plan_equiv import assert_equiv
 
     from clockpipe_spark.catalog import load_table

@@ -3,8 +3,9 @@ the corpus ingest.
 
 Replica store: a manifest commit that raises once — after its data
 files were written — is retried by the run loop without advancing the
-cursor, and every table's FINAL view ends equal to a clean run's, on a
-one-bucket and a 4-bucket store.
+cursor (or replayed from the streaming checkpoint without committing
+the micro-batch's offsets), and every table's FINAL view ends equal to
+a clean run's, on a one-bucket and a 4-bucket store.
 
 Corpus ingest: one write at each state-log or corpus boundary raises
 once (after one write at that point has landed); replaying the failed
@@ -20,6 +21,7 @@ import threading
 from datetime import datetime, timedelta
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
@@ -122,25 +124,75 @@ def _rollup_run(spark, root, buckets, monkeypatch=None, when=None):
     return {"rollup": sorted(tuple(r) for r in rollup.read(spark).collect())}
 
 
+def _stream_events(spark, part):
+    """Half of a change log as ``events`` rows (``changelog_from_events``
+    routes ``user_id % 4`` to tables t0..t3)."""
+    rng = random.Random(17 + part)
+    kinds = {"I": "signup", "U": "click", "D": "error"}
+    rows = [
+        (seq, datetime(2024, 1, 1), kinds[rng.choice("IIUUUD")], rng.randrange(12),
+         float(seq), "{}")
+        for seq in range(part * 40, part * 40 + 40)
+    ]
+    return spark.createDataFrame(
+        rows, "event_id long, ts timestamp, event_type string, user_id long, "
+        "value double, props string"
+    )
+
+
+def _stream_run(spark, root, buckets, monkeypatch=None, when=None):
+    """``run_stream`` over an events dir that gains a second file after
+    the first availableNow run; a run that fails restarts from its
+    checkpoint, which replays the micro-batch whose offsets it logged
+    but never committed."""
+    opts = TableOptions(sink_buckets=buckets)
+    tables = [f"t{i}" for i in range(4)]
+    cfg = PipeConfig(tables=[SourceTable(t, table_options=opts) for t in tables])
+    events, ckpt = os.path.join(root, "events"), os.path.join(root, "ckpt")
+    commits = os.path.join(ckpt, "commits")
+    job = SyncJob(spark, cfg, events, os.path.join(root, "target"))
+
+    def committed() -> int:
+        """Micro-batches whose offsets the checkpoint committed."""
+        if not os.path.isdir(commits):
+            return 0
+        return sum(not n.startswith(".") for n in os.listdir(commits))
+
+    fault = when and _OneFault(monkeypatch, when, committed)
+    for part in range(2):
+        _stream_events(spark, part).write.mode("append").parquet(events)
+        try:
+            job.run_stream(events, ckpt).awaitTermination()
+        except StreamingQueryException:
+            assert fault is not None and fault.fired
+            job.run_stream(events, ckpt).awaitTermination()
+    assert committed() == 2
+    assert fault is None or fault.fired, "the injection point was never reached"
+    return {t: sorted(tuple(r) for r in job.store_for(t).read(spark).collect()) for t in tables}
+
+
 def _merge_commit_in_iteration(caller, log, cursor):
     """A table's merge commit after another table's merge in the same
     iteration committed: the cursor has not moved past either."""
     return (
-        caller == "merge_changes"
+        caller == "append_delta"
         and cursor > 0
-        and any(c == "merge_changes" and at == cursor for c, at in log)
+        and any(c == "append_delta" and at == cursor for c, at in log)
     )
 
 
 POINTS = {
     "merge_changes": (_sync_run, lambda caller, log, _: (
-        caller == "merge_changes" and sum(c == "merge_changes" for c, _ in log) >= 2
+        caller == "append_delta" and sum(c == "append_delta" for c, _ in log) >= 2
     )),
     "_compact": (_sync_run, lambda caller, log, _: caller == "_compact"),
     "write_snapshot": (_rollup_run, lambda caller, log, _: (
         caller == "write_snapshot" and len(log) >= 1
     )),
     "sync_iteration": (_sync_run, _merge_commit_in_iteration),
+    # the micro-batch's commits after another table's, before Spark
+    # commits its offsets (the cursor is the committed-batch count)
+    "run_stream": (_stream_run, _merge_commit_in_iteration),
 }
 
 @pytest.fixture(scope="module")

@@ -19,11 +19,12 @@ skips empty transactions) or that are structural invariants:
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clockpipe_spark.cdc.pgoutput import encode_begin, encode_commit, encode_insert
 from clockpipe_spark.sources.jdbc_adapter import JdbcPostgresSource

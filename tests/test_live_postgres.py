@@ -22,12 +22,13 @@ binaries, no root/postgres user, read-only /tmp).
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clockpipe_spark.cdc.copy_decoder import decode_copy_field, split_copy_line
 from clockpipe_spark.cdc.pgoutput import decode_pgoutput, parse_pg_output

@@ -12,12 +12,13 @@ No Spark needed: the guard is a pure pandas-frame check.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from check_oracle import dtype_kind_mismatches
 

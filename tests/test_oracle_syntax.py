@@ -21,7 +21,7 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _SF = os.environ.get("SPARK_GRAFT_SYNTAX_SF", "/root/testdata/sf0.001")
 _TABLES = (

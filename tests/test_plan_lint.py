@@ -10,10 +10,12 @@ audit.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.join(_REPO, "tools"))
 
 from dump_plans import DEFAULT_SF_DIR, dump_plans
 from lint_plans import lint

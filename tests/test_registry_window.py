@@ -38,9 +38,10 @@ the invariant on the proposer's output.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clockpipe_spark.queries import _GATE_WINDOW, _PRIORITY, all_oracles, all_queries
 
@@ -187,7 +188,6 @@ def test_oracles_subset_of_queries():
 
 def _load_staleness_tool():
     import importlib.util
-    import os
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(

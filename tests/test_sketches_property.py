@@ -5,10 +5,11 @@ n/k boundary and heavy items diluted across many partitions."""
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st

@@ -70,19 +70,20 @@ def test_batch_pipe_matches_replica_state(spark, events_dir, tmp_path):
 
 
 def test_pipe_cursor_advances_after_write(spark, events_dir, tmp_path, monkeypatch):
-    """T2: every merge of an iteration sees the PREVIOUS cursor; the
-    cursor moves to the batch's last seq only after all merges."""
+    """T2: every table's delta commit of an iteration sees the PREVIOUS
+    cursor; the cursor moves to the batch's last seq only after all of
+    them."""
     from clockpipe_spark.streaming.replica import ReplicaStore
 
     job = _job(spark, events_dir, str(tmp_path / "t2"), PipeConfig(peek_changes_limit=100))
     seen: list[int] = []
-    real_merge = ReplicaStore.merge_changes
+    real_append = ReplicaStore.append_delta
 
-    def merge(store, *args, **kwargs):
+    def append(store, *args, **kwargs):
         seen.append(job.read_cursor())
-        return real_merge(store, *args, **kwargs)
+        return real_append(store, *args, **kwargs)
 
-    monkeypatch.setattr(ReplicaStore, "merge_changes", merge)
+    monkeypatch.setattr(ReplicaStore, "append_delta", append)
     assert job.read_cursor() == -1
     job.sync_iteration()
     c1 = job.read_cursor()

@@ -343,3 +343,105 @@ def test_within_batch_churn_without_pre_dedup(spark, tmp_path):
         }
         assert got == expected, tbl
         assert set(got) == {1, 2, 4}, tbl
+
+
+def _routed_log() -> list[tuple]:
+    """Two iterations of a four-table log (peek cap 24). The first seeds
+    six keys per table; the second churns ``flat`` and ``bkt`` (updates
+    of one key, a delete-then-reinsert, a delete at the end, redelivered
+    seqs) on the SAME user_ids, holds only a TRUNCATE for ``gone``, and
+    a TRUNCATE for ``mid`` with changes before and after it."""
+    tables = ("flat", "bkt", "gone", "mid")
+    rows = [(tables[i % 4], i + 1, "I", i // 4, float(i + 1)) for i in range(24)]
+    second = [
+        ("flat", "U", 0), ("bkt", "U", 0), ("gone", "T", None), ("mid", "U", 1),
+        ("flat", "U", 0), ("bkt", "D", 1), ("mid", "T", None), ("flat", "D", 2),
+        ("bkt", "I", 1), ("mid", "I", 9), ("flat", "I", 2), ("mid", "U", 1),
+        ("bkt", "U", 0), ("flat", "D", 5), ("bkt", "D", 5), ("mid", "D", 9),
+    ]
+    for i, (tbl, op, uid) in enumerate(second, start=25):
+        rows.append((tbl, i, op, uid, None if op == "T" else float(i)))
+    # at-least-once redelivery: the same change twice
+    rows += [r for r in rows if r[1] in (26, 35)]
+    return rows
+
+
+def test_routed_write_matches_per_table_views(spark, tmp_path):
+    """One routed write per iteration lands every table — one-bucket and
+    4-bucket, sharing user_ids, truncated whole or mid-batch — on the
+    FINAL view of its own changes after its last TRUNCATE, and records
+    the delta schema ``merge_changes`` records for the same batch."""
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from clockpipe_spark.config import TableOptions
+    from clockpipe_spark.streaming.replica import ReplicaStore
+
+    path = str(tmp_path / "changes")
+    spark.createDataFrame(
+        _routed_log(), "tbl string, seq long, op string, user_id long, value double"
+    ).withColumn("ts", F.lit(datetime(2024, 1, 1))).write.parquet(path)
+    clog = spark.read.parquet(path)
+    four = TableOptions(sink_buckets=4)
+    cfg = PipeConfig(
+        tables=[
+            SourceTable("flat"),
+            SourceTable("bkt", table_options=four),
+            SourceTable("gone", table_options=four),
+            SourceTable("mid"),
+        ],
+        peek_changes_limit=24,
+    )
+    job = SyncJob(spark, cfg, str(tmp_path), str(tmp_path / "routed"), changelog_fn=lambda s: clog)
+    assert job.sync_loop() == 2
+    assert job.read_cursor() == 40
+
+    merged = ReplicaStore(str(tmp_path / "merged"))
+    merged.merge_changes(spark, clog.select("seq", "op", "user_id", "value", "ts"), ["user_id"])
+    schema = merged.read_manifest()["__deltas__"][-1]["schema"]
+    for tbl in ("flat", "bkt", "gone", "mid"):
+        own = clog.filter(clog["tbl"] == tbl)
+        last_t = own.filter(own["op"] == "T").agg(F.max("seq")).first()[0]
+        if last_t is not None:
+            own = own.filter(own["seq"] > last_t)
+        expected = sorted(
+            (r["user_id"], r["seq"], r["value"]) for r in replica_state(own, ["user_id"]).collect()
+        )
+        store = job.store_for(tbl)
+        got = sorted((r["user_id"], r["last_seq"], r["value"]) for r in store.read(spark).collect())
+        assert got == expected, tbl
+        deltas = store.read_manifest().get("__deltas__", [])
+        assert all(d["schema"] == schema for d in deltas), tbl
+    assert job.store_for("gone").read(spark).count() == 0
+    assert len(job.store_for("bkt").read_manifest()["__deltas__"]) == 2
+
+
+def test_missing_merge_key_fails_fast(spark, tmp_path):
+    """A changelog without a table's merge-key column is a config fault a
+    replay cannot mend: the run loop raises its ValueError on the first
+    attempt, the cursor stays, and no delta dir is written."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from clockpipe_spark.config import TableOptions
+
+    clog = spark.createDataFrame(
+        [("a", 1, "I", 1, 1.0), ("b", 2, "I", 2, 2.0)],
+        "tbl string, seq long, op string, uid long, value double",
+    ).withColumn("ts", F.current_timestamp())
+    cfg = PipeConfig(
+        tables=[SourceTable("a"), SourceTable("b", table_options=TableOptions(sink_buckets=4))]
+    )
+    job = SyncJob(spark, cfg, str(tmp_path), str(tmp_path / "keyless"), changelog_fn=lambda s: clog)
+    calls = []
+    real_iteration = job.sync_iteration
+    job.sync_iteration = lambda: calls.append(1) or real_iteration()
+    with pytest.raises(ValueError, match=r"lacks merge-key columns \['user_id'\]"):
+        job.sync_loop()
+    assert len(calls) == 1
+    assert job.read_cursor() == -1
+    for tbl in ("a", "b"):
+        root = job.store_for(tbl).root
+        assert job.store_for(tbl).current_version() == -1
+        assert not [d for d in os.listdir(root) if d.startswith("d_")], tbl

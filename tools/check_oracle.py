@@ -7,6 +7,7 @@ Usage: python tools/check_oracle.py [sf_dir] [name_filter ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
@@ -14,7 +15,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clockpipe_spark.catalog import TABLES
 from clockpipe_spark.session import get_spark
