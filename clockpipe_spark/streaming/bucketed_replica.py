@@ -11,11 +11,12 @@ FINAL dedups at read. Mapped here:
 - ``merge_changes`` APPENDS a keep-last-compacted delta file and
   observes the buckets it touches while writing it — cost O(batch),
   independent of state size. This is the hot path a 100 TB streaming
-  ingest lives on. It is ``write_delta`` (write the file, no commit)
-  then ``append_delta`` (commit a written delta dir), the one commit
-  path: ``SyncJob`` writes the deltas of all its tables in one routed
-  write (``keep_last_delta`` partitioned by table) and hands each
-  table's dir to its store's ``append_delta``.
+  ingest lives on. The write (``keep_last_delta`` rows through
+  ``write_delta``) and the commit (``append_delta``, which appends a
+  delta dir already written) are separate steps with one commit path:
+  ``SyncJob`` writes the deltas of all its tables in one write
+  partitioned by table and hands each table's dir to its store's
+  ``append_delta``.
 - every ``compact_every`` appended deltas (or on explicit ``compact()``)
   the store folds the delta log into the base, rewriting ONLY the
   buckets containing delta keys: state is split into N buckets by
@@ -125,6 +126,27 @@ def keep_last_delta(
         f"{_sql_name(op_col)} = 'D' AS __deleted",
         f"{bucket} AS __bucket",
     )
+
+
+def write_delta(delta: DataFrame, out_dir: str, by: Sequence[str] = ()) -> list:
+    """Write ``keep_last_delta`` rows to ``out_dir`` (partitioned by the
+    ``by`` columns, if any) and return the distinct touched ``__bucket``
+    values, or ``(*by, __bucket)`` rows for a partitioned write. The
+    touched set rides the write as an Observation, so learning it costs
+    no job; the read side prunes whole delta files via the manifest's
+    bucket list before row filters. One file per dir: a delta is
+    batch-sized."""
+    observed = Observation()
+    touched = f"struct({', '.join([*map(_sql_name, by), '__bucket'])})" if by else "__bucket"
+    writer = (
+        delta.observe(observed, F.expr(f"collect_set({touched}) AS touched"))
+        .coalesce(1)
+        .write.mode("overwrite")
+    )
+    if by:
+        writer = writer.partitionBy(*by)
+    writer.parquet(out_dir)
+    return observed.get["touched"]
 
 
 class BucketedReplicaStore:
@@ -287,37 +309,6 @@ class BucketedReplicaStore:
         lists (the version the delta's own commit will take)."""
         return os.path.join(self.root, f"d_{self.current_version() + 1:06d}")
 
-    def write_delta(
-        self,
-        changes: DataFrame,
-        keys: Sequence[str],
-        order_col: str = "seq",
-        op_col: str = "op",
-    ) -> tuple[str, list[int], dict] | None:
-        """Write a change batch's keep-last delta to ``delta_dir()``
-        without committing it. Returns (dir, touched buckets, schema) for
-        ``append_delta``; ``None`` for an empty batch, whose dir is
-        removed (a bucketless delta entry would make every subsequent
-        merge re-enter compaction and grow the log unboundedly)."""
-        delta = keep_last_delta(changes, keys, self._bucket_sql(keys), order_col, op_col)
-        delta_dir = self.delta_dir()
-        # the touched-bucket set rides the write as an Observation, so
-        # learning it costs no job; the read side prunes whole delta
-        # files via the manifest's bucket list before row filters. One
-        # file: the delta is batch-sized.
-        observed = Observation()
-        (
-            delta.observe(observed, F.expr("collect_set(__bucket) AS buckets"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(delta_dir)
-        )
-        touched = sorted(observed.get["buckets"])
-        if not touched:
-            shutil.rmtree(delta_dir, ignore_errors=True)
-            return None
-        return delta_dir, touched, delta.schema.jsonValue()
-
     def append_delta(
         self, delta_dir: str, touched: list[int], schema: dict, keys: Sequence[str]
     ) -> int:
@@ -339,9 +330,9 @@ class BucketedReplicaStore:
         order_col: str = "seq",
         op_col: str = "op",
     ) -> int:
-        """Upsert+delete a change batch (K1+K2): ``write_delta``, then
-        ``append_delta``, then compact when the delta log reaches
-        ``compact_every``.
+        """Upsert+delete a change batch (K1+K2): write its keep-last
+        delta (``write_delta``), commit it (``append_delta``), then
+        compact when the delta log reaches ``compact_every``.
 
         Replay is idempotent the ReplacingMergeTree(ver, is_deleted) way:
         ``last_seq`` is the version column and COMPETES at read and
@@ -353,10 +344,16 @@ class BucketedReplicaStore:
         bucket membership survives schema evolution and re-reads. The
         batch may hold several changes per key: the keep-last here is
         the batch's only dedup."""
-        written = self.write_delta(changes, keys, order_col, op_col)
-        if written is None:
+        delta = keep_last_delta(changes, keys, self._bucket_sql(keys), order_col, op_col)
+        delta_dir = self.delta_dir()
+        touched = sorted(write_delta(delta, delta_dir))
+        if not touched:
+            # empty batch: appending a bucketless delta entry would make
+            # every subsequent merge re-enter compaction (which
+            # skips empty-touched logs) and grow the log unboundedly
+            shutil.rmtree(delta_dir, ignore_errors=True)
             return self.current_version()
-        v = self.append_delta(*written, keys)
+        v = self.append_delta(delta_dir, touched, delta.schema.jsonValue(), keys)
         return self._compact(spark, keys) if self.compact_due() else v
 
     def truncate(self, spark: SparkSession) -> int | None:

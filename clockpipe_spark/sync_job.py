@@ -28,7 +28,7 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -36,7 +36,11 @@ from clockpipe_spark.cdc.changelog import changelog_from_events
 # keep_last_by_key stays a module attribute: perfbench's tracer wraps it
 from clockpipe_spark.cdc.ops import apply_masks, keep_last_by_key  # noqa: F401
 from clockpipe_spark.config import PipeConfig
-from clockpipe_spark.streaming.bucketed_replica import BucketedReplicaStore, keep_last_delta
+from clockpipe_spark.streaming.bucketed_replica import (
+    BucketedReplicaStore,
+    keep_last_delta,
+    write_delta,
+)
 from clockpipe_spark.streaming.replica import ReplicaStore
 
 
@@ -117,6 +121,16 @@ def run_sync_loop(
     return it
 
 
+STAGING_DIR = "_routed"
+
+
+def _check_table_name(table: str) -> None:
+    """Refuse a table whose store root would be the job's own staging
+    dir or cursor file under the target root."""
+    if table in (STAGING_DIR, "cursor.json", "cursor.json.tmp"):
+        raise ValueError(f"table name {table!r} is reserved under the target root")
+
+
 def _sql_str(s: str) -> str:
     """``s`` as a SQL string literal."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -152,10 +166,13 @@ class SyncJob:
         self._changelog_fn = changelog_fn
         self._events_schema: T.StructType | None = None
         self.cursor_file = os.path.join(target_root, "cursor.json")
+        # the routed write's staging dir, beside the per-table stores
+        self.staging_dir = os.path.join(target_root, STAGING_DIR)
         os.makedirs(target_root, exist_ok=True)
         self.stores: dict[str, BucketedReplicaStore] = {}
 
     def store_for(self, table: str) -> BucketedReplicaStore:
+        _check_table_name(table)
         if table not in self.stores:
             path = os.path.join(self.target_root, table)
             # per-table options inherit from global (config.rs:259-268)
@@ -270,7 +287,8 @@ class SyncJob:
         ``tbl`` is one job whatever the table count. Each table's delta
         then commits to its store, and due compactions run concurrently.
 
-        Merge keys resolve on the driver first, so a changelog without a
+        Table names and merge keys are checked on the driver first, so a
+        table named like the job's own files or a changelog without a
         table's key column raises ``ValueError`` before anything is
         written; any failure after that surfaces as WriteFailedError."""
         stats = (
@@ -285,6 +303,10 @@ class SyncJob:
         for r in stats:
             last[r["tbl"]] = max(r["mx"], last.get(r["tbl"], r["mx"]))
         truncated = {r["tbl"]: r["mx"] for r in stats if r["op"] == "T"}
+        # checked before the wrap: a reserved table name or a missing
+        # key column is a fault no replay mends
+        for tbl in last:
+            _check_table_name(tbl)
         keys = {tbl: tuple(self.merge_keys_for(tbl, batch.columns)) for tbl in sorted(last)}
         # tables with changes after their last TRUNCATE, by merge keys
         routes: dict[tuple[str, ...], list[str]] = {}
@@ -292,8 +314,9 @@ class SyncJob:
             if tbl not in truncated or last[tbl] > truncated[tbl]:
                 routes.setdefault(k, []).append(tbl)
         try:
+            stores = {tbl: self.store_for(tbl) for tbl in keys}
             for tbl in sorted(truncated):
-                self.store_for(tbl).truncate(self.spark)
+                stores[tbl].truncate(self.spark)
             for k, tables in routes.items():
                 routed = [f"tbl IN ({', '.join(map(_sql_str, tables))})"]
                 # rows up to a table's last TRUNCATE went with it
@@ -302,53 +325,48 @@ class SyncJob:
                     for t in tables
                     if t in truncated
                 ]
-                self._write_routed(batch.filter(" AND ".join(routed)), tables, list(k))
-            due = [t for ts in routes.values() for t in ts if self.store_for(t).compact_due()]
+                rows = batch.filter(" AND ".join(routed))
+                self._write_routed(rows, {t: stores[t] for t in tables}, list(k))
+            due = [t for ts in routes.values() for t in ts if stores[t].compact_due()]
             if due:
                 with ThreadPoolExecutor(max_workers=min(8, len(due))) as pool:
-                    list(pool.map(lambda t: self.store_for(t).compact(self.spark, keys[t]), due))
+                    list(pool.map(lambda t: stores[t].compact(self.spark, keys[t]), due))
         except Exception as ex:
             raise WriteFailedError(str(ex)) from ex
         return counters, max(last.values())
 
-    def _write_routed(self, rows: DataFrame, tables: list[str], keys: list[str]) -> None:
-        """Write the keep-last deltas of ``tables`` (one merge-key tuple)
-        as ONE ``partitionBy("tbl")`` write to a staging dir, then move
-        each ``tbl=<t>`` dir to its store's next delta dir and commit it
-        there. Each row's bucket is its own store's ``_bucket_sql``,
-        chosen by a CASE on ``tbl``; the touched (tbl, bucket) pairs ride
-        the write as an Observation. The files hold the columns
-        ``merge_changes`` writes, so the manifest entries are the same."""
-        stores = {t: self.store_for(t) for t in tables}
-        bucket = " ".join(f"WHEN {_sql_str(t)} THEN {stores[t]._bucket_sql(keys)}" for t in tables)
+    def _write_routed(
+        self, rows: DataFrame, stores: dict[str, BucketedReplicaStore], keys: list[str]
+    ) -> None:
+        """Write the keep-last deltas of the tables of ``stores`` (one
+        merge-key tuple) as ONE ``partitionBy("tbl")`` write to the
+        staging dir, then move each ``tbl=<t>`` dir to its store's next
+        delta dir and commit it there. Each row's bucket is its own
+        store's ``_bucket_sql``, chosen by a CASE on ``tbl``. The files
+        hold the columns ``merge_changes`` writes, so the manifest
+        entries are the same."""
+        bucket = " ".join(f"WHEN {_sql_str(t)} THEN {s._bucket_sql(keys)}" for t, s in stores.items())
         delta = keep_last_delta(
             rows.select("tbl", "seq", "op", *keys, "value", "ts"),
             keys,
             f"CASE tbl {bucket} END",
             by=("tbl",),
         )
-        staging = os.path.join(self.target_root, "_routed")
-        observed = Observation()
-        (
-            delta.observe(observed, F.expr("collect_set(struct(tbl, __bucket)) AS touched"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("tbl")
-            .parquet(staging)
-        )
-        touched: dict[str, list[int]] = {t: [] for t in tables}
-        for tbl, b in observed.get["touched"]:
+        touched: dict[str, list[int]] = {t: [] for t in stores}
+        for tbl, b in write_delta(delta, self.staging_dir, by=("tbl",)):
             touched[tbl].append(b)
         # partition dir names escape special characters as %XX
-        written = {unquote(d[4:]): d for d in os.listdir(staging) if d.startswith("tbl=")}
+        written = {
+            unquote(d[4:]): d for d in os.listdir(self.staging_dir) if d.startswith("tbl=")
+        }
         schema = T.StructType([f for f in delta.schema.fields if f.name != "tbl"]).jsonValue()
-        for t in tables:
+        for t, store in stores.items():
             # a delta dir left by an attempt that failed before its
             # commit is listed by no manifest
-            dst = stores[t].delta_dir()
+            dst = store.delta_dir()
             shutil.rmtree(dst, ignore_errors=True)
-            os.replace(os.path.join(staging, written[t]), dst)
-            stores[t].append_delta(dst, sorted(touched[t]), schema, keys)
+            os.replace(os.path.join(self.staging_dir, written[t]), dst)
+            store.append_delta(dst, sorted(touched[t]), schema, keys)
 
     def sync_iteration(self) -> dict[tuple[str, str], int]:
         """peek -> apply_batch -> advance (after ALL tables committed).
@@ -363,10 +381,13 @@ class SyncJob:
         clog = self.changelog()
 
         def peek_and_apply(start: int):
-            # a peek holds at most `cap` rows, so ONE cached partition
-            # holds it; a one-partition batch meets every clustering
-            # requirement, so the stats aggregate and the keep-last
-            # window need no shuffle, nor the job that runs its map side
+            # ONE cached partition: a one-partition batch meets every
+            # clustering requirement, so the stats aggregate and the
+            # keep-last window need no shuffle, nor the job that runs
+            # its map side, and the iteration runs one task at a time.
+            # On 4 local cores that led the uncoalesced batch in median
+            # throughput at caps 65,536 and 262,144 as well; whether a
+            # cluster wants the peek split by the cap is unmeasured
             batch = clog.filter(f"seq > {start} AND seq <= {start + cap}").coalesce(1).cache()
             try:
                 return self.apply_batch(batch)

@@ -346,13 +346,17 @@ def test_within_batch_churn_without_pre_dedup(spark, tmp_path):
 
 
 def _routed_log() -> list[tuple]:
-    """Two iterations of a four-table log (peek cap 24). The first seeds
-    six keys per table; the second churns ``flat`` and ``bkt`` (updates
+    """Three iterations of a five-table log (peek cap 24) as ``(tbl,
+    seq, op, user_id, event_id, value)``. The first seeds six keys per
+    ``user_id`` table; the second churns ``flat`` and ``bkt`` (updates
     of one key, a delete-then-reinsert, a delete at the end, redelivered
     seqs) on the SAME user_ids, holds only a TRUNCATE for ``gone``, and
-    a TRUNCATE for ``mid`` with changes before and after it."""
+    a TRUNCATE for ``mid`` with changes before and after it. The third
+    routes two merge-key tuples in one batch: ``events`` (registered PK
+    ``event_id``) churns around a mid-batch TRUNCATE between ``flat`` and
+    ``bkt`` changes (seqs 41-47 are a gap in the log)."""
     tables = ("flat", "bkt", "gone", "mid")
-    rows = [(tables[i % 4], i + 1, "I", i // 4, float(i + 1)) for i in range(24)]
+    rows = [(tables[i % 4], i + 1, "I", i // 4, None, float(i + 1)) for i in range(24)]
     second = [
         ("flat", "U", 0), ("bkt", "U", 0), ("gone", "T", None), ("mid", "U", 1),
         ("flat", "U", 0), ("bkt", "D", 1), ("mid", "T", None), ("flat", "D", 2),
@@ -360,17 +364,27 @@ def _routed_log() -> list[tuple]:
         ("bkt", "U", 0), ("flat", "D", 5), ("bkt", "D", 5), ("mid", "D", 9),
     ]
     for i, (tbl, op, uid) in enumerate(second, start=25):
-        rows.append((tbl, i, op, uid, None if op == "T" else float(i)))
+        rows.append((tbl, i, op, uid, None, None if op == "T" else float(i)))
+    third = [
+        ("events", "I", 1), ("flat", "U", 3), ("events", "I", 2), ("bkt", "U", 4),
+        ("events", "U", 1), ("events", "T", None), ("flat", "D", 3), ("events", "I", 2),
+        ("events", "U", 3), ("bkt", "I", 7), ("events", "D", 2), ("events", "I", 4),
+    ]
+    for i, (tbl, op, key) in enumerate(third, start=48):
+        uid, eid = (None, key) if tbl == "events" else (key, None)
+        rows.append((tbl, i, op, uid, eid, None if op == "T" else float(i)))
     # at-least-once redelivery: the same change twice
-    rows += [r for r in rows if r[1] in (26, 35)]
+    rows += [r for r in rows if r[1] in (26, 35, 55)]
     return rows
 
 
 def test_routed_write_matches_per_table_views(spark, tmp_path):
-    """One routed write per iteration lands every table — one-bucket and
-    4-bucket, sharing user_ids, truncated whole or mid-batch — on the
-    FINAL view of its own changes after its last TRUNCATE, and records
-    the delta schema ``merge_changes`` records for the same batch."""
+    """One routed write per merge-key tuple and iteration lands every
+    table — one-bucket and 4-bucket, sharing user_ids, keyed by
+    ``user_id`` or by ``event_id`` in the same batch, truncated whole or
+    mid-batch — on the FINAL view of its own changes after its last
+    TRUNCATE, and records the delta schema ``merge_changes`` records for
+    the same batch."""
     from datetime import datetime
 
     from pyspark.sql import functions as F
@@ -380,7 +394,8 @@ def test_routed_write_matches_per_table_views(spark, tmp_path):
 
     path = str(tmp_path / "changes")
     spark.createDataFrame(
-        _routed_log(), "tbl string, seq long, op string, user_id long, value double"
+        _routed_log(),
+        "tbl string, seq long, op string, user_id long, event_id long, value double",
     ).withColumn("ts", F.lit(datetime(2024, 1, 1))).write.parquet(path)
     clog = spark.read.parquet(path)
     four = TableOptions(sink_buckets=4)
@@ -390,31 +405,54 @@ def test_routed_write_matches_per_table_views(spark, tmp_path):
             SourceTable("bkt", table_options=four),
             SourceTable("gone", table_options=four),
             SourceTable("mid"),
+            SourceTable("events", table_options=four),
         ],
         peek_changes_limit=24,
     )
     job = SyncJob(spark, cfg, str(tmp_path), str(tmp_path / "routed"), changelog_fn=lambda s: clog)
-    assert job.sync_loop() == 2
-    assert job.read_cursor() == 40
+    assert job.sync_loop() == 3
+    assert job.read_cursor() == 59
 
-    merged = ReplicaStore(str(tmp_path / "merged"))
-    merged.merge_changes(spark, clog.select("seq", "op", "user_id", "value", "ts"), ["user_id"])
-    schema = merged.read_manifest()["__deltas__"][-1]["schema"]
-    for tbl in ("flat", "bkt", "gone", "mid"):
+    for tbl in ("flat", "bkt", "gone", "mid", "events"):
+        key = "event_id" if tbl == "events" else "user_id"
+        merged = ReplicaStore(str(tmp_path / f"merged_{key}_{tbl}"))
+        merged.merge_changes(spark, clog.select("seq", "op", key, "value", "ts"), [key])
+        schema = merged.read_manifest()["__deltas__"][-1]["schema"]
         own = clog.filter(clog["tbl"] == tbl)
         last_t = own.filter(own["op"] == "T").agg(F.max("seq")).first()[0]
         if last_t is not None:
             own = own.filter(own["seq"] > last_t)
-        expected = sorted(
-            (r["user_id"], r["seq"], r["value"]) for r in replica_state(own, ["user_id"]).collect()
-        )
+        expected = sorted((r[key], r["seq"], r["value"]) for r in replica_state(own, [key]).collect())
         store = job.store_for(tbl)
-        got = sorted((r["user_id"], r["last_seq"], r["value"]) for r in store.read(spark).collect())
+        got = sorted((r[key], r["last_seq"], r["value"]) for r in store.read(spark).collect())
         assert got == expected, tbl
         deltas = store.read_manifest().get("__deltas__", [])
         assert all(d["schema"] == schema for d in deltas), tbl
     assert job.store_for("gone").read(spark).count() == 0
-    assert len(job.store_for("bkt").read_manifest()["__deltas__"]) == 2
+    assert len(job.store_for("bkt").read_manifest()["__deltas__"]) == 3
+    assert len(job.store_for("events").read_manifest()["__deltas__"]) == 1
+
+
+def test_reserved_table_name_fails_fast(spark, tmp_path):
+    """A table named like the routed write's staging dir would have its
+    store overwritten by every routed write: it is refused with a
+    ValueError before any write, and the cursor stays."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from clockpipe_spark.sync_job import STAGING_DIR
+
+    clog = spark.createDataFrame(
+        [("a", 1, "I", 1, 1.0), (STAGING_DIR, 2, "I", 2, 2.0)],
+        "tbl string, seq long, op string, user_id long, value double",
+    ).withColumn("ts", F.current_timestamp())
+    cfg = PipeConfig(tables=[SourceTable("a"), SourceTable(STAGING_DIR)])
+    job = SyncJob(spark, cfg, str(tmp_path), str(tmp_path / "target"), changelog_fn=lambda s: clog)
+    with pytest.raises(ValueError, match="reserved"):
+        job.sync_loop()
+    assert job.read_cursor() == -1
+    assert job.store_for("a").current_version() == -1
+    assert not os.path.exists(job.staging_dir)
 
 
 def test_missing_merge_key_fails_fast(spark, tmp_path):
