@@ -60,22 +60,28 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # re-written. The weak keying alone cannot collect a stopped session's
 # entry (ADVICE r20: the cached DataFrames strongly reference their
 # session, pinning the weak key), so _purge_stopped drops dead-session
-# entries explicitly whenever a new session first appears.
+# entries explicitly on every memo miss.
 _TABLE_PLANS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
 
+def _stopped(session: SparkSession) -> bool:
+    """Whether ``session`` is stopped. A classic session's SparkContext
+    sets ``_jsc`` to None in ``stop()``; a Spark Connect session raises
+    an AttributeError for ``sparkContext`` and reports ``is_stopped``. A
+    session neither probe can read counts as live, so its entry stays
+    and the purge goes on with the others."""
+    try:
+        return session.sparkContext._jsc is None
+    except AttributeError:
+        return getattr(session, "is_stopped", False) is True
+
+
 def _purge_stopped() -> None:
     """Drop memo entries whose session has been stopped: their cached
-    DataFrames pin the session object, so weak keys never fire for them
-    (a stopped SparkContext has _jsc = None — pyspark sets it in stop())."""
-    dead = [
-        s
-        for s in list(_TABLE_PLANS)
-        if getattr(s.sparkContext, "_jsc", None) is None
-    ]
-    for s in dead:
+    DataFrames pin the session object, so weak keys never fire for them."""
+    for s in [s for s in list(_TABLE_PLANS) if _stopped(s)]:
         _TABLE_PLANS.pop(s, None)
 
 
@@ -111,15 +117,12 @@ def load_table(
     # relative to the (naive) values every other engine reads
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    per_session = _TABLE_PLANS.get(spark)
-    if per_session is None:
-        _purge_stopped()
-        per_session = {}
-        _TABLE_PLANS[spark] = per_session
     key = (os.path.abspath(sf_dir), name)
-    cached = None if refresh else per_session.get(key)
+    cached = None if refresh else _TABLE_PLANS.get(spark, {}).get(key)
     if cached is not None:
         return cached
+    _purge_stopped()
+    per_session = _TABLE_PLANS.setdefault(spark, {})
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     for field in df.schema.fields:
         if field.name == "ts" and isinstance(field.dataType, T.LongType):

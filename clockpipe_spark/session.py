@@ -13,6 +13,17 @@ locally:
 - shuffle partitions default to the local core count; on a real cluster
   AQE's coalescing makes the initial number mostly irrelevant as long as
   it is high enough.
+- Python workers import pyspark from site-packages: the session runs
+  them under ``clockpipe_worker_daemon`` (repo root), which drops
+  Spark's pyspark/py4j/spark-core archives from the worker's
+  ``sys.path`` when site-packages holds the same pyspark, so PySpark's
+  per-task ``importlib.invalidate_caches()`` re-reads no archive
+  (about 0.2 s per Python task on CPython 3.11). The module is
+  top-level on purpose: inside ``clockpipe_spark`` its package
+  ``__init__`` would import this module, and with it pyspark from the
+  zip, before the path is cleaned. An unimportable daemon module fails
+  every Python task, so the session puts the repo root on the workers'
+  ``PYTHONPATH`` and sets neither conf when the module file is missing.
 """
 
 from __future__ import annotations
@@ -22,6 +33,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+WORKER_DAEMON = "clockpipe_worker_daemon"
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -73,6 +87,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if os.path.isfile(os.path.join(_ROOT, f"{WORKER_DAEMON}.py")):
+        builder = builder.config("spark.python.daemon.module", WORKER_DAEMON).config(
+            "spark.executorEnv.PYTHONPATH", _ROOT
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

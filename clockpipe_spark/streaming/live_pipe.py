@@ -258,6 +258,17 @@ class LivePostgresRoutedPipe:
                 for t in self.tables
             }
             routed = {t: rs for t, rs in routed.items() if rs}
+            for t, t_stats in routed.items():
+                # K5 live: wider frames => the table grew a column
+                widest = max(r["w"] for r in t_stats)
+                if widest and widest > len(self.columns[t]):
+                    self.columns[t] = self.source.list_columns(t)
+                # resolved before the write wrap: a missing key column
+                # is a config fault a retry cannot mend
+                names = {c.column_name for c in self.columns[t]}
+                missing = [k for k in self.keys[t] if k not in names]
+                if missing:
+                    raise ValueError(f"table {t!r} lacks merge-key columns {missing}")
             try:
                 for t, t_stats in routed.items():
                     self._merge_routed(t, t_stats, decoded)
@@ -277,11 +288,8 @@ class LivePostgresRoutedPipe:
 
     def _merge_routed(self, t: str, t_stats: list, decoded: DataFrame) -> None:
         """Apply one table's share of a decoded batch: truncate, then the
-        typed keep-last merge (the write phase of ``sync_iteration``)."""
-        # K5 live: wider frames => the table grew a column
-        widest = max(r["w"] for r in t_stats)
-        if widest and widest > len(self.columns[t]):
-            self.columns[t] = self.source.list_columns(t)
+        typed keep-last merge (the write phase of ``sync_iteration``).
+        ``self.columns[t]`` holds every key column of ``self.keys[t]``."""
         mine = decoded.filter(F.col("relation_id") == self.oids[t])
         w_maxes = [r["mx"] for r in t_stats if r["msg_type"] in "IUD"]
         t_max = max((r["mx"] for r in t_stats if r["msg_type"] == "T"), default=None)

@@ -51,6 +51,33 @@ def test_keep_last_composite_key(spark):
     assert vals == {(1, "a"): 2.0, (1, "b"): 5.0}
 
 
+def test_keep_last_sql_window_plan_matches_column_window(spark):
+    """The SQL-string window builds the Column-built window's plan, and
+    key names that are not identifiers (a space, a backtick) resolve."""
+    import os
+    import sys
+
+    from pyspark.sql import Window
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools.plan_equiv import assert_equiv
+
+    df = spark.createDataFrame(
+        [(1, 1, "a", 1.0), (2, 1, "a", 2.0), (3, 1, "b", 5.0), (4, 2, "a", None)],
+        "`last seq` long, `my key` long, `k``2` string, value double",
+    )
+    keys = ["my key", "k`2"]
+    w = Window.partitionBy(*[F.col(f"`{k.replace('`', '``')}`") for k in keys]).orderBy(
+        F.col("`last seq`").desc()
+    )
+    by_columns = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
+    got = keep_last_by_key(df, keys, "last seq")
+    assert_equiv(by_columns.drop("__rn"), got)
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (2, 1, "a", 2.0), (3, 1, "b", 5.0), (4, 2, "a", None)
+    ]
+
+
 def test_replica_state_delete_wins(spark):
     # final op D -> key invisible; delete-then-reinsert resolved by seq
     # (corrected T4 semantics, SURVEY.md §2.7)

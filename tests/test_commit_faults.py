@@ -5,7 +5,9 @@ Replica store: a manifest commit that raises once — after its data
 files were written — is retried by the run loop without advancing the
 cursor (or replayed from the streaming checkpoint without committing
 the micro-batch's offsets), and every table's FINAL view ends equal to
-a clean run's, on a one-bucket and a 4-bucket store.
+a clean run's, on a one-bucket and a 4-bucket store. The live Postgres
+pipe's slot advance raising once, after every table's merge of the
+iteration committed, replays the same way.
 
 Corpus ingest: one write at each state-log or corpus boundary raises
 once (after one write at that point has landed); replaying the failed
@@ -25,9 +27,20 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
+from test_live_pipe_unit import SeamDB
+
+from clockpipe_spark.cdc.pgoutput import (
+    encode_begin,
+    encode_commit,
+    encode_delete,
+    encode_insert,
+    encode_update,
+)
 from clockpipe_spark.config import PipeConfig, SourceTable, TableOptions
+from clockpipe_spark.sources.jdbc_adapter import JdbcPostgresSource, lsn_from_text
 from clockpipe_spark.streaming.bucketed_replica import BucketedReplicaStore
 from clockpipe_spark.streaming.corpus_ingest import CorpusIngestPipeline
+from clockpipe_spark.streaming.live_pipe import LivePostgresRoutedPipe
 from clockpipe_spark.streaming.neardup_state import StreamingNearDup
 from clockpipe_spark.streaming.rollup import ContinuousRollup
 from clockpipe_spark.sync_job import SyncJob, run_sync_loop
@@ -59,29 +72,30 @@ def _events(spark):
 
 
 class _OneFault:
-    """Makes ``BucketedReplicaStore._commit`` raise once, on the first
-    commit ``when(caller, log)`` selects. ``log`` lists the successful
-    commits so far as (calling method, cursor at commit)."""
+    """Makes ``owner.method`` (default ``BucketedReplicaStore._commit``)
+    raise once, on the first call ``when(caller, log, cursor)`` selects.
+    ``log`` lists the successful calls so far as (calling method, cursor
+    at the call)."""
 
-    def __init__(self, monkeypatch, when, cursor):
+    def __init__(self, monkeypatch, when, cursor, owner=BucketedReplicaStore, method="_commit"):
         self.when = when
         self.cursor = cursor
         self.log: list[tuple[str, object]] = []
         self.fired = False
         self._lock = threading.Lock()  # merges commit from pool threads
-        real = BucketedReplicaStore._commit
+        real = getattr(owner, method)
 
-        def commit(store, *args):
+        def call(obj, *args):
             caller = sys._getframe(1).f_code.co_name
             with self._lock:
                 if not self.fired and self.when(caller, self.log, self.cursor()):
                     self.fired = True
-                    raise OSError(f"injected commit failure in {caller}")
-                out = real(store, *args)
+                    raise OSError(f"injected {method} failure in {caller}")
+                out = real(obj, *args)
                 self.log.append((caller, self.cursor()))
                 return out
 
-        monkeypatch.setattr(BucketedReplicaStore, "_commit", commit)
+        monkeypatch.setattr(owner, method, call)
 
 
 def _sync_run(spark, root, buckets, monkeypatch=None, when=None):
@@ -171,6 +185,72 @@ def _stream_run(spark, root, buckets, monkeypatch=None, when=None):
     return {t: sorted(tuple(r) for r in job.store_for(t).read(spark).collect()) for t in tables}
 
 
+class _SlotDB(SeamDB):
+    """The seam with a replication slot: each peek serves the first
+    transaction whose commit lies past the slot's last advance, as a
+    capped peek does, so an iteration that never advanced re-peeks it."""
+
+    def __init__(self, spark, txns, tables):
+        super().__init__(spark, [], tables)
+        self.txns = txns
+        self.at = 0
+
+    def reader(self, options):
+        if "peek_binary_changes" in options.get("query", ""):
+            pending = [t for t in self.txns if lsn_from_text(t[-1][0]) > self.at]
+            self.frame_batches = pending[:1]
+        return super().reader(options)
+
+    def sql_runner(self, sql):
+        super().sql_runner(sql)
+        if "pg_replication_slot_advance" in sql:
+            self.at = lsn_from_text(sql.split("'")[3])
+
+
+def _live_txns() -> list[list[tuple[str, str, str]]]:
+    """Eight transactions of inserts, updates and deletes over tables
+    t1 (oid 500) and t2 (oid 600), each touching both."""
+    rng = random.Random(5)
+    txns, lsn = [], 16
+    for xid in range(8):
+        frames = [encode_begin()]
+        for relid in (500, 600, *rng.choices((500, 600), k=4)):
+            cells = [("t", str(rng.randrange(6)), None), ("t", f"v{lsn}", None)]
+            op = rng.choice("IUD")
+            frames.append(
+                encode_insert(relid, cells) if op == "I"
+                else encode_update(relid, cells) if op == "U"
+                else encode_delete(relid, cells[:1])
+            )
+        frames.append(encode_commit())
+        txn = []
+        for f in frames:
+            txn.append((f"0/{lsn:x}", str(xid), f.hex()))
+            lsn += 16
+        txns.append(txn)
+    return txns
+
+
+def _live_run(spark, root, buckets, monkeypatch=None, when=None):
+    db = _SlotDB(spark, _live_txns(), {"t1": (500, [(1, "a")]), "t2": (600, [(2, "b")])})
+    src = JdbcPostgresSource(
+        spark, "jdbc:postgresql://unused/db", reader=db.reader, sql_runner=db.sql_runner
+    )
+    pipe = LivePostgresRoutedPipe(spark, src, list(db.tables), root, "pub", "slot")
+    for t, store in pipe.stores.items():
+        if buckets:
+            pipe.stores[t] = store = BucketedReplicaStore(store.root, n_buckets=buckets)
+        store.compact_every = COMPACT_EVERY
+    pipe.initialize()
+    pipe.first_sync()
+    fault = when and _OneFault(
+        monkeypatch, when, lambda: db.at, JdbcPostgresSource, "advance_slot"
+    )
+    assert pipe.sync_loop() == 8
+    assert fault is None or fault.fired, "the injection point was never reached"
+    return {t: sorted(tuple(r) for r in pipe.replica(t).collect()) for t in pipe.tables}
+
+
 def _merge_commit_in_iteration(caller, log, cursor):
     """A table's merge commit after another table's merge in the same
     iteration committed: the cursor has not moved past either."""
@@ -193,6 +273,10 @@ POINTS = {
     # the micro-batch's commits after another table's, before Spark
     # commits its offsets (the cursor is the committed-batch count)
     "run_stream": (_stream_run, _merge_commit_in_iteration),
+    # after _merge_routed committed every table, before advance_slot
+    "live_advance_slot": (_live_run, lambda caller, log, _: (
+        caller == "sync_iteration" and len(log) >= 2
+    )),
 }
 
 @pytest.fixture(scope="module")

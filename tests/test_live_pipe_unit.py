@@ -430,3 +430,29 @@ def test_first_sync_stamps_snapshot_rows_with_version_zero(spark, tmp_path):
         "snapshot rows must carry version 0 so every replayed change "
         "(record LSN > 0) wins the keep-last merge"
     )
+
+
+def test_missing_key_column_raises_before_any_write(spark, tmp_path):
+    """A merge key the table's columns lack is a config fault: the
+    iteration raises ValueError on its first attempt, before any write
+    and without advancing the slot (a retry would fail the same way)."""
+    write_batch = [
+        ("0/10", "7", _hex(encode_begin())),
+        ("0/20", "7", _hex(encode_insert(500, [("t", "2", None), ("t", "b", None)]))),
+        ("0/30", "7", _hex(encode_commit())),
+    ]
+    db = SeamDB(spark, [write_batch, write_batch])
+    src = JdbcPostgresSource(
+        spark, "jdbc:postgresql://unused/db", reader=db.reader, sql_runner=db.sql_runner
+    )
+    pipe = LivePostgresRoutedPipe(
+        spark, src, ["t1"], str(tmp_path), publication="pub", slot="slot",
+        key_overrides={"t1": ["nope"]},
+    )
+    pipe.initialize()
+    merges = []
+    pipe.stores["t1"].merge_changes = lambda *a, **k: merges.append(a)
+    with pytest.raises(ValueError, match=r"lacks merge-key columns \['nope'\]"):
+        pipe.sync_loop()
+    assert merges == [] and len(db.frame_batches) == 1  # one attempt
+    assert not any("pg_replication_slot_advance" in d for d in db.ddl)
